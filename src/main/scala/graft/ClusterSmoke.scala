@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Real-executor smoke: everything else in this repo measures under
-  * local[32] — one JVM, no serialization boundary, no executor loss.
+  * local[n] — one JVM, no serialization boundary, no executor loss.
   * This main runs the heavy ladder operators on `local-cluster[2,8,4096]`
   * (Spark's pseudo-cluster: real Worker-launched executor JVMs, real
   * RPC/serialization between driver and executors, real block
@@ -31,7 +31,9 @@ import org.apache.spark.sql.SparkSession
   * migrate to the survivor instead of dying with the executor).
   *
   * Run: `sbt "runMain graft.ClusterSmoke sf1=target/scaledata/sf1"`.
-  * Env: SPARK_GRAFT_MASTER (default local-cluster[2,8,4096]),
+  * Env: SPARK_GRAFT_MASTER (default local-cluster[2,8,4096]; used when
+  * neither spark-submit nor SPARK_GRAFT_EXTRA_CONF names a master; the
+  * shuffle gets one partition per executor core, 16 by default),
   * SPARK_GRAFT_CLUSTER_QUERIES (comma list), SPARK_GRAFT_CLUSTER_OUT
   * (default CLUSTER_RAW.jsonl). Output: one JSON line per query
   * (`{"mode":…,"query":…,"sec":…,"rows":…}`) and per recovery leg
@@ -42,7 +44,7 @@ object ClusterSmoke {
   /** The heavy ladder set, minus nothing: real-executor execution is
     * the point, not fresh timings — wall clocks here include executor
     * launch and cross-process shuffle and are NOT comparable to the
-    * local[32] ladder. */
+    * local[n] ladder. */
   val DefaultQueries: Seq[String] = Seq(
     "qd_tfidf_pairs", "qd_manifest", "qd_pagerank", "qd_prefix_join",
     "qd_minhash_pairs", "qd_kcore", "qd_kcore_auto", "qd_simhash_pairs",
@@ -78,68 +80,47 @@ object ClusterSmoke {
   }
 
   def main(args: Array[String]): Unit = {
-    require(args.nonEmpty, "usage: ClusterSmoke <label>=<dir>")
-    val Array(label, dir) = args(0).split("=", 2)
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER",
-      "local-cluster[2,8,4096]")
+    val (label, dir) = Ladder.rungs(args.take(1).toSeq, "ClusterSmoke").head
     val names = sys.env.get("SPARK_GRAFT_CLUSTER_QUERIES")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse(DefaultQueries)
     val outPath = sys.env.getOrElse("SPARK_GRAFT_CLUSTER_OUT",
       "CLUSTER_RAW.jsonl")
-    val classesDir =
-      new java.io.File("target/scala-2.13/classes").getAbsolutePath
+    val master = GraftSession.master(
+      sys.env.getOrElse("SPARK_GRAFT_MASTER", "local-cluster[2,8,4096]"))
 
     // Surface the executor heap from the local-cluster spec as
     // spark.executor.memory: the MemGate broadcast defaults read it —
     // without this the driver-side gate would size broadcasts against
     // the DRIVER's heap while 4–10 g executors hold the relations.
-    val executorMemMb = "local-cluster\\[\\d+,\\d+,(\\d+)\\]".r
-      .findFirstMatchIn(master).map(_.group(1))
-
-    val builder0 = SparkSession.builder()
-      .master(master)
+    val executorMem = master match {
+      case GraftSession.LocalCluster(_, _, mb) =>
+        Seq("spark.executor.memory" -> s"${mb}m")
+      case _ => Nil
+    }
+    val spark = GraftSession.withMaster(master, Seq(
       // Worker-launched executor JVMs know Spark's jars but not this
       // repo's classes; without this every deserialized closure dies
       // with ClassNotFoundException.
-      .config("spark.executor.extraClassPath", classesDir)
-    // Generic conf passthrough for experiments (e.g. forcing a gate):
-    // SPARK_GRAFT_EXTRA_CONF="k=v;k2=v2".
-    val builder1 = executorMemMb
-      .fold(builder0)(mb => builder0.config("spark.executor.memory", s"${mb}m"))
-    val spark = sys.env.get("SPARK_GRAFT_EXTRA_CONF")
-      .map(_.split(";").filter(_.nonEmpty))
-      .getOrElse(Array.empty[String])
-      .foldLeft(builder1) { (b, kv) =>
-        // Same guard as StreamLadder: name a malformed entry instead
-        // of dying in the destructuring bind with a MatchError.
-        require(kv.contains("="),
-          s"bad SPARK_GRAFT_EXTRA_CONF entry (expected k=v): '$kv'")
-        val Array(k, v) = kv.split("=", 2)
-        b.config(k, v)
-      }
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+      "spark.executor.extraClassPath" ->
+        new java.io.File("target/scala-2.13/classes").getAbsolutePath,
       // Decommission machinery armed but inert until a SIGPWR arrives
       // (part 3b sends one): the cloud-preemption analog — the executor
       // drains and MIGRATES its shuffle/RDD blocks to the survivor
       // instead of dying with them. Static confs, so set at build time.
-      .config("spark.decommission.enabled", "true")
-      .config("spark.storage.decommission.enabled", "true")
-      .config("spark.storage.decommission.shuffleBlocks.enabled", "true")
-      .config("spark.storage.decommission.rddBlocks.enabled", "true")
+      "spark.decommission.enabled" -> "true",
+      "spark.storage.decommission.enabled" -> "true",
+      "spark.storage.decommission.shuffleBlocks.enabled" -> "true",
+      "spark.storage.decommission.rddBlocks.enabled" -> "true",
       // The recovery demo needs failures to surface, not retry away:
       // with lineage truncated there is nothing a retry can recompute,
       // but Spark would still burn 4 task attempts × stage retries
       // before admitting it. For spill-stress runs where an executor
       // MAY legitimately die and be replaced, raise it to the
       // production default (SPARK_GRAFT_TASK_MAX_FAILURES=4).
-      .config("spark.task.maxFailures",
-        sys.env.getOrElse("SPARK_GRAFT_TASK_MAX_FAILURES", "2"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.task.maxFailures" ->
+        sys.env.getOrElse("SPARK_GRAFT_TASK_MAX_FAILURES", "2")
+    ) ++ executorMem: _*)
 
     val out = new java.io.PrintWriter(new java.io.FileWriter(outPath, true))
     def emit(line: String): Unit = { println(line); out.println(line); out.flush() }

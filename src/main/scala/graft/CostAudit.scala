@@ -1,10 +1,5 @@
 package graft
 
-import scala.collection.mutable
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
-
 /** Runtime cost sweep (not part of the driver contract): runs every
   * contract query and reports MEASURED shuffle volume, spill, and task
   * time — the numbers that decide whether a plan survives a 100×
@@ -16,52 +11,27 @@ import org.apache.spark.sql.SparkSession
   * Run: `sbt "runMain graft.CostAudit [sfDir]"`. Prints one line per
   * query (sorted by shuffle write, descending) plus totals; any
   * memory/disk spill at these scale factors is flagged loudly, because
-  * spill at sf0.1 means certain spill at sf100.
+  * spill at sf0.1 means certain spill at sf100, and the main exits 1.
+  * `SPARK_GRAFT_CPUS` (default the machine's cores) sets `local[n]`.
   */
 object CostAudit {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession()
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
-
-    // Stage metrics accumulate between marks; one listener instance
-    // serves all queries because queries run sequentially.
-    val current = new mutable.ArrayBuffer[StageCost]()
-    val listener = new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        val m = sc.stageInfo.taskMetrics
-        if (m != null) current.synchronized {
-          current += StageCost(
-            m.shuffleReadMetrics.totalBytesRead,
-            m.shuffleWriteMetrics.bytesWritten,
-            m.inputMetrics.bytesRead,
-            m.memoryBytesSpilled, m.diskBytesSpilled,
-            m.executorRunTime)
-        }
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
+    val metrics = StageMetrics(spark)
 
     def mb(b: Long): String = f"${b / 1048576.0}%9.1f"
     var flagged = 0
     val rows = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      current.synchronized(current.clear())
+      metrics.start()
       val t0 = System.nanoTime()
       val n = Force.rows(fn(spark, dir))
       val wallMs = (System.nanoTime() - t0) / 1e6
-      // Listener events are posted asynchronously; drain the bus so the
-      // numbers attribute to the query that produced them.
-      org.apache.spark.graft.ListenerBusAccess.drain(spark.sparkContext)
-      val c = current.synchronized(current.toSeq)
+      val c = metrics.stop()
       val cost = QueryCost(name, n, wallMs,
-        c.map(_.shuffleRead).sum, c.map(_.shuffleWrite).sum,
-        c.map(_.input).sum, c.map(_.memSpill).sum, c.map(_.diskSpill).sum,
-        c.map(_.runTimeMs).sum)
+        c.map(_.shuffleReadBytes).sum, c.map(_.shuffleWriteBytes).sum,
+        c.map(_.inputBytes).sum, c.map(_.memorySpillBytes).sum,
+        c.map(_.diskSpillBytes).sum, c.map(_.taskMs).sum)
       if (cost.memSpill > 0 || cost.diskSpill > 0) flagged += 1
       cost
     }
@@ -79,9 +49,6 @@ object CostAudit {
     spark.stop()
     if (flagged > 0) sys.exit(1)
   }
-
-  private case class StageCost(shuffleRead: Long, shuffleWrite: Long,
-      input: Long, memSpill: Long, diskSpill: Long, runTimeMs: Long)
 
   private case class QueryCost(name: String, rows: Long, wallMs: Double,
       shuffleRead: Long, shuffleWrite: Long, input: Long,

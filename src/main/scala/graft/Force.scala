@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 
 /** Full-plan execution forcing for the measurement tools (Bench,
-  * ScaleLadder, CostAudit, Scratch).
+  * ScaleLadder, CostAudit, Profile).
   *
   * `df.count()` is NOT a valid way to measure an operator: Catalyst
   * re-optimizes the counting plan, and anything the row count does not

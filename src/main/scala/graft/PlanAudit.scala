@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan hygiene sweep (not part of the driver contract): prints, for
   * every contract query, the physical-plan red flags a 100 TB cluster
   * would punish — cartesian products, broadcast nested-loop joins,
@@ -10,22 +8,16 @@ import org.apache.spark.sql.SparkSession
   * `sbt "runMain graft.PlanAudit [sfDir]"`. */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = GraftSession(
       // Static audit: with AQE on, executedPlan is an opaque
       // AdaptiveSparkPlanExec leaf (children = Nil) and tree-walks
       // like the global-window sweep silently see NOTHING.
-      .config("spark.sql.adaptive.enabled", "false")
+      "spark.sql.adaptive.enabled" -> "false",
       // Expose full lineage: Materialize.once checkpoints (rank
       // inputs, shared rollups, the dedup manifest) would truncate
       // the visible plan at a LogicalRDD, hiding everything upstream
       // from every flag below.
-      .config("spark.graft.materialize", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+      "spark.graft.materialize" -> "false")
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
     // Intentional exceptions, with the reason they're correct at scale:
     //  - brute-force ANN broadcasts the (small) query set against every

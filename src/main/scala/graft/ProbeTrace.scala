@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Diagnostic for the bench ambient-load probes: print N consecutive
   * runs of each probe from a cold JVM, so the warm-up policy in
@@ -14,13 +13,7 @@ import org.apache.spark.sql.SparkSession
 object ProbeTrace {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(15)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     // Same generic JVM warm-up the bench does before its probes.
     spark.range(1000).selectExpr("sum(id)").collect()
     val cpu = (1 to n).map(_ => Bench.cpuProbeOnce(spark))

@@ -112,13 +112,11 @@ object RunPlan {
         System.err.println(s"graft.RunPlan: $err")
         sys.exit(2)
       case Right(config) =>
-        // master comes from spark-submit in production; default local
-        // so `sbt runMain` works out of the box.
-        val spark = SparkSession.builder()
-          .appName("graft")
-          .config("spark.ui.enabled", "false")
-          .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-          .getOrCreate()
+        // The master comes from spark-submit (or -Dspark.master) in
+        // production; `local[*]` only when none is given, so
+        // `sbt runMain` works out of the box.
+        val spark = GraftSession.build("local[*]",
+          Seq("spark.app.name" -> "graft"))
         // sys.exit halts the JVM before a finally around it could run —
         // compute the code first, stop the session, THEN exit.
         val code = try run(spark, config) finally spark.stop()

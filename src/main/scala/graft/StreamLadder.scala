@@ -79,11 +79,7 @@ object StreamLadder {
   }
 
   def main(args: Array[String]): Unit = {
-    require(args.nonEmpty, "usage: StreamLadder <label>=<dir> ...")
-    val ladder = args.toSeq.map { a =>
-      val Array(label, d) = a.split("=", 2)
-      (label, d)
-    }
+    val ladder = Ladder.rungs(args.toSeq, "StreamLadder")
     val iterations =
       sys.env.getOrElse("SPARK_GRAFT_STREAM_ITERS", "2").toInt
     val filesPerTrigger =
@@ -112,45 +108,28 @@ object StreamLadder {
     // ladder under real Worker-launched executor JVMs (ClusterSmoke's
     // pattern — requires SPARK_SCALA_VERSION=2.13 in the environment);
     // executors then need this repo's classes on their classpath.
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER",
-      s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-    val builder00 = SparkSession.builder()
-      .config("spark.sql.streaming.stateStore.providerClass", providerClass)
-      .master(master)
-    // Generic conf passthrough (ClusterSmoke's pattern) for provider
-    // experiments — e.g. RocksDB changelog checkpointing, the knob
-    // that targets the commit-latency premium the telemetry measured:
-    // SPARK_GRAFT_EXTRA_CONF="k=v;k2=v2". Confs ride the provider tag
-    // in every record via the `extra_conf` field so experimental rows
-    // never pollute a provider's baseline.
+    val master = GraftSession.master(sys.env.getOrElse("SPARK_GRAFT_MASTER",
+      s"local[${GraftSession.cpus}]"))
+    // SPARK_GRAFT_EXTRA_CONF (applied by GraftSession) serves provider
+    // experiments — e.g. RocksDB changelog checkpointing, the knob that
+    // targets the commit-latency premium the telemetry measured. The
+    // raw value rides the provider tag in every record via the
+    // `extra_conf` field so experimental rows never pollute a
+    // provider's baseline.
     val extraConf = sys.env.getOrElse("SPARK_GRAFT_EXTRA_CONF", "")
-    val builder0 = extraConf.split(";").filter(_.nonEmpty)
-      .foldLeft(builder00) { (b, kv) =>
-        // A stray token without '=' would otherwise die in the
-        // destructuring bind with an opaque MatchError before any
-        // measurement; name the malformed entry instead.
-        require(kv.contains("="),
-          s"bad SPARK_GRAFT_EXTRA_CONF entry (expected k=v): '$kv'")
-        val Array(k, v) = kv.split("=", 2)
-        b.config(k, v)
-      }
-    val builder =
+    val classpath =
       if (master.startsWith("local-cluster"))
-        builder0.config("spark.executor.extraClassPath",
+        Seq("spark.executor.extraClassPath" ->
           new java.io.File("target/scala-2.13/classes").getAbsolutePath)
-      else builder0
-    val spark = builder
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
+      else Nil
+    val spark = GraftSession.withMaster(master, Seq(
+      "spark.sql.streaming.stateStore.providerClass" -> providerClass,
       // batches/out_rows/state_rows read recentProgress after the run;
       // the default ring buffer keeps 100 progress events, so a
       // >100-micro-batch replay (smaller maxFilesPerTrigger, bigger SF)
       // would silently under-report. 10k covers any run this tool does.
-      .config("spark.sql.streaming.numRecentProgressUpdates", 10000)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.sql.streaming.numRecentProgressUpdates" -> "10000"
+    ) ++ classpath: _*)
 
     def ms(v: Double): String = JsonFmt.ms(v)
     val out = new java.io.PrintWriter(new java.io.FileWriter(outPath, true))

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Stage breakdown of qd_tfidf_pairs — the suite's most expensive
   * query (~5% of the whole bench; the only one over 10 s) — at ladder
   * scale, so "is further work worth it" is decided by measurement:
@@ -22,65 +20,41 @@ import org.apache.spark.sql.SparkSession
   *
   * Each stage wall is min-of-`SPARK_GRAFT_LADDER_ITERS` (default 2).
   * Emits SCALING_RAW-shaped rows (query=tfidf_<stage>) to
-  * SPARK_GRAFT_LADDER_OUT (default /tmp/TFIDF_PROFILE.jsonl).
+  * SPARK_GRAFT_LADDER_OUT (default /tmp/TFIDF_PROFILE.jsonl); a stage
+  * none of whose runs succeeded gets the ladder's error line.
   *
   * Run: `sbt "runMain graft.TfidfProfile sf1=target/scaledata/sf1"`.
   */
 object TfidfProfile {
   def main(args: Array[String]): Unit = {
-    require(args.nonEmpty, "usage: TfidfProfile <label>=<dir> ...")
-    val ladder = args.toSeq.map { a =>
-      require(a.contains("="), s"bad arg (expected label=dir): '$a'")
-      val Array(label, dir) = a.split("=", 2)
-      (label, dir)
-    }
-    val iterations = sys.env.getOrElse("SPARK_GRAFT_LADDER_ITERS", "2").toInt
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_LADDER_OUT",
-      "/tmp/TFIDF_PROFILE.jsonl")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val ladder = Ladder.rungs(args.toSeq, "TfidfProfile")
+    val spark = GraftSession()
     spark.range(1000).selectExpr("sum(id)").collect()
-
-    val out = new java.io.PrintWriter(new java.io.FileWriter(outPath, true))
-    def emit(l: String): Unit = { println(l); out.println(l); out.flush() }
-    def timed(mk: () => Long): (Double, Long) = {
-      var best = Double.MaxValue; var rows = 0L
-      for (_ <- 1 to iterations) {
-        val t0 = System.nanoTime()
-        rows = mk()
-        val t = (System.nanoTime() - t0) / 1e9
-        if (t < best) best = t
-        System.gc() // drop dead localCheckpoint blocks between runs
-      }
-      (best, rows)
-    }
+    val runs = new Ladder(spark, "/tmp/TFIDF_PROFILE.jsonl")
+    def ms(v: Double): String = JsonFmt.ms(v)
     try {
       for ((label, dir) <- ladder) {
         // Fresh frames per timing so Materialize.once caching inside
         // `vec` can't leak one measurement into the next.
-        val (bandSec, bandRows) = timed { () =>
-          Force.rows(graft.queries.DedupQueries.tfidfCandVec(spark, dir)._1)
+        val band = runs.best(
+          Force.rows(graft.queries.DedupQueries.tfidfCandVec(spark, dir)._1))
+        val vec = runs.best(
+          Force.rows(graft.queries.DedupQueries.tfidfCandVec(spark, dir)._2))
+        val full = runs.best(
+          Force.rows(graft.queries.DedupQueries.qdTfidfPairs(spark, dir)))
+        runs.record(label, "tfidf_banding", band) { b =>
+          s""""sec":${ms(b.sec)},"rows":${b.value}"""
         }
-        val (vecSec, vecRows) = timed { () =>
-          Force.rows(graft.queries.DedupQueries.tfidfCandVec(spark, dir)._2)
+        runs.record(label, "tfidf_assembly",
+            for (b <- band; v <- vec) yield (b, v)) { case (b, v) =>
+          s""""sec":${ms(math.max(0.0, v.sec - b.sec))},"vec_wall_sec":${ms(v.sec)},"rows":${v.value}"""
         }
-        val (fullSec, fullRows) = timed { () =>
-          Force.rows(graft.queries.DedupQueries.qdTfidfPairs(spark, dir))
+        runs.record(label, "tfidf_scoring",
+            for (v <- vec; f <- full) yield (v, f)) { case (v, f) =>
+          s""""sec":${ms(math.max(0.0, f.sec - v.sec))},"full_wall_sec":${ms(f.sec)},"rows":${f.value}"""
         }
-        val asmSec = math.max(0.0, vecSec - bandSec)
-        val scoreSec = math.max(0.0, fullSec - vecSec)
-        def ms(v: Double) = JsonFmt.ms(v)
-        emit(s"""{"sf":"$label","query":"tfidf_banding","sec":${ms(bandSec)},"rows":$bandRows,"force":"full"}""")
-        emit(s"""{"sf":"$label","query":"tfidf_assembly","sec":${ms(asmSec)},"vec_wall_sec":${ms(vecSec)},"rows":$vecRows,"force":"full"}""")
-        emit(s"""{"sf":"$label","query":"tfidf_scoring","sec":${ms(scoreSec)},"full_wall_sec":${ms(fullSec)},"rows":$fullRows,"force":"full"}""")
       }
-    } finally out.close()
+    } finally runs.close()
     spark.stop()
   }
 }

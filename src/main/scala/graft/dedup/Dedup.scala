@@ -888,7 +888,7 @@ object Dedup {
     // per-round plan growth genuinely dominates.
     val out = labels.select(col("__id").as(idCol),
       col("__comp").as("component_id"))
-    if (iter >= 8) graft.operators.Materialize.once(out, "cc.labels") else out
+    if (iter >= 8) graft.operators.Materialize.once(out) else out
   }
 
   /** Connected components by alternating large-star / small-star
@@ -1183,7 +1183,7 @@ object Dedup {
     val und = graft.operators.Materialize.once(
       edges.select(least(col(ea), col(eb)).as("__a"),
           greatest(col(ea), col(eb)).as("__b"))
-        .where(col("__a") =!= col("__b")).distinct(), "pr.und")
+        .where(col("__a") =!= col("__b")).distinct())
     val directed = und.select(col("__a").as("__src"), col("__b").as("__dst"))
       .union(und.select(col("__b").as("__src"), col("__a").as("__dst")))
     val deg = directed.groupBy("__src").agg(count(lit(1)).as("__deg"))

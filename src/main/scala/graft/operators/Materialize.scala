@@ -31,20 +31,8 @@ import org.apache.spark.sql.DataFrame
   * `sc.setCheckpointDir` made earlier wins.
   */
 object Materialize {
-  /** Per-site opt-out (r15): `once(df, "cc.labels")` additionally
-    * honors `spark.graft.materialize.cc.labels=false`. The global flag
-    * stays the PlanAudit escape hatch; the site keys exist so that
-    * each barrier can be A/B-measured (and, where a barrier is a
-    * measured net loss at a given scale, disabled) INDIVIDUALLY —
-    * the r14 driver bench showed the barrier family costing 20-35%
-    * at sf0.1 on five queries while being the right shape at 100 TB,
-    * and a single global switch cannot express that trade. */
-  private def enabled(df: DataFrame, site: String): Boolean = {
-    val conf = df.sparkSession.conf
-    conf.get("spark.graft.materialize", "true").toBoolean &&
-      (site.isEmpty ||
-        conf.get(s"spark.graft.materialize.$site", "true").toBoolean)
-  }
+  private def enabled(df: DataFrame): Boolean =
+    df.sparkSession.conf.get("spark.graft.materialize", "true").toBoolean
 
   /** [[once]] with SERIALIZED block storage — for WIDE frames (every
     * row of a multi-million-row result) where the default deserialized
@@ -54,18 +42,18 @@ object Materialize {
     * Same lifecycle and same `spark.graft.materialize=false` escape
     * hatch as [[once]]; reliable-checkpoint mode ignores the level
     * (checkpoint files are always serialized). */
-  def onceSer(df: DataFrame, site: String = ""): DataFrame = {
+  def onceSer(df: DataFrame): DataFrame = {
     val conf = df.sparkSession.conf
-    if (!enabled(df, site)) df
+    if (!enabled(df)) df
     else if (conf.getOption("spark.graft.checkpointDir")
         .exists(_.trim.nonEmpty)) once(df)
     else df.localCheckpoint(false,
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
   }
 
-  def once(df: DataFrame, site: String = ""): DataFrame = {
+  def once(df: DataFrame): DataFrame = {
     val conf = df.sparkSession.conf
-    if (!enabled(df, site)) df
+    if (!enabled(df)) df
     else conf.getOption("spark.graft.checkpointDir")
         .map(_.trim).filter(_.nonEmpty) match {
       case Some(dir) =>

@@ -1263,7 +1263,7 @@ object TextQueries {
         .select(col("doc_id"), explode_outer(bgs).as("bg"))
         .where(col("bg").isNotNull)
         .groupBy("doc_id", "bg")
-        .agg(count(lit(1)).as("c")), "text.bigrams")
+        .agg(count(lit(1)).as("c")))
   }
 
   def qtBigramLm(spark: SparkSession, dir: String): DataFrame = {
