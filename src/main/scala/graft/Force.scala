@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.DataFrame
 
 /** Full-plan execution forcing for the measurement tools (Bench,
-  * ScaleLadder, CostAudit, Profile).
+  * ScaleLadder, CostAudit, Profile), and for materializing a cached
+  * frame in one job ([[graft.dedup.Dedup.connectedComponents]]).
   *
   * `df.count()` is NOT a valid way to measure an operator: Catalyst
   * re-optimizes the counting plan, and anything the row count does not

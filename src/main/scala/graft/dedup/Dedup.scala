@@ -779,14 +779,19 @@ object Dedup {
 
   /** Connected components over a near-duplicate pair graph: every vertex
     * gets the minimum reachable id as its `component_id` (the canonical
-    * document of its duplicate cluster).
+    * document of its duplicate cluster). One row per distinct vertex.
     *
-    * Iterative min-label propagation: each round joins current labels
-    * across edges and keeps the per-vertex minimum, until no label
-    * changes. Rounds cost one shuffle over the edge set; near-dup graphs
-    * have tiny diameter (dup clusters are near-cliques from LSH/Jaccard
-    * blocking), so convergence is 2-3 rounds in practice — the standard
-    * scalable formulation (driver only sees one count per round).
+    * The edge set is semi-joined to the vertex set once, cached and
+    * counted. Below [[UnionFind.MaxEdges]] edges with `LongType` ids
+    * (every near-dup graph the pipelines build), union-find finishes it
+    * in one task on an executor: each propagation round below would
+    * cost at least one Spark job, and on a small graph that job latency
+    * is the whole cost. At or above the bound, or for other id types,
+    * iterative min-label propagation runs: each round joins current
+    * labels across edges and keeps the per-vertex minimum, until no
+    * label changes. A round is one shuffle over the edge set and the
+    * round count is the graph diameter; a graph whose diameter exceeds
+    * `maxIter` fails loudly rather than returning a mislabeled tail.
     *
     * Components are computed over the subgraph INDUCED by `vertices`:
     * edges touching an id outside the vertex set are dropped up front.
@@ -799,67 +804,91 @@ object Dedup {
     * @param edges    two-column DataFrame (id_a, id_b), undirected
     */
   def connectedComponents(vertices: DataFrame, edges: DataFrame,
-      maxIter: Int = 25): DataFrame = {
+      maxIter: Int = 25): DataFrame =
+    connectedComponents(vertices, edges, maxIter, UnionFind.MaxEdges)
+
+  /** [[connectedComponents]] finishing in one task only below
+    * `oneTaskBelowEdges` edges; 0 forces the distributed rounds. */
+  private[graft] def connectedComponents(vertices: DataFrame,
+      edges: DataFrame, maxIter: Int, oneTaskBelowEdges: Long): DataFrame = {
     val idCol = vertices.columns.head
     val Seq(ea, eb) = edges.columns.take(2).toSeq
-    // The edge set is re-joined every round — materialise it once, or an
-    // expensive upstream (LSH, jaccard) recomputes per iteration. Cache
-    // it PARTITIONED ON THE JOIN KEY: every round's propagation join
-    // then reuses the cached partitioning, so only the (smaller) label
-    // side exchanges — and the label side arrives hash-partitioned on
-    // __id from the previous round's aggregation, making the join
-    // exchange-free from round 2 on.
     val vset = vertices.select(col(idCol).as("__v"))
-    // NOT materialized (r15, reverting an r14 barrier): the union
-    // below inlines this frame twice, but both branches share the
-    // identical edge-build subtree, so ReuseExchange dedupes every
-    // shuffle stage of the generator — only the segment after the
-    // LAST exchange (e.g. the jaccard threshold filter over pair
-    // counts) runs twice, and that tail is proportional to the
-    // CANDIDATE PAIR count, not the corpus. The r14 checkpoint
-    // bought nothing the reuse did not already give and cost a full
-    // write+read of the |E| frame plus a lost pipeline stage:
-    // stage-profiled this round on qd_cluster_labels, barrier-ON ran
-    // 88.6 s of task time / 6.6 s warm where barrier-OFF ran 65.7 s /
-    // 5.9 s, with the OFF profile showing the shingle and posting
-    // stages executing ONCE (ReusedExchange) and only the 2.3 s
-    // pair-rollup tail twice. The driver's r14 bench saw the same:
-    // every connectedComponents consumer regressed 20-35%.
-    val e0 = edges.select(col(ea).as("__src"), col(eb).as("__dst"))
-    val e = e0
-      .union(e0.select(col("__dst").as("__src"), col("__src").as("__dst")))
+    // Materialised once, or an expensive upstream (LSH, jaccard) would
+    // recompute for the count and again for the finish or every round.
+    val e1 = edges.select(col(ea).as("__src"), col(eb).as("__dst"))
       .join(vset.withColumnRenamed("__v", "__src"), Seq("__src"), "left_semi")
       .join(vset.withColumnRenamed("__v", "__dst"), Seq("__dst"), "left_semi")
+      .cache()
+    // Force.rows, not count(): count() adds a counting aggregate whose
+    // exchange costs one more job.
+    if (longIds(vertices, edges) && graft.Force.rows(e1) < oneTaskBelowEdges) {
+      val labels = finishInOneTask(e1).cache()
+      graft.Force.rows(labels)
+      e1.unpersist()
+      vertices.select(col(idCol)).distinct()
+        .join(broadcast(labels), col(idCol) === col("__id"), "left")
+        .select(col(idCol),
+          coalesce(col("__comp"), col(idCol)).as("component_id"))
+    } else propagateLabels(vertices, e1, maxIter)
+  }
+
+  /** [[connectedComponents]]'s distributed rounds over `e1`, the cached
+    * induced edge set in one orientation (`__src`, `__dst`); unpersists
+    * it once the rounds have their own copy. */
+  private def propagateLabels(vertices: DataFrame, e1: DataFrame,
+      maxIter: Int): DataFrame = {
+    val idCol = vertices.columns.head
+    // Both edge orientations plus one flagged self row per vertex,
+    // PARTITIONED ON THE JOIN KEY: every round's propagation join then
+    // reuses the cached partitioning, so only the (smaller) label side
+    // exchanges — and the label side arrives hash-partitioned on __id
+    // from the previous round's aggregation, making the join
+    // exchange-free from round 2 on. The self rows carry each vertex's
+    // old label through that same join, so a round's plan reads the
+    // previous round's labels ONCE: plan strings (printed with every
+    // nested cached plan, initial and final) then double per round
+    // instead of quadrupling. At 4× a round, the eighth round of a
+    // 60-vertex chain built a plan string of hundreds of millions of
+    // characters and ran a 4 GB driver out of memory.
+    val e = e1
+      .select(explode(array(struct(col("__src").as("s"), col("__dst").as("d")),
+        struct(col("__dst").as("s"), col("__src").as("d")))).as("__e"))
+      .select(col("__e.s").as("__src"), col("__e.d").as("__dst"),
+        lit(0).as("__self"))
+      .union(vertices.select(col(idCol).as("__src"), col(idCol).as("__dst"),
+        lit(1).as("__self")))
       .repartition(col("__src"))
       .cache()
-    var labels = vertices.select(col(idCol).as("__id"), col(idCol).as("__comp"))
-      .cache()
+    var labels: DataFrame = null
     // labels becomes a PROJECTION of the round's cached aggregate;
     // unpersist must target the cached frame itself.
-    var cached = labels
+    var cached: DataFrame = null
     var iter = 0
     var changed = 1L
     while (changed > 0 && iter < maxIter) {
       // Round 1 propagates IDENTITY labels, so the label join collapses
-      // to a projection of the edge set — safe ONLY because e is
-      // already filtered to vertex endpoints (induced subgraph above):
-      // every __src is a vertex carrying its own id as label.
+      // to a projection of e — safe ONLY because e is already filtered
+      // to vertex endpoints (induced subgraph above): every __src is a
+      // vertex carrying its own id as label. From round 2 on every
+      // non-null __src has a label; the LEFT join only keeps the self
+      // rows of null ids, which no edge reaches.
       val prop =
-        if (iter == 0)
-          e.select(col("__dst").as("__id"), col("__src").as("__comp"),
-            lit(0).as("__self"))
-        else e.join(labels, col("__src") === col("__id"))
-          .select(col("__dst").as("__id"), col("__comp"), lit(0).as("__self"))
+        if (iter == 0) e.select(col("__dst").as("__id"),
+          col("__src").as("__comp"), col("__self"))
+        else e.join(labels, col("__src") === col("__id"), "left")
+          .select(col("__dst").as("__id"), col("__comp"), col("__self"))
       // Convergence detection folds into the SAME aggregation: the
       // self row (one per vertex, flagged) carries the old label, so
       // "did anything improve" is a filter on the aggregate — no
       // next⋈labels comparison join per round.
-      val agg = labels.withColumn("__self", lit(1)).union(prop)
+      val agg = prop
         .groupBy("__id").agg(min("__comp").as("__comp"),
           min(when(col("__self") === 1, col("__comp"))).as("__old"))
         .cache()
       changed = agg.where(col("__comp") < col("__old")).count()
-      cached.unpersist()
+      // Round 1 read all of e, so e is cached in full from here on.
+      if (iter == 0) e1.unpersist() else cached.unpersist()
       cached = agg
       labels = agg.select("__id", "__comp")
       iter += 1
@@ -868,40 +897,45 @@ object Dedup {
     // Wrong-but-plausible labels are worse than failing: a graph whose
     // diameter exceeds maxIter must not silently mislabel the tail.
     if (changed > 0) {
-      cached.unpersist() // don't pin the partial result on failure
+      if (cached != null) cached.unpersist() // don't pin a partial result
       throw new IllegalStateException(
         s"connectedComponents did not converge in $maxIter iterations " +
           s"($changed labels still changing); raise maxIter")
     }
     // labels stays cached: one small row per vertex, and dropping it
-    // would re-derive the whole iteration chain on first use. The
-    // r14 unconditional checkpoint-truncation of the RETURNED frame
-    // is now GATED on round count (r15): consumers hit the cache for
-    // DATA either way, so the truncation only ever bought Catalyst
-    // analysis time on the iteration-deep logical plan — and for the
-    // 2-3-round near-clique graphs every contract query produces, the
-    // extra materialization pass cost more wall than the analysis it
-    // saved (driver r14: qd_cluster_labels/cohesion/qp_weights
-    // regressed 20-35%; r15 stage profile: barrier-ON 88.6 s task /
-    // 6.6 s warm vs OFF 65.7 s / 5.9 s on qd_cluster_labels). Deep
-    // iterations (pathological diameters) still truncate — there the
-    // per-round plan growth genuinely dominates.
+    // would re-derive the whole iteration chain on first use. Deep
+    // iterations also truncate the returned plan, whose per-round
+    // growth then dominates Catalyst analysis time.
     val out = labels.select(col("__id").as(idCol),
       col("__comp").as("component_id"))
     if (iter >= 8) graft.operators.Materialize.once(out) else out
   }
 
+  /** Whether the vertex id and both edge endpoints are `LongType`, the
+    * id type [[UnionFind]] works on. */
+  private def longIds(vertices: DataFrame, edges: DataFrame): Boolean =
+    (vertices.schema.fields.take(1) ++ edges.schema.fields.take(2))
+      .forall(_.dataType == org.apache.spark.sql.types.LongType)
+
+  /** [[UnionFind.labels]] over a two-column `LongType` edge frame, in a
+    * single task on an executor: (`__id`, `__comp`) per endpoint. */
+  private def finishInOneTask(edges: DataFrame): DataFrame = {
+    val s = edges.sparkSession
+    import s.implicits._
+    edges.as[(Long, Long)].coalesce(1).mapPartitions(UnionFind.labels)
+      .toDF("__id", "__comp")
+  }
+
   /** Connected components by alternating large-star / small-star
     * contraction (Kiveris et al., "Connected Components in MapReduce
     * and Beyond") — the O(log n)-round alternative to
-    * [[connectedComponents]]'s min-label propagation, whose round count
-    * is the graph DIAMETER. Near-dup graphs are near-cliques (diameter
-    * 2-3) where propagation wins on constant factors; chain-shaped
-    * graphs (entity-resolution link chains, temporal edges) have
-    * diameter O(n) where propagation needs O(n) shuffles and this
-    * needs O(log n). StarComponentsSpec demonstrates exactly that: a
-    * 60-vertex path (diameter 59) converges here in 7 rounds while
-    * propagation exhausts an 8-round budget.
+    * [[connectedComponents]]'s min-label propagation rounds, whose
+    * count is the graph DIAMETER. Chain-shaped graphs (entity-resolution
+    * link chains, temporal edges) have diameter O(n), where propagation
+    * needs O(n) shuffles and this needs O(log n). StarComponentsSpec
+    * demonstrates exactly that: a 60-vertex path (diameter 59)
+    * converges here in 7 rounds while propagation exhausts an 8-round
+    * budget.
     *
     * Each round is two relational contractions over the CANONICAL edge
     * set (hi > lo), no per-node adjacency arrays — a grouped min +
@@ -917,13 +951,27 @@ object Dedup {
     * Convergence check = one left-anti count per round over cached
     * frames (set equality: no new edge outside old ∧ equal sizes).
     *
+    * The edge count is measured before every round. Once it is below
+    * [[UnionFind.MaxEdges]] (and the ids are `LongType`), union-find
+    * finishes the current round's edge set in one task: it has the
+    * input graph's components, so the labels are the same, and the
+    * remaining rounds' jobs are skipped. Early rounds stay distributed
+    * at any scale.
+    *
     * Same induced-subgraph and fail-loud contracts as
     * [[connectedComponents]]. */
   def connectedComponentsStar(vertices: DataFrame, edges: DataFrame,
-      maxIter: Int = 20): DataFrame = {
+      maxIter: Int = 20): DataFrame =
+    connectedComponentsStar(vertices, edges, maxIter, UnionFind.MaxEdges)
+
+  /** [[connectedComponentsStar]] finishing in one task only below
+    * `oneTaskBelowEdges` edges; 0 forces the distributed rounds. */
+  private[graft] def connectedComponentsStar(vertices: DataFrame,
+      edges: DataFrame, maxIter: Int, oneTaskBelowEdges: Long): DataFrame = {
     val idCol = vertices.columns.head
     val Seq(ea, eb) = edges.columns.take(2).toSeq
     val vset = vertices.select(col(idCol).as("__v"))
+    val finishBelow = if (longIds(vertices, edges)) oneTaskBelowEdges else 0L
     // Canonical orientation (__hi > __lo), induced on the vertex set,
     // self-loops dropped, deduplicated. Each round's edge set is
     // localCheckpoint'ed, NOT cached: the round's plan references the
@@ -931,26 +979,15 @@ object Dedup {
     // plan still grows 6^rounds nodes and Catalyst analysis, not the
     // data, becomes the bottleneck by round 7. The checkpoint
     // materializes AND truncates lineage, keeping every round's plan
-    // constant-size. DISK_ONLY round blocks (not the MEMORY_AND_DISK
-    // default): superseded rounds are reclaimed only when the driver
-    // GCs the owning RDDs, and accumulated rounds of an |E|-scale
-    // frame can fill the protected storage region and starve execution
-    // memory — the exact OOM the scale ladder caught in kCore's loop
-    // at the ×160 rung. A round frame is re-read at most three times;
-    // disk blocks pin no memory.
-    // Round-block storage level is SIZE-GATED (r15): DISK_ONLY remains
-    // the guard for |E|-scale frames (see the OOM note above), but a
-    // bench-SF or late-round frame of < 10⁶ edges is ≤ ~16 MB
-    // serialized — parking that on disk made every consumer task pay
-    // a block-file read under host IO contention for no memory-safety
-    // gain. eCount is measured each round, so a 100 TB run's early
-    // rounds stay on disk and the shrunken tail graduates to memory.
-    val diskOnlyLevel = org.apache.spark.storage.StorageLevel.DISK_ONLY
-    val memLevel = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
-    val memBelowEdges = vertices.sparkSession.conf
-      .get("spark.graft.cc.memRoundsBelowEdges", "1000000").toLong
-    def roundLevel(edgesNow: Long) =
-      if (edgesNow < memBelowEdges) memLevel else diskOnlyLevel
+    // constant-size. Rounds only run on edge sets of at least
+    // `finishBelow` edges, so their blocks go to DISK_ONLY, not the
+    // MEMORY_AND_DISK default: superseded rounds are reclaimed only when
+    // the driver GCs the owning RDDs, and accumulated rounds of an
+    // |E|-scale frame can fill the protected storage region and starve
+    // execution memory — the exact OOM the scale ladder caught in
+    // kCore's loop at the ×160 rung. A round frame is re-read at most
+    // three times; disk blocks pin no memory.
+    val roundLevel = org.apache.spark.storage.StorageLevel.DISK_ONLY
     var e = edges
       .select(greatest(col(ea), col(eb)).as("__hi"),
         least(col(ea), col(eb)).as("__lo"))
@@ -958,23 +995,21 @@ object Dedup {
       .join(vset.withColumnRenamed("__v", "__hi"), Seq("__hi"), "left_semi")
       .join(vset.withColumnRenamed("__v", "__lo"), Seq("__lo"), "left_semi")
       .distinct()
-      .localCheckpoint(true, diskOnlyLevel)
+      .localCheckpoint(true, roundLevel)
     var eCount = e.count()
     var iter = 0
     var converged = eCount == 0L
-    val ccVerbose = sys.env.get("GRAFT_CC_VERBOSE").contains("1")
-    if (ccVerbose) println(s"[cc] init edges=$eCount")
-    // MEASURED AND REJECTED (r15): disabling AQE for small rounds
-    // (scoped conf toggle, threshold-gated on eCount) to collapse the
-    // ~6 stage-jobs per round into one job made the loop 2.3× SLOWER
+    // MEASURED AND REJECTED: disabling AQE for small rounds (scoped
+    // conf toggle, threshold-gated on eCount) to collapse the ~6
+    // stage-jobs per round into one job made the loop 2.3× SLOWER
     // (qm_phash_clusters 4.6 s → 10.6 s warm, 207 s task): without
     // AQE's partition coalescing every round stage ran 32-64 tasks
     // instead of 1-2, and this suite's dominant per-task fixed cost
     // (~100-300 ms of shared-dependency wait billed to every
     // concurrently-launched task) multiplied by the task count. AQE's
     // byte-based coalescing is protective for the kilobyte iteration
-    // frames; the per-round driver latency is the cheaper poison.
-    while (!converged && iter < maxIter) {
+    // frames; the one-task finish below removes those rounds instead.
+    while (!converged && eCount >= finishBelow && iter < maxIter) {
       // large-star: adjacency from both directions; m(u) = min(N(u) ∪ {u});
       // larger neighbors v > u re-attach to m(u). m ≤ u < v keeps the
       // output canonical with no orientation fixup.
@@ -994,9 +1029,7 @@ object Dedup {
         .select(col("__lo").as("__hi"), col("__m").as("__lo"))
         .union(smins.select(col("__hi"), col("__m").as("__lo")))
         .distinct()
-        // a round never grows the edge set, so the previous round's
-        // count bounds this one — a valid gate for the level choice.
-        .localCheckpoint(true, roundLevel(eCount))
+        .localCheckpoint(true, roundLevel)
       val nextCount = next.count()
       // Set equality needs the anti-join only on candidate fixpoints
       // (counts already equal) — shrinking rounds skip the join job.
@@ -1005,9 +1038,9 @@ object Dedup {
       e = next
       eCount = nextCount
       iter += 1
-      if (ccVerbose) println(s"[cc] iter=$iter edges=$eCount converged=$converged")
     }
-    if (!converged && eCount > 0) {
+    val finish = !converged && eCount < finishBelow
+    if (!converged && !finish && eCount > 0) {
       throw new IllegalStateException(
         s"connectedComponentsStar did not converge in $maxIter rounds; " +
           "raise maxIter")
@@ -1015,7 +1048,10 @@ object Dedup {
     // Fixpoint stars: every non-center vertex is __hi in exactly one
     // (leaf → center) edge; centers and isolated vertices label
     // themselves. min() guards the (never-observed) multi-edge case.
-    val roots = e.groupBy(col("__hi").as("__id")).agg(min("__lo").as("__root"))
+    // The one-task finish labels every endpoint instead.
+    val roots =
+      if (finish) broadcast(finishInOneTask(e).toDF("__id", "__root"))
+      else e.groupBy(col("__hi").as("__id")).agg(min("__lo").as("__root"))
     vertices.select(col(idCol))
       .join(roots, col(idCol) === col("__id"), "left")
       .select(col(idCol),

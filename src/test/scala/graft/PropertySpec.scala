@@ -13,30 +13,44 @@ class PropertySpec extends SparkSpec {
 
   test("connectedComponents equals driver-side union-find on random graphs") {
     val rnd = new Random(42)
+    val extremes = Seq(Long.MinValue, Long.MaxValue)
     for (_ <- 1 to 5) {
       val n = 2 + rnd.nextInt(24)
+      // Distinct ids: both Long extremes, negatives, shuffled.
+      val ids = rnd.shuffle(
+        (extremes ++ Seq.fill(3 * n)(rnd.nextInt(100) - 50L)).distinct.take(n))
+      // Vertices from index `linked` on touch no edge: isolated.
+      val linked = 1 + rnd.nextInt(n)
       val edges = Seq.fill(rnd.nextInt(40))(
-        (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
-        .filter { case (a, b) => a != b }.distinct
+        (ids(rnd.nextInt(linked)), ids(rnd.nextInt(linked))))
 
-      // Reference: union-find that always keeps the smaller root, so the
-      // final root of every node is its component's minimum id.
+      // Reference: union-find over ids in ascending order that always
+      // keeps the smaller root, so the final root of every node is its
+      // component's minimum id.
+      val sorted = ids.sorted.toIndexedSeq
+      val index = sorted.zipWithIndex.toMap
       val parent = Array.tabulate(n)(identity)
       def find(x: Int): Int =
         if (parent(x) == x) x else { parent(x) = find(parent(x)); parent(x) }
       edges.foreach { case (a, b) =>
-        val (ra, rb) = (find(a.toInt), find(b.toInt))
+        val (ra, rb) = (find(index(a)), find(index(b)))
         if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
       }
-      val expected = (0 until n).map(i => i.toLong -> find(i).toLong).toMap
+      val expected = sorted.indices.map(i => sorted(i) -> sorted(find(i)))
 
       val s = spark
       import s.implicits._
-      val vdf = (0L until n.toLong).toDF("id")
+      // Some ids listed twice: the output still has one row per vertex.
+      val vdf = (ids ++ Seq.fill(1 + rnd.nextInt(3))(ids(rnd.nextInt(n))))
+        .toDF("id")
       val edf = edges.toDF("id_a", "id_b")
-      val got = Dedup.connectedComponents(vdf, edf).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got == expected, s"n=$n edges=$edges")
+      def rows(out: org.apache.spark.sql.DataFrame) =
+        out.collect().map(r => r.getLong(0) -> r.getLong(1)).toSeq.sorted
+      // Default (one-task finish) and the distributed rounds.
+      assert(rows(Dedup.connectedComponents(vdf, edf)) == expected,
+        s"one task: ids=$ids edges=$edges")
+      assert(rows(Dedup.connectedComponents(vdf, edf, 25, 0L)) == expected,
+        s"rounds: ids=$ids edges=$edges")
     }
   }
 

@@ -4,9 +4,9 @@ import graft.SparkSpec
 import scala.util.Random
 
 /** [[Dedup.connectedComponentsStar]] — equivalence to min-label
-  * propagation on randomized graphs, and the log-round advantage on
-  * high-diameter chains (the case propagation's round budget can't
-  * cover). */
+  * propagation on randomized graphs, on both loops' rounds and their
+  * one-task finish, and the log-round advantage on high-diameter chains
+  * (the case propagation's round budget can't cover). */
 class StarComponentsSpec extends SparkSpec {
 
   private def labels(out: org.apache.spark.sql.DataFrame): Map[Long, Long] =
@@ -24,24 +24,33 @@ class StarComponentsSpec extends SparkSpec {
       }.filter { case (a, b) => a != b }
       val vDf = verts.toDF("doc_id")
       val eDf = edges.toDF("id_a", "id_b")
-      val star = labels(Dedup.connectedComponentsStar(vDf, eDf))
+      // Each with its one-task finish (default) and with rounds only.
       val prop = labels(Dedup.connectedComponents(vDf, eDf))
-      assert(star == prop, s"trial $trial: star != propagation")
+      assert(labels(Dedup.connectedComponents(vDf, eDf, 25, 0L)) == prop,
+        s"trial $trial: propagation rounds != one-task finish")
+      assert(labels(Dedup.connectedComponentsStar(vDf, eDf)) == prop,
+        s"trial $trial: star != propagation")
+      assert(labels(Dedup.connectedComponentsStar(vDf, eDf, 20, 0L)) == prop,
+        s"trial $trial: star rounds != propagation")
     }
   }
 
   test("star CC converges on a 60-vertex path where propagation's budget fails") {
     val s = spark
     import s.implicits._
-    // Diameter 59: propagation needs 59 rounds (8 throws — asserted
+    // Diameter 59: propagation rounds need 59 (8 throws — asserted
     // below); star contraction converges in 7 rounds + 1 detect round.
+    // Both loops are forced onto their rounds with a one-task bound of
+    // 0; by default the 59-edge path finishes in one task.
     val vDf = (1L to 60L).toDF("doc_id")
     val eDf = (1L until 60L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val star = labels(Dedup.connectedComponentsStar(vDf, eDf))
-    assert(star == (1L to 60L).map(_ -> 1L).toMap)
+    val allOne = (1L to 60L).map(_ -> 1L).toMap
+    assert(labels(Dedup.connectedComponentsStar(vDf, eDf, 20, 0L)) == allOne)
     assertThrows[IllegalStateException] {
-      Dedup.connectedComponents(vDf, eDf, maxIter = 8).collect()
+      Dedup.connectedComponents(vDf, eDf, 8, 0L).collect()
     }
+    assert(labels(Dedup.connectedComponentsStar(vDf, eDf)) == allOne)
+    assert(labels(Dedup.connectedComponents(vDf, eDf, maxIter = 8)) == allOne)
   }
 
   test("star CC labels isolated vertices and empty edge sets") {
