@@ -781,24 +781,41 @@ object Dedup {
     * gets the minimum reachable id as its `component_id` (the canonical
     * document of its duplicate cluster). One row per distinct vertex.
     *
-    * The edge set is semi-joined to the vertex set once, cached and
-    * counted. Below [[UnionFind.MaxEdges]] edges with `LongType` ids
-    * (every near-dup graph the pipelines build), union-find finishes it
-    * in one task on an executor: each propagation round below would
-    * cost at least one Spark job, and on a small graph that job latency
-    * is the whole cost. At or above the bound, or for other id types,
-    * iterative min-label propagation runs: each round joins current
-    * labels across edges and keeps the per-vertex minimum, until no
-    * label changes. A round is one shuffle over the edge set and the
-    * round count is the graph diameter; a graph whose diameter exceeds
-    * `maxIter` fails loudly rather than returning a mislabeled tail.
-    *
     * Components are computed over the subgraph INDUCED by `vertices`:
-    * edges touching an id outside the vertex set are dropped up front.
-    * (Without that filter, non-vertex endpoints enter the label frame
-    * with no self row, so their improvements never count toward the
-    * convergence check and a chain relayed through them can terminate
-    * early — silently underlabeled.)
+    * edges touching an id outside the vertex set are dropped up front,
+    * and the rest are cached and counted.
+    *
+    * Below [[UnionFind.MaxEdges]] edges with `LongType` ids (every
+    * near-dup graph the pipelines build), union-find labels them in one
+    * task on an executor: each distributed round below costs several
+    * Spark jobs, and on a small graph that job latency is the whole
+    * cost.
+    *
+    * At or above the bound, or for other id types, alternating
+    * large-star / small-star contraction runs (Kiveris et al.,
+    * "Connected Components in MapReduce and Beyond", SoCC 2014). Each
+    * round is two relational contractions over the CANONICAL edge set
+    * (hi > lo), no per-node adjacency arrays — a grouped min + equi-join
+    * each, so per-round memory is O(1) per edge regardless of degree
+    * skew:
+    *  - large-star: every node's LARGER neighbors reconnect to the
+    *    minimum of its neighborhood (min computed by groupBy, joined
+    *    back; never a collect_list);
+    *  - small-star: every node and its SMALLER neighbors reconnect to
+    *    its smallest neighbor.
+    * Both preserve connectivity; the fixpoint is a star forest whose
+    * centers are component minima, read off as (leaf → center) edges.
+    * The round count is O(log n), not the graph diameter, so
+    * chain-shaped graphs (entity-resolution link chains, temporal
+    * edges) converge too: a 60-vertex path takes 7 rounds, counting
+    * the one that detects the fixpoint. The edge count is measured
+    * before every round; once it is below the bound (and the ids are
+    * `LongType`), union-find finishes the current round's edge set,
+    * which has the input graph's components, and the remaining rounds
+    * are skipped.
+    *
+    * A graph still changing after `maxIter` rounds fails loudly rather
+    * than returning mislabeled vertices.
     *
     * @param vertices single-column DataFrame of vertex ids
     * @param edges    two-column DataFrame (id_a, id_b), undirected
@@ -815,100 +832,26 @@ object Dedup {
     val Seq(ea, eb) = edges.columns.take(2).toSeq
     val vset = vertices.select(col(idCol).as("__v"))
     // Materialised once, or an expensive upstream (LSH, jaccard) would
-    // recompute for the count and again for the finish or every round.
+    // recompute for the count and again for the finish or the rounds.
     val e1 = edges.select(col(ea).as("__src"), col(eb).as("__dst"))
       .join(vset.withColumnRenamed("__v", "__src"), Seq("__src"), "left_semi")
       .join(vset.withColumnRenamed("__v", "__dst"), Seq("__dst"), "left_semi")
       .cache()
+    val finishBelow = if (longIds(vertices, edges)) oneTaskBelowEdges else 0L
     // Force.rows, not count(): count() adds a counting aggregate whose
     // exchange costs one more job.
-    if (longIds(vertices, edges) && graft.Force.rows(e1) < oneTaskBelowEdges) {
-      val labels = finishInOneTask(e1).cache()
-      graft.Force.rows(labels)
-      e1.unpersist()
-      vertices.select(col(idCol)).distinct()
-        .join(broadcast(labels), col(idCol) === col("__id"), "left")
-        .select(col(idCol),
-          coalesce(col("__comp"), col(idCol)).as("component_id"))
-    } else propagateLabels(vertices, e1, maxIter)
-  }
-
-  /** [[connectedComponents]]'s distributed rounds over `e1`, the cached
-    * induced edge set in one orientation (`__src`, `__dst`); unpersists
-    * it once the rounds have their own copy. */
-  private def propagateLabels(vertices: DataFrame, e1: DataFrame,
-      maxIter: Int): DataFrame = {
-    val idCol = vertices.columns.head
-    // Both edge orientations plus one flagged self row per vertex,
-    // PARTITIONED ON THE JOIN KEY: every round's propagation join then
-    // reuses the cached partitioning, so only the (smaller) label side
-    // exchanges — and the label side arrives hash-partitioned on __id
-    // from the previous round's aggregation, making the join
-    // exchange-free from round 2 on. The self rows carry each vertex's
-    // old label through that same join, so a round's plan reads the
-    // previous round's labels ONCE: plan strings (printed with every
-    // nested cached plan, initial and final) then double per round
-    // instead of quadrupling. At 4× a round, the eighth round of a
-    // 60-vertex chain built a plan string of hundreds of millions of
-    // characters and ran a 4 GB driver out of memory.
-    val e = e1
-      .select(explode(array(struct(col("__src").as("s"), col("__dst").as("d")),
-        struct(col("__dst").as("s"), col("__src").as("d")))).as("__e"))
-      .select(col("__e.s").as("__src"), col("__e.d").as("__dst"),
-        lit(0).as("__self"))
-      .union(vertices.select(col(idCol).as("__src"), col(idCol).as("__dst"),
-        lit(1).as("__self")))
-      .repartition(col("__src"))
-      .cache()
-    var labels: DataFrame = null
-    // labels becomes a PROJECTION of the round's cached aggregate;
-    // unpersist must target the cached frame itself.
-    var cached: DataFrame = null
-    var iter = 0
-    var changed = 1L
-    while (changed > 0 && iter < maxIter) {
-      // Round 1 propagates IDENTITY labels, so the label join collapses
-      // to a projection of e — safe ONLY because e is already filtered
-      // to vertex endpoints (induced subgraph above): every __src is a
-      // vertex carrying its own id as label. From round 2 on every
-      // non-null __src has a label; the LEFT join only keeps the self
-      // rows of null ids, which no edge reaches.
-      val prop =
-        if (iter == 0) e.select(col("__dst").as("__id"),
-          col("__src").as("__comp"), col("__self"))
-        else e.join(labels, col("__src") === col("__id"), "left")
-          .select(col("__dst").as("__id"), col("__comp"), col("__self"))
-      // Convergence detection folds into the SAME aggregation: the
-      // self row (one per vertex, flagged) carries the old label, so
-      // "did anything improve" is a filter on the aggregate — no
-      // next⋈labels comparison join per round.
-      val agg = prop
-        .groupBy("__id").agg(min("__comp").as("__comp"),
-          min(when(col("__self") === 1, col("__comp"))).as("__old"))
-        .cache()
-      changed = agg.where(col("__comp") < col("__old")).count()
-      // Round 1 read all of e, so e is cached in full from here on.
-      if (iter == 0) e1.unpersist() else cached.unpersist()
-      cached = agg
-      labels = agg.select("__id", "__comp")
-      iter += 1
-    }
-    e.unpersist()
-    // Wrong-but-plausible labels are worse than failing: a graph whose
-    // diameter exceeds maxIter must not silently mislabel the tail.
-    if (changed > 0) {
-      if (cached != null) cached.unpersist() // don't pin a partial result
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIter iterations " +
-          s"($changed labels still changing); raise maxIter")
-    }
-    // labels stays cached: one small row per vertex, and dropping it
-    // would re-derive the whole iteration chain on first use. Deep
-    // iterations also truncate the returned plan, whose per-round
-    // growth then dominates Catalyst analysis time.
-    val out = labels.select(col("__id").as(idCol),
-      col("__comp").as("component_id"))
-    if (iter >= 8) graft.operators.Materialize.once(out) else out
+    val roots =
+      if (finishBelow > 0 && graft.Force.rows(e1) < finishBelow) {
+        val labels = finishInOneTask(e1).cache()
+        graft.Force.rows(labels)
+        e1.unpersist()
+        broadcast(labels)
+      } else starRounds(e1, vertices.schema.head.dataType, maxIter,
+        finishBelow)
+    vertices.select(col(idCol)).distinct()
+      .join(roots, col(idCol) === col("__id"), "left")
+      .select(col(idCol),
+        coalesce(col("__comp"), col(idCol)).as("component_id"))
   }
 
   /** Whether the vertex id and both edge endpoints are `LongType`, the
@@ -926,76 +869,37 @@ object Dedup {
       .toDF("__id", "__comp")
   }
 
-  /** Connected components by alternating large-star / small-star
-    * contraction (Kiveris et al., "Connected Components in MapReduce
-    * and Beyond") — the O(log n)-round alternative to
-    * [[connectedComponents]]'s min-label propagation rounds, whose
-    * count is the graph DIAMETER. Chain-shaped graphs (entity-resolution
-    * link chains, temporal edges) have diameter O(n), where propagation
-    * needs O(n) shuffles and this needs O(log n). StarComponentsSpec
-    * demonstrates exactly that: a 60-vertex path (diameter 59)
-    * converges here in 7 rounds while propagation exhausts an 8-round
-    * budget.
-    *
-    * Each round is two relational contractions over the CANONICAL edge
-    * set (hi > lo), no per-node adjacency arrays — a grouped min +
-    * equi-join each, so per-round memory is O(1) per edge regardless
-    * of degree skew:
-    *  - large-star: every node's LARGER neighbors reconnect to the
-    *    minimum of its neighborhood (min computed by groupBy, joined
-    *    back; never a collect_list);
-    *  - small-star: every node and its SMALLER neighbors reconnect to
-    *    its smallest neighbor.
-    * Both preserve connectivity; the fixpoint is a star forest whose
-    * centers are component minima, read off as (leaf → center) edges.
-    * Convergence check = one left-anti count per round over cached
-    * frames (set equality: no new edge outside old ∧ equal sizes).
-    *
-    * The edge count is measured before every round. Once it is below
-    * [[UnionFind.MaxEdges]] (and the ids are `LongType`), union-find
-    * finishes the current round's edge set in one task: it has the
-    * input graph's components, so the labels are the same, and the
-    * remaining rounds' jobs are skipped. Early rounds stay distributed
-    * at any scale.
-    *
-    * Same induced-subgraph and fail-loud contracts as
-    * [[connectedComponents]]. */
-  def connectedComponentsStar(vertices: DataFrame, edges: DataFrame,
-      maxIter: Int = 20): DataFrame =
-    connectedComponentsStar(vertices, edges, maxIter, UnionFind.MaxEdges)
-
-  /** [[connectedComponentsStar]] finishing in one task only below
-    * `oneTaskBelowEdges` edges; 0 forces the distributed rounds. */
-  private[graft] def connectedComponentsStar(vertices: DataFrame,
-      edges: DataFrame, maxIter: Int, oneTaskBelowEdges: Long): DataFrame = {
-    val idCol = vertices.columns.head
-    val Seq(ea, eb) = edges.columns.take(2).toSeq
-    val vset = vertices.select(col(idCol).as("__v"))
-    val finishBelow = if (longIds(vertices, edges)) oneTaskBelowEdges else 0L
-    // Canonical orientation (__hi > __lo), induced on the vertex set,
-    // self-loops dropped, deduplicated. Each round's edge set is
-    // localCheckpoint'ed, NOT cached: the round's plan references the
-    // previous round's frame ~6 times, so with cache alone the LOGICAL
-    // plan still grows 6^rounds nodes and Catalyst analysis, not the
-    // data, becomes the bottleneck by round 7. The checkpoint
-    // materializes AND truncates lineage, keeping every round's plan
-    // constant-size. Rounds only run on edge sets of at least
-    // `finishBelow` edges, so their blocks go to DISK_ONLY, not the
-    // MEMORY_AND_DISK default: superseded rounds are reclaimed only when
-    // the driver GCs the owning RDDs, and accumulated rounds of an
-    // |E|-scale frame can fill the protected storage region and starve
-    // execution memory — the exact OOM the scale ladder caught in
+  /** [[connectedComponents]]'s large-star / small-star rounds over `e1`,
+    * the cached induced edge set (`__src`, `__dst`), which it
+    * unpersists. Returns (`__id`, `__comp`) of type `idType` for every
+    * vertex with an edge; vertices without one label themselves. */
+  private def starRounds(e1: DataFrame,
+      idType: org.apache.spark.sql.types.DataType, maxIter: Int,
+      finishBelow: Long): DataFrame = {
+    // Canonical orientation (__hi > __lo), self-loops dropped,
+    // deduplicated. Each round's edge set is localCheckpoint'ed, NOT
+    // cached: the round's plan references the previous round's frame ~6
+    // times, so with cache alone the LOGICAL plan still grows
+    // 6^rounds nodes and Catalyst analysis, not the data, becomes the
+    // bottleneck by round 7. The checkpoint materializes AND truncates
+    // lineage, keeping every round's plan constant-size. Rounds only run
+    // on edge sets of at least `finishBelow` edges, so their blocks go
+    // to DISK_ONLY, not the MEMORY_AND_DISK default: accumulated rounds
+    // of an |E|-scale frame can fill the protected storage region and
+    // starve execution memory — the exact OOM the scale ladder caught in
     // kCore's loop at the ×160 rung. A round frame is re-read at most
-    // three times; disk blocks pin no memory.
+    // three times, and is released once the next round replaces it.
+    // Endpoints are cast to the vertex id type: they matched a vertex
+    // id in the semi-joins, but greatest/least do not resolve over an
+    // edge column of another type.
     val roundLevel = org.apache.spark.storage.StorageLevel.DISK_ONLY
-    var e = edges
-      .select(greatest(col(ea), col(eb)).as("__hi"),
-        least(col(ea), col(eb)).as("__lo"))
+    val (src, dst) = (col("__src").cast(idType), col("__dst").cast(idType))
+    var e = e1
+      .select(greatest(src, dst).as("__hi"), least(src, dst).as("__lo"))
       .where(col("__hi") =!= col("__lo"))
-      .join(vset.withColumnRenamed("__v", "__hi"), Seq("__hi"), "left_semi")
-      .join(vset.withColumnRenamed("__v", "__lo"), Seq("__lo"), "left_semi")
       .distinct()
       .localCheckpoint(true, roundLevel)
+    e1.unpersist()
     var eCount = e.count()
     var iter = 0
     var converged = eCount == 0L
@@ -1035,28 +939,35 @@ object Dedup {
       // (counts already equal) — shrinking rounds skip the join job.
       converged = nextCount == eCount &&
         next.join(e, Seq("__hi", "__lo"), "left_anti").isEmpty
+      release(e)
       e = next
       eCount = nextCount
       iter += 1
     }
     val finish = !converged && eCount < finishBelow
     if (!converged && !finish && eCount > 0) {
+      release(e)
       throw new IllegalStateException(
-        s"connectedComponentsStar did not converge in $maxIter rounds; " +
+        s"connectedComponents did not converge in $maxIter rounds; " +
           "raise maxIter")
     }
     // Fixpoint stars: every non-center vertex is __hi in exactly one
-    // (leaf → center) edge; centers and isolated vertices label
-    // themselves. min() guards the (never-observed) multi-edge case.
-    // The one-task finish labels every endpoint instead.
-    val roots =
-      if (finish) broadcast(finishInOneTask(e).toDF("__id", "__root"))
-      else e.groupBy(col("__hi").as("__id")).agg(min("__lo").as("__root"))
-    vertices.select(col(idCol))
-      .join(roots, col(idCol) === col("__id"), "left")
-      .select(col(idCol),
-        coalesce(col("__root"), col(idCol)).as("component_id"))
+    // (leaf → center) edge; centers label themselves. min() guards the
+    // (never-observed) multi-edge case. The one-task finish labels
+    // every endpoint instead.
+    if (finish) broadcast(finishInOneTask(e))
+    else e.groupBy(col("__hi").as("__id")).agg(min("__lo").as("__comp"))
   }
+
+  /** Drops a localCheckpoint'ed frame's blocks now. Otherwise they stay
+    * until the driver happens to GC the frame's RDD, and a call would
+    * leave one persisted RDD per round behind. */
+  private def release(checkpointed: DataFrame): Unit =
+    checkpointed.queryExecution.logical match {
+      case r: org.apache.spark.sql.execution.LogicalRDD =>
+        r.rdd.unpersist(blocking = false)
+      case _ =>
+    }
 
   /** Per-vertex triangle counts over an undirected pair graph — the
     * clustering-coefficient numerator, the standard "is this near-dup
@@ -1133,11 +1044,12 @@ object Dedup {
     * community seed in interaction graphs.
     *
     * Each round is a grouped degree count + two semi-joins (shuffle on
-    * the edge key), with [[connectedComponentsStar]]'s localCheckpoint
-    * lineage truncation; round count is bounded by the peeling depth
-    * (typically a handful — 5 on the test embedding graph), never the
-    * vertex count. Converged when an entire round drops nothing; fails
-    * loudly past `maxIter` rather than returning a half-peeled graph.
+    * the edge key), truncating lineage with a localCheckpoint as the
+    * star rounds of [[connectedComponents]] do; round count is bounded
+    * by the peeling depth (typically a handful — 5 on the test
+    * embedding graph), never the vertex count. Converged when an entire
+    * round drops nothing; fails loudly past `maxIter` rather than
+    * returning a half-peeled graph.
     * Peeling is idempotent at the fixpoint, which is what lets a
     * fixed-depth replay (the oracle) reproduce the converged result.
     * Returns (vertex, core_degree) over the surviving subgraph. */

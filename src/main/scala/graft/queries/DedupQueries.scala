@@ -1771,11 +1771,7 @@ object DedupQueries {
     val edges = Dedup
       .jaccardNeighbors(survivors, "text", "doc_id", 3, "source", 0.5)
       .select("id_a", "id_b")
-    // Star contraction, not label propagation: same min-id components
-    // (both are pinned to the identical recursive oracle), O(log n)
-    // rounds vs diameter-bound — measured 0.86 s vs 18.7 s on the
-    // qd_components pair when the star variant landed in r8.
-    val comp = Dedup.connectedComponentsStar(survivors.select("doc_id"), edges)
+    val comp = Dedup.connectedComponents(survivors.select("doc_id"), edges)
     withEx
       .join(comp.select(col("doc_id").as("__exc"), col("component_id")),
         Seq("__exc"))
@@ -2408,20 +2404,13 @@ object DedupQueries {
     * cluster) — the one-page read that tells a dedup reviewer whether
     * the graph is healthy near-dup pairs (sizes 2-3) or a degenerate
     * hairball (one giant component = the LSH threshold is wrong). Two
-    * tiny rollups over the component assignment — the expensive part is
-    * the components pass, so it runs on the O(log n)-round star
-    * contraction ([[Dedup.connectedComponentsStar]]): label propagation
-    * here cost a round count tracking graph DIAMETER, the wrong bound
-    * for the chain-shaped clusters this report exists to flag (both
-    * forms measure ~1 s on the test graph; the star bound is what
-    * survives a deep graph). Everything after runs on ≤ |docs| rows
-    * collapsing to ≤ |distinct sizes|. Component IDs (min-id canonical)
-    * are algorithm-invariant, so the oracle is unchanged. */
+    * tiny rollups over the component assignment, on ≤ |docs| rows
+    * collapsing to ≤ |distinct sizes|. */
   def qdClusterReport(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.load(spark, dir, "documents")
     val edges = Dedup.jaccardNeighbors(docs, "text", "doc_id", 3, "source", 0.5)
       .select("id_a", "id_b")
-    Dedup.connectedComponentsStar(docs.select("doc_id"), edges)
+    Dedup.connectedComponents(docs.select("doc_id"), edges)
       .groupBy("component_id")
       .agg(count(lit(1)).as("__sz"))
       .groupBy(col("__sz").as("cluster_size"))
@@ -2464,21 +2453,6 @@ object DedupQueries {
       |FROM sizes
       |GROUP BY sz
       |ORDER BY cluster_size""".stripMargin
-
-  /** §2.25i — connected components by alternating large-star/small-star
-    * contraction over the same jaccard≥0.5 pair graph as
-    * [[qdComponents]] — identical output contract (min-id canonical),
-    * O(log n) rounds instead of O(diameter), the swap-in for
-    * chain-shaped duplicate graphs where min-label propagation's round
-    * count explodes. Shares qd_components' oracle verbatim. */
-  def qdComponentsStar(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.load(spark, dir, "documents")
-    val edges = Dedup.jaccardNeighbors(docs, "text", "doc_id", 3, "source", 0.5)
-      .select("id_a", "id_b")
-    Dedup.connectedComponentsStar(docs.select("doc_id"), edges)
-      .withColumn("is_canonical", col("doc_id") === col("component_id"))
-      .orderBy("doc_id")
-  }
 
   /** §2.24h — content-defined chunking (CDC) dedup stats: documents
     * split at CONTENT-DERIVED boundaries (after any token whose md5
@@ -2718,7 +2692,8 @@ object DedupQueries {
     "qd_clustering" -> (qdClustering _),
     "qd_kcore" -> (qdKcore _),
     "qd_pagerank" -> (qdPagerank _),
-    "qd_components_star" -> (qdComponentsStar _),
+    // §2.25i: qd_components under its own contract name.
+    "qd_components_star" -> (qdComponents _),
     "qd_cluster_report" -> (qdClusterReport _),
     "qd_winnow_pairs" -> (qdWinnowPairs _),
     "qd_source_overlap" -> (qdSourceOverlap _),

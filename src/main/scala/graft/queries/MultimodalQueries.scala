@@ -353,10 +353,9 @@ object MultimodalQueries {
     * total bytes, and the bytes a keep-one-representative policy
     * frees (canonical = min doc id, the component id itself). This is
     * the multimodal face of the dedup family's canonical election:
-    * pairs say WHAT matches, clusters say what to DELETE. Components
-    * run on the O(log n) star-contraction operator; the per-cluster
-    * rollup is one aggregate over the assignment, exact integer byte
-    * arithmetic throughout.
+    * pairs say WHAT matches, clusters say what to DELETE. The
+    * per-cluster rollup is one aggregate over the component assignment,
+    * exact integer byte arithmetic throughout.
     *
     * Edge input is the BANDED candidate generator
     * ([[bandedCandidates]], §2.35g) — Σ buckets C(size,2) work with
@@ -369,7 +368,7 @@ object MultimodalQueries {
     val docs = Tables.load(spark, dir, "documents")
     val edges = bandedCandidates(spark, dir).select("id_a", "id_b")
     graft.dedup.Dedup
-      .connectedComponentsStar(docs.select("doc_id"), edges)
+      .connectedComponents(docs.select("doc_id"), edges)
       .join(docs.select(col("doc_id"),
         length(col("text").cast("binary")).cast("long").as("__b")),
         Seq("doc_id"))

@@ -41,7 +41,7 @@ class ComponentsJobsSpec extends SparkSpec {
   test("the one-task finish runs a bounded number of jobs, fewer than the rounds") {
     val oneTask = jobs(UnionFind.MaxEdges)
     val rounds = jobs(0L)
-    // Measured on local[4]: 8 jobs one-task, 20 with the rounds.
+    // Measured on local[4]: 8 jobs one-task, 31 with the star rounds.
     assert(oneTask <= 8, s"one-task finish ran $oneTask jobs, rounds $rounds")
     assert(oneTask < rounds, s"one task $oneTask jobs, rounds $rounds")
   }
