@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.graft.BlockLocations
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Real-executor smoke: everything else in this repo measures under
   * local[n] — one JVM, no serialization boundary, no executor loss.
@@ -12,8 +13,9 @@ import org.apache.spark.sql.SparkSession
   *
   *  - `localCheckpoint` path (the single-box default): blocks are
   *    executor-local and non-replicated, lineage is truncated — after
-  *    the loss, re-reading the materialized frame must FAIL. Expected,
-  *    documented, recorded.
+  *    the loss of an executor the block manager lists as holding a
+  *    block of the materialized frame, re-reading it must FAIL.
+  *    Expected, documented, recorded.
   *  - `spark.graft.checkpointDir` path: reliable `checkpoint` files
   *    survive any executor loss — the same re-read must RECOVER with
   *    identical rows.
@@ -50,25 +52,40 @@ object ClusterSmoke {
     "qd_minhash_pairs", "qd_kcore", "qd_kcore_auto", "qd_simhash_pairs",
     "qd_sorted_neighbors", "qe_bootstrap", "qc_profile", "qe_sessions")
 
-  private def executorPids(): Seq[Long] = {
+  /** Executor JVMs on this machine: executor id → pid. */
+  private def executorProcesses(): Map[String, Long] = {
     import scala.jdk.CollectionConverters._
-    ProcessHandle.allProcesses().iterator().asScala
-      .filter(p => p.info().commandLine().map[Boolean](
-        _.contains("CoarseGrainedExecutorBackend")).orElse(false))
-      .map(_.pid()).toSeq.sorted
+    val executorId =
+      "CoarseGrainedExecutorBackend.* --executor-id (\\S+)".r.unanchored
+    ProcessHandle.allProcesses().iterator().asScala.flatMap { p =>
+      p.info().commandLine().orElse("") match {
+        case executorId(id) => Some(id -> p.pid())
+        case _ => None
+      }
+    }.toMap
   }
+
+  private def executorPids(): Seq[Long] =
+    executorProcesses().values.toSeq.sorted
 
   private def liveExecutors(spark: SparkSession): Int =
     // memoryStatus lists the driver's BlockManager too; executors only.
     spark.sparkContext.getExecutorMemoryStatus.size - 1
 
-  /** Kill one executor JVM and wait until the scheduler sees the loss
+  /** The pid of an executor holding a block of `frame`'s barrier RDD,
+    * per the block manager. */
+  private def blockHolder(frame: DataFrame): Option[Long] =
+    frame.queryExecution.logical match {
+      case r: org.apache.spark.sql.execution.LogicalRDD =>
+        BlockLocations.executors(r.rdd).flatMap(executorProcesses().get)
+          .headOption
+      case _ => None
+    }
+
+  /** Kill an executor JVM and wait until the scheduler sees the loss
     * (or a replacement arrives — either way the KILLED executor's
     * blocks are gone, which is what the demonstration needs). */
-  private def killOneExecutor(spark: SparkSession): Long = {
-    val before = executorPids()
-    require(before.nonEmpty, "no executor processes found to kill")
-    val victim = before.head
+  private def killExecutor(victim: Long): Long = {
     ProcessHandle.of(victim).ifPresent(p => p.destroyForcibly())
     val deadline = System.nanoTime() + 60e9.toLong
     while (executorPids().contains(victim) && System.nanoTime() < deadline)
@@ -155,22 +172,25 @@ object ClusterSmoke {
         .agg(sum("l_quantity").as("q"), count(lit(1)).as("n"))
 
       // Leg A: localCheckpoint (the default). Blocks are executor-local
-      // and non-replicated; losing one executor after materialization
+      // and non-replicated; losing an executor that holds one of them
       // must make the re-read fail (lineage truncated, no recompute).
       {
         val mat = graft.operators.Materialize.once(buildFrame())
         val rows1 = Force.rows(mat)
-        val victim = killOneExecutor(spark)
-        val outcome =
-          try {
-            val rows2 = Force.rows(mat)
-            // All blocks happened to land on the survivor — the demo is
-            // inconclusive, record it as such rather than as recovery.
-            s""""outcome":"survived_unexpectedly","rows":$rows2"""
-          } catch { case e: Throwable =>
-            s""""outcome":"failed_as_expected","error":"${JsonFmt.err(e)}""""
-          }
-        emit(s"""{"mode":"$master","recovery":"localCheckpoint","rows_before":$rows1,"killed_pid":$victim,$outcome}""")
+        blockHolder(mat) match {
+          case None =>
+            emit(s"""{"mode":"$master","recovery":"localCheckpoint","rows_before":$rows1,"outcome":"no_block_holder"}""")
+          case Some(holder) =>
+            val victim = killExecutor(holder)
+            val outcome =
+              try {
+                val rows2 = Force.rows(mat)
+                s""""outcome":"survived_unexpectedly","rows":$rows2"""
+              } catch { case e: Throwable =>
+                s""""outcome":"failed_as_expected","error":"${JsonFmt.err(e)}""""
+              }
+            emit(s"""{"mode":"$master","recovery":"localCheckpoint","rows_before":$rows1,"killed_pid":$victim,$outcome}""")
+        }
       }
 
       // Wait for the standalone master to relaunch the executor so leg
@@ -188,7 +208,9 @@ object ClusterSmoke {
         spark.conf.set("spark.graft.checkpointDir", ckpt)
         val mat = graft.operators.Materialize.once(buildFrame())
         val rows1 = Force.rows(mat)
-        val victim = killOneExecutor(spark)
+        val pids = executorPids()
+        require(pids.nonEmpty, "no executor processes found to kill")
+        val victim = killExecutor(pids.head)
         val outcome =
           try {
             val rows2 = Force.rows(mat)

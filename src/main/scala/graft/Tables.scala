@@ -59,10 +59,9 @@ object Tables {
     // file count alone is below the threshold) and must not pay a
     // full-table shuffle of its text/embeddings on every read.
     val target = spark.sparkContext.defaultParallelism
-    val mode = spark.conf.get("spark.graft.rebalance", "auto")
-    if (mode != "off" && (fatTables(name) || computeHeavy) &&
+    if ((fatTables(name) || computeHeavy) &&
         scanParallelism(spark, s"$dir/$name.parquet", target) < target / 2)
-      rebalance(spark, dir, name, df, target, mode)
+      rebalance(spark, dir, name, df, target)
     else df
   }
 
@@ -95,17 +94,15 @@ object Tables {
   /** Tables whose scans feed real per-row compute — shingling, md5
     * signatures, dot products — that would otherwise run serially inside
     * a single-row-group file's one scan task. ONLY those: an r8 A/B on
-    * the single-row-group sf0.1 drop (modes off/repartition/relayout over
-    * lineitem-, orders-, customer- and part-bound queries, 3 warm runs
-    * each) measured `off` fastest on every relational query — the serial
-    * scan of an 11 MB lineitem costs ~0.2 s while the extra exchange
-    * costs more, and every agg/join/window re-parallelizes at its own
-    * shuffle anyway. The r7 bench readings that suggested extending the
-    * gate (q_set_ops 8 s etc.) were cold-session + ambient noise, not
-    * scan serialization: the same queries steady-state at 0.15-0.45 s
-    * with the gate off on the same files. The knob
-    * `spark.graft.rebalance` (off|repartition|relayout|auto) remains for
-    * corpora where the trade flips. */
+    * the single-row-group sf0.1 drop (no rebalance vs repartition vs
+    * relayout over lineitem-, orders-, customer- and part-bound queries,
+    * 3 warm runs each) measured no rebalance fastest on every relational
+    * query — the serial scan of an 11 MB lineitem costs ~0.2 s while the
+    * extra exchange costs more, and every agg/join/window re-parallelizes
+    * at its own shuffle anyway. The r7 bench readings that suggested
+    * extending the gate (q_set_ops 8 s etc.) were cold-session + ambient
+    * noise, not scan serialization: the same queries steady-state at
+    * 0.15-0.45 s with the gate off on the same files. */
   private val fatTables: Set[String] =
     Set("documents", "embeddings")
 
@@ -129,7 +126,7 @@ object Tables {
   private val relayoutMinBytes = 8L << 20
 
   private def rebalance(spark: SparkSession, dir: String, name: String,
-      df: DataFrame, target: Int, mode: String): DataFrame = {
+      df: DataFrame, target: Int): DataFrame = {
     val hconf = spark.sparkContext.hadoopConfiguration
     val src = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
     val fs = src.getFileSystem(hconf)
@@ -137,8 +134,7 @@ object Tables {
       try fs.listStatus(src).filter(_.isFile).sortBy(_.getPath.getName)
       catch { case _: Exception => Array.empty[org.apache.hadoop.fs.FileStatus] }
     val bytes = files.map(_.getLen).sum
-    if (mode != "relayout" && (mode == "repartition" || bytes < relayoutMinBytes))
-      return df.repartition(target)
+    if (bytes < relayoutMinBytes) return df.repartition(target)
     val sig = files.map(f =>
       s"${f.getPath.getName}:${f.getLen}:${f.getModificationTime}")
       .mkString(",")

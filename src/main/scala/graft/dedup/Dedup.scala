@@ -2,7 +2,9 @@ package graft.dedup
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel.DISK_ONLY
 import graft.functions.Portable._
+import graft.operators.Materialize
 
 /** Deduplication operators for large text/embedding corpora —
   * SURVEY.md §2 items 20-25.
@@ -651,31 +653,20 @@ object Dedup {
     // slim pairs), and it WON every measured size — sf4: 4.1 s vs
     // 7.5 s broadcasting the same ~600 MB frame (driver collect +
     // relation rebuild outweigh the avoided exchange); sf16: 17.0 s /
-    // zero spill vs the old sort-merge's 66.3 s / 28 GB. Broadcast is
-    // explicit opt-in (spark.graft.snm.maxBroadcastBytes > 0, with a
-    // token-count upper-bound probe — shingles of t tokens number
-    // ≤ t − n + 1, so no md5/distinct pass) for deployments whose pair
-    // volume dwarfs a tiny corpus; unlike the tf-idf scorer there is
-    // no measured regime where it wins here, so it earns no default.
-    // Audit mode (spark.graft.materialize=false) skips the probe so
-    // plan inspection stays job-free.
-    val spark = df.sparkSession
-    val materialize =
-      spark.conf.get("spark.graft.materialize", "true").toBoolean
-    val maxBcast = graft.operators.MemGate.gateBytes(
-      spark, "spark.graft.snm.maxBroadcastBytes", default = 0L)
-    // One size probe serves both join-strategy gates (broadcast opt-in
-    // AND the SHJ build bound below): token-count upper bound, no
-    // md5/distinct pass. Audit mode stays job-free (None → the
+    // zero spill vs the old sort-merge's 66.3 s / 28 GB.
+    // One size probe serves the SHJ build bound below: a token-count
+    // upper bound (shingles of t tokens number ≤ t − n + 1, so no
+    // md5/distinct pass). Audit mode (spark.graft.materialize=false)
+    // skips it so plan inspection stays job-free (None → the
     // default-shaped plan).
+    val spark = df.sparkSession
     val frameBytes: Option[Long] =
-      if (!materialize) None
+      if (!Materialize.enabled(spark)) None
       else {
         val s = df.agg(count(lit(1)).as("n"),
           coalesce(sum(size(tokens(col(textCol)))), lit(0L)).as("t")).head()
         Some(s.getLong(0) * 64L + s.getLong(1) * 56L)
       }
-    val useBroadcast = maxBcast > 0 && frameBytes.exists(_ <= maxBcast)
     // SHJ's build side (the per-partition slice of the shingle frame)
     // CANNOT spill — a corpus large enough that frameBytes /
     // shuffle.partitions outgrows task memory would OOM tasks where
@@ -689,23 +680,19 @@ object Dedup {
     // 19 MB build per task); the gate exists for the 100 TB corpus
     // whose operator forgot to scale spark.sql.shuffle.partitions.
     val shjGate = graft.operators.MemGate.gateBytes(
-      spark, "spark.graft.snm.shjMaxBuildBytes",
-      default = graft.operators.MemGate.defaultMaxBroadcastBytes(spark))
+      spark, "spark.graft.snm.shjMaxBuildBytes")
     val shufflePartitions = math.max(1,
       try spark.conf.get("spark.sql.shuffle.partitions", "200").toInt
       catch { case _: NumberFormatException => 200 })
     val useShj = frameBytes.forall(_ / shufflePartitions <= shjGate)
-    def hinted(d: DataFrame): DataFrame =
-      if (useBroadcast) broadcast(d)
-      else if (useShj) d.hint("shuffle_hash")
-      else d.hint("merge")
     // ONE hinted frame serves both probes, un-aliased, so the two
-    // joins' exchange subplans are identical and ReuseExchange keeps a
-    // single broadcast relation resident per executor (the qd_tfidf
+    // joins' exchange subplans are identical and ReuseExchange can
+    // serve both from one shuffle of the shingle frame (the qd_tfidf
     // lesson — per-side aliases between exchange and join defeat the
     // reuse and double the footprint). Renames happen on the joined
     // output.
-    val attach = hinted(sets.select(col("__id"), col("__sh"), col("__sz")))
+    val attach = sets.select(col("__id"), col("__sh"), col("__sz"))
+      .hint(if (useShj) "shuffle_hash" else "merge")
     cand
       .join(attach, cand("id_a") === attach("__id"))
       .drop("__id")
@@ -877,28 +864,16 @@ object Dedup {
       idType: org.apache.spark.sql.types.DataType, maxIter: Int,
       finishBelow: Long): DataFrame = {
     // Canonical orientation (__hi > __lo), self-loops dropped,
-    // deduplicated. Each round's edge set is localCheckpoint'ed, NOT
-    // cached: the round's plan references the previous round's frame ~6
-    // times, so with cache alone the LOGICAL plan still grows
-    // 6^rounds nodes and Catalyst analysis, not the data, becomes the
-    // bottleneck by round 7. The checkpoint materializes AND truncates
-    // lineage, keeping every round's plan constant-size. Rounds only run
-    // on edge sets of at least `finishBelow` edges, so their blocks go
-    // to DISK_ONLY, not the MEMORY_AND_DISK default: accumulated rounds
-    // of an |E|-scale frame can fill the protected storage region and
-    // starve execution memory — the exact OOM the scale ladder caught in
-    // kCore's loop at the ×160 rung. A round frame is re-read at most
-    // three times, and is released once the next round replaces it.
-    // Endpoints are cast to the vertex id type: they matched a vertex
-    // id in the semi-joins, but greatest/least do not resolve over an
-    // edge column of another type.
-    val roundLevel = org.apache.spark.storage.StorageLevel.DISK_ONLY
+    // deduplicated. Each round is a DISK_ONLY barrier (see Materialize),
+    // released once the next round replaces it. Endpoints are cast to
+    // the vertex id type: they matched a vertex id in the semi-joins,
+    // but greatest/least do not resolve over an edge column of another
+    // type.
     val (src, dst) = (col("__src").cast(idType), col("__dst").cast(idType))
-    var e = e1
+    var e = Materialize.now(e1
       .select(greatest(src, dst).as("__hi"), least(src, dst).as("__lo"))
       .where(col("__hi") =!= col("__lo"))
-      .distinct()
-      .localCheckpoint(true, roundLevel)
+      .distinct(), DISK_ONLY)
     e1.unpersist()
     var eCount = e.count()
     var iter = 0
@@ -928,25 +903,24 @@ object Dedup {
       // small-star on the canonical (down-pointing) edges: per hi, all
       // smaller neighbors and hi itself re-attach to min(lo).
       val smins = large.groupBy("__hi").agg(min(col("__lo")).as("__m"))
-      val next = large.join(smins, "__hi")
+      val next = Materialize.now(large.join(smins, "__hi")
         .where(col("__lo") =!= col("__m"))
         .select(col("__lo").as("__hi"), col("__m").as("__lo"))
         .union(smins.select(col("__hi"), col("__m").as("__lo")))
-        .distinct()
-        .localCheckpoint(true, roundLevel)
+        .distinct(), DISK_ONLY)
       val nextCount = next.count()
       // Set equality needs the anti-join only on candidate fixpoints
       // (counts already equal) — shrinking rounds skip the join job.
       converged = nextCount == eCount &&
         next.join(e, Seq("__hi", "__lo"), "left_anti").isEmpty
-      release(e)
+      Materialize.release(e)
       e = next
       eCount = nextCount
       iter += 1
     }
     val finish = !converged && eCount < finishBelow
     if (!converged && !finish && eCount > 0) {
-      release(e)
+      Materialize.release(e)
       throw new IllegalStateException(
         s"connectedComponents did not converge in $maxIter rounds; " +
           "raise maxIter")
@@ -958,16 +932,6 @@ object Dedup {
     if (finish) broadcast(finishInOneTask(e))
     else e.groupBy(col("__hi").as("__id")).agg(min("__lo").as("__comp"))
   }
-
-  /** Drops a localCheckpoint'ed frame's blocks now. Otherwise they stay
-    * until the driver happens to GC the frame's RDD, and a call would
-    * leave one persisted RDD per round behind. */
-  private def release(checkpointed: DataFrame): Unit =
-    checkpointed.queryExecution.logical match {
-      case r: org.apache.spark.sql.execution.LogicalRDD =>
-        r.rdd.unpersist(blocking = false)
-      case _ =>
-    }
 
   /** Per-vertex triangle counts over an undirected pair graph — the
     * clustering-coefficient numerator, the standard "is this near-dup
@@ -988,18 +952,17 @@ object Dedup {
     * @param edges two-column (id_a, id_b) undirected; self-loops and
     *              duplicates dropped. Returns (vertex, n_triangles) for
     *              vertices in ≥ 1 triangle. */
-  def trianglesPerVertex(edges: DataFrame): DataFrame = {
+  def trianglesPerVertex(edges: DataFrame): DataFrame =
+    // Consumed three times (degrees, orientation, closure probe).
+    trianglesOfCanonical(Materialize.now(canonicalEdges(edges)))
+
+  /** The undirected edge set of `edges`' first two columns as
+    * (`__a` < `__b`): self-loops dropped, duplicates removed. */
+  private def canonicalEdges(edges: DataFrame): DataFrame = {
     val Seq(ea, eb) = edges.columns.take(2).toSeq
-    val e = edges.select(least(col(ea), col(eb)).as("__a"),
+    edges.select(least(col(ea), col(eb)).as("__a"),
         greatest(col(ea), col(eb)).as("__b"))
-      // Consumed three times (degrees, orientation, closure probe).
-      // localCheckpoint, not cache(): blocks are owned by the RDD and
-      // reclaimed by the ContextCleaner when the frame goes out of
-      // scope, so repeated invocations in a long-lived session cannot
-      // accumulate pinned CacheManager entries.
       .where(col("__a") =!= col("__b")).distinct()
-      .localCheckpoint()
-    trianglesOfCanonical(e)
   }
 
   /** Core of [[trianglesPerVertex]] over an ALREADY-canonical
@@ -1044,8 +1007,9 @@ object Dedup {
     * community seed in interaction graphs.
     *
     * Each round is a grouped degree count + two semi-joins (shuffle on
-    * the edge key), truncating lineage with a localCheckpoint as the
-    * star rounds of [[connectedComponents]] do; round count is bounded
+    * the edge key), a DISK_ONLY barrier released once the next round
+    * replaces it, as the star rounds of [[connectedComponents]] are;
+    * round count is bounded
     * by the peeling depth (typically a handful — 5 on the test
     * embedding graph), never the vertex count. Converged when an entire
     * round drops nothing; fails loudly past `maxIter` rather than
@@ -1055,20 +1019,7 @@ object Dedup {
     * Returns (vertex, core_degree) over the surviving subgraph. */
   def kCore(edges: DataFrame, k: Int, maxIter: Int = 14): DataFrame = {
     require(k >= 1, "k must be positive")
-    val Seq(ea, eb) = edges.columns.take(2).toSeq
-    // DISK_ONLY round checkpoints, not the MEMORY_AND_DISK default:
-    // superseded rounds' blocks are freed only when the driver GCs the
-    // owning RDDs, and at the ×160 scale rung the accumulated rounds
-    // filled the protected storage region and starved execution memory
-    // outright (SparkOutOfMemoryError UNABLE_TO_ACQUIRE_MEMORY — found
-    // by the scale ladder). Disk blocks pin no memory, each round's
-    // frame is read back at most twice, and the dead-block backlog is
-    // bounded by disk, which the same rung has 40 GB of headroom on.
-    val roundLevel = org.apache.spark.storage.StorageLevel.DISK_ONLY
-    var e = edges.select(least(col(ea), col(eb)).as("__a"),
-        greatest(col(ea), col(eb)).as("__b"))
-      .where(col("__a") =!= col("__b")).distinct()
-      .localCheckpoint(true, roundLevel)
+    var e = Materialize.now(canonicalEdges(edges), DISK_ONLY)
     var eCount = e.count()
     var iter = 0
     var stable = eCount == 0L
@@ -1077,19 +1028,21 @@ object Dedup {
         .union(e.select(col("__b").as("__v")))
         .groupBy("__v").agg(count(lit(1)).as("__d"))
       val keep = deg.where(col("__d") >= k).select("__v")
-      val next = e
+      val next = Materialize.now(e
         .join(keep.withColumnRenamed("__v", "__a"), Seq("__a"), "left_semi")
-        .join(keep.withColumnRenamed("__v", "__b"), Seq("__b"), "left_semi")
-        .localCheckpoint(true, roundLevel)
+        .join(keep.withColumnRenamed("__v", "__b"), Seq("__b"), "left_semi"),
+        DISK_ONLY)
       val n = next.count()
       // No edge dropped ⇒ every surviving endpoint already had degree
       // ≥ k ⇒ fixpoint.
       stable = n == eCount
+      Materialize.release(e)
       e = next
       eCount = n
       iter += 1
     }
     if (!stable && eCount > 0) {
+      Materialize.release(e)
       throw new IllegalStateException(
         s"kCore did not stabilise in $maxIter rounds; raise maxIter")
     }
@@ -1106,7 +1059,7 @@ object Dedup {
     *
     * Each iteration is one join of the edge list with the current rank
     * frame (shuffle on the vertex key, map-side combinable sum) with
-    * localCheckpoint lineage truncation; the undirected graph has no
+    * [[Materialize.now]] lineage truncation; the undirected graph has no
     * dangling vertices (every endpoint has degree ≥ 1), so total mass
     * stays exactly 1 and no dangling redistribution pass is needed.
     * Cross-engine exactness: per-edge contributions pr/deg are
@@ -1119,7 +1072,6 @@ object Dedup {
   def pageRank(edges: DataFrame, iterations: Int = 10,
       damping: Double = 0.85): DataFrame = {
     require(iterations >= 1, "iterations must be positive")
-    val Seq(ea, eb) = edges.columns.take(2).toSeq
     // Canonical edge set materialized before the two-way union (r14):
     // the union inlines `und` twice and the degree join references the
     // directed frame again, so the upstream edge generator (LSH
@@ -1128,10 +1080,7 @@ object Dedup {
     // of the duplication but not across the checkpoint job boundary.
     // One block-backed copy of the canonical edges makes every
     // downstream pass (union, degree count, weight join) read blocks.
-    val und = graft.operators.Materialize.once(
-      edges.select(least(col(ea), col(eb)).as("__a"),
-          greatest(col(ea), col(eb)).as("__b"))
-        .where(col("__a") =!= col("__b")).distinct())
+    val und = Materialize.once(canonicalEdges(edges))
     val directed = und.select(col("__a").as("__src"), col("__b").as("__dst"))
       .union(und.select(col("__b").as("__src"), col("__a").as("__dst")))
     val deg = directed.groupBy("__src").agg(count(lit(1)).as("__deg"))
@@ -1147,10 +1096,9 @@ object Dedup {
     // hash-partitioned big side satisfies the join's distribution
     // requirement outright — only the (|V|-row) rank frame exchanges
     // each round, never the (|E|-row) edge frame.
-    val weighted = directed.join(deg, Seq("__src"))
+    val weighted = Materialize.now(directed.join(deg, Seq("__src"))
       .select(col("__src"), col("__dst"), col("__deg").cast("double").as("__d"))
-      .repartition(col("__src"))
-      .localCheckpoint()
+      .repartition(col("__src")))
     // Vertex set and count come FROM the checkpointed edge frame, not
     // from `deg` (r14): deg embeds the whole upstream edge build (LSH
     // banding + cosine for the contract queries), so `deg.count()` and
@@ -1158,7 +1106,7 @@ object Dedup {
     // three ~19 s-task executions per query run. distinct __src over
     // checkpoint blocks is the same vertex set (every source appears in
     // weighted; the join is inner on deg's own key), and n is its count.
-    val vertices = weighted.select("__src").distinct().localCheckpoint()
+    val vertices = Materialize.now(weighted.select("__src").distinct())
     val n = vertices.count().toDouble
     // Empty graph: no vertices, no ranks — return the empty frame
     // instead of letting the 1/n and teleport constants fold into a
@@ -1184,7 +1132,7 @@ object Dedup {
       // checkpoints made the barrier — not the math — the dominant
       // cost; three chained iterations keep the plan shallow enough
       // for the optimizer while amortizing the barrier 3×.
-      if (i % 3 == 0 || i == iterations) pr = pr.localCheckpoint()
+      if (i % 3 == 0 || i == iterations) pr = Materialize.now(pr)
     }
     pr.select(col("__src").as("vertex"), round(col("__pr"), 9).as("pagerank"))
   }
@@ -1213,11 +1161,7 @@ object Dedup {
     * Returns (rank, id_a, id_b, n_common, aa_score). */
   def adamicAdar(edges: DataFrame, maxCenterDegree: Int = 64,
       topN: Int = 50): DataFrame = {
-    val Seq(ea, eb) = edges.columns.take(2).toSeq
-    val e = edges.select(least(col(ea), col(eb)).as("__a"),
-        greatest(col(ea), col(eb)).as("__b"))
-      .where(col("__a") =!= col("__b")).distinct()
-      .localCheckpoint()
+    val e = Materialize.now(canonicalEdges(edges))
     val nbr = e.select(col("__a").as("__w"), col("__b").as("__u"))
       .union(e.select(col("__b").as("__w"), col("__a").as("__u")))
     val deg = nbr.groupBy("__w").agg(count(lit(1)).as("__d"))
@@ -1257,18 +1201,12 @@ object Dedup {
     * (true duplicate group), ≈0 a thin chain gluing unrelated docs.
     * Returns (vertex, degree, n_triangles, clustering_coef). */
   def clusteringCoefficient(edges: DataFrame): DataFrame = {
-    val Seq(ea, eb) = edges.columns.take(2).toSeq
     // Materialize the canonical edge set HERE and hand it to the
     // triangle core: the upstream edge generation (the LSH-bucketed
     // cosine join for the embedding graph) is the dominant cost, and
     // without sharing it would run twice — once for the degree count,
-    // once inside the triangle counter. localCheckpoint, not cache():
-    // blocks die with the frame reference instead of pinning a
-    // CacheManager entry across invocations.
-    val e = edges.select(least(col(ea), col(eb)).as("__a"),
-        greatest(col(ea), col(eb)).as("__b"))
-      .where(col("__a") =!= col("__b")).distinct()
-      .localCheckpoint()
+    // once inside the triangle counter.
+    val e = Materialize.now(canonicalEdges(edges))
     val deg = e.select(col("__a").as("vertex"))
       .union(e.select(col("__b").as("vertex")))
       .groupBy("vertex").agg(count(lit(1)).as("degree"))
@@ -1383,7 +1321,7 @@ object Dedup {
   def lshCosinePairs(df: DataFrame, vecCol: String, idCol: String,
       dims: Int, minCosine: Double): DataFrame = {
     val planes =
-      if (!df.sparkSession.conf.get("spark.graft.materialize", "true").toBoolean) 4
+      if (!Materialize.enabled(df.sparkSession)) 4
       else autoPlanes(df.count())
     lshCosinePairs(df, vecCol, idCol, planes, dims, minCosine)
   }

@@ -399,8 +399,6 @@ object PlanParser {
           cache = node.path("cache").asBoolean(false),
           outputPath = optText(node, "outputPath"),
           tableName = optText(node, "tableName"))
-      case "plan" =>
-        PlanCommand(planFromNode(params, baseDir))
       case other =>
         throw new IllegalArgumentException(
           s"command must be assertion, diff, view, schema, dedup, profile, sample, drift, checksum, sprt, topn, or plan; got '$other'")

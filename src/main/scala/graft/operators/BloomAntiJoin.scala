@@ -57,12 +57,11 @@ object BloomAntiJoin {
       expectedItems: Long = 1000000L, numBits: Long = 8388608L): DataFrame = {
     // The blocklist is consumed TWICE — once to build the Bloom literal,
     // once as the left-anti probe side. Pin one materialization
-    // (localCheckpoint: blocklists are small by contract, and blocks die
-    // with the frame reference): a nondeterministic or recomputed
-    // blocklist could otherwise diverge between the two reads, making a
-    // key bloom-negative yet present in the join side — wrongly
-    // surviving the anti-join.
-    val keys = blockList.select(col(blockKeyCol).as("__bk")).localCheckpoint()
+    // (blocklists are small by contract): a nondeterministic or
+    // recomputed blocklist could otherwise diverge between the two
+    // reads, making a key bloom-negative yet present in the join side —
+    // wrongly surviving the anti-join.
+    val keys = Materialize.now(blockList.select(col(blockKeyCol).as("__bk")))
     val bloomBytes = keys
       .where(col("__bk").isNotNull)
       .agg(BloomFilters.bloomAgg(col("__bk"), expectedItems, numBits)

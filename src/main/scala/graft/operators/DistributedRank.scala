@@ -55,7 +55,7 @@ object DistributedRank {
     // distributed materialization adds no new scale constraint; the
     // checkpoint also truncates lineage so stacked rank stages keep
     // constant-size plans (lazy + audit escape hatch: Materialize).
-    val in = materialize(df.withColumn("__drk_s", sort.cast("double")))
+    val in = Materialize.once(df.withColumn("__drk_s", sort.cast("double")))
     // Robust bucket bounds: equal widths between the approximate
     // P0.1/P99.9 — NOT raw min/max, where one extreme outlier would
     // collapse the whole frame into bucket 0 and silently restore the
@@ -98,12 +98,6 @@ object DistributedRank {
       .withColumn(out, col("__drk_c") + row_number().over(wIn))
       .drop("__drk_s", "__drk_b", "__drk_c")
   }
-
-  /** Lazy distributed materialization honoring the audit knob (see
-    * [[Materialize.once]]): rank callers also use this to share an
-    * expensive rollup between the population count and the rank
-    * input. */
-  def materialize(df: DataFrame): DataFrame = Materialize.once(df)
 
   /** SQL-standard NTILE(k) from the distributed rank: with n rows,
     * the first n mod k buckets hold ⌈n/k⌉ rows, the rest ⌊n/k⌋ —

@@ -2,13 +2,13 @@ package graft.operators
 
 import org.apache.spark.sql.SparkSession
 
-/** Executor-heap-aware default for the size-gated-broadcast knobs.
+/** Executor-heap-aware default for the size gates on hash-relation
+  * builds.
   *
   * The tf-idf scorer broadcasts its attach frame when a one-job size
-  * probe fits under a byte gate (the SNM verifier's gate defaults to
-  * OFF instead — shuffle-hash won every measured size there, so its
-  * broadcast is explicit opt-in and this heuristic only serves
-  * call sites that turn it on without sizing it). The gate's
+  * probe fits under a byte gate, and the SNM verifier keeps its
+  * shuffle-hash attach only while the per-partition build fits the
+  * same envelope (`spark.graft.snm.shjMaxBuildBytes`). The gate's
   * envelope measures the frame's DATA (64 B/row + per-term/shingle
   * bytes), but what an executor actually holds is several times that:
   * the deserialized hash relation (UnsafeRow copies + index) for EACH
@@ -24,8 +24,9 @@ import org.apache.spark.sql.SparkSession
   * Default: min(1 GiB, executorHeap / 24) — 16 g → 683 MB (broadcasts
   * the measured frame, as the 16 g ladder always did), 10 g → 427 MB
   * (falls back, avoiding the measured OOM), 6 g → 256 MB (falls back).
-  * An explicit `spark.graft.*.maxBroadcastBytes` overrides the
-  * heuristic entirely — the operator owner knows their executors.
+  * An explicit gate key (`spark.graft.tfidf.maxBroadcastBytes`,
+  * `spark.graft.{tfidf,snm}.shjMaxBuildBytes`) overrides the heuristic
+  * entirely — the operator owner knows their executors.
   * Heap source: `spark.executor.memory` when set (bare numbers are
   * MiB, per Spark's convention for this conf); otherwise this JVM's
   * max heap (local mode, where the executor IS the driver).
@@ -49,25 +50,15 @@ object MemGate {
   def defaultMaxBroadcastBytes(heapBytes: Long): Long =
     math.min(1L << 30, heapBytes / 24)
 
-  def defaultMaxBroadcastBytes(spark: SparkSession): Long =
-    defaultMaxBroadcastBytes(executorHeapBytes(spark))
-
   /** Resolve a gate conf: explicit value wins verbatim (validated as a
     * byte count), absent falls to the heap-aware default. */
   def gateBytes(spark: SparkSession, key: String): Long =
-    gateBytes(spark, key, defaultMaxBroadcastBytes(spark))
-
-  /** Same resolution with a caller-chosen default — the SNM verifier
-    * gates at 0 (broadcast is opt-in there: shuffle-hash won every
-    * measured size), while the tf-idf scorer defaults to the
-    * heap-aware heuristic. One parse-validate path for both. */
-  def gateBytes(spark: SparkSession, key: String, default: Long): Long =
     spark.conf.getOption(key) match {
       case Some(raw) =>
         try raw.toLong catch {
           case _: NumberFormatException => throw new IllegalArgumentException(
             s"$key must be a byte count, got '$raw'")
         }
-      case None => default
+      case None => defaultMaxBroadcastBytes(executorHeapBytes(spark))
     }
 }

@@ -946,7 +946,7 @@ object DedupQueries {
     val maxBcast = graft.operators.MemGate.gateBytes(
       spark, "spark.graft.tfidf.maxBroadcastBytes")
     val frameBytes: Option[Long] =
-      if (!spark.conf.get("spark.graft.materialize", "true").toBoolean) None
+      if (!graft.operators.Materialize.enabled(spark)) None
       else {
         val s = vec.agg(count(lit(1)).as("n"),
           coalesce(sum(size(col("__toks"))), lit(0L)).as("t")).head()
@@ -974,8 +974,7 @@ object DedupQueries {
     // the satisfying child's partitioning).
     val shjNeeded: Option[Int] = if (useBroadcast) None else {
       val gate = graft.operators.MemGate.gateBytes(
-        spark, "spark.graft.tfidf.shjMaxBuildBytes",
-        default = graft.operators.MemGate.defaultMaxBroadcastBytes(spark))
+        spark, "spark.graft.tfidf.shjMaxBuildBytes")
       // A non-positive gate is a misconfiguration here, not a dial
       // position: ceil(b / 0.0).toInt is Int.MaxValue, which would
       // issue repartition(2147483647) — a pathological exchange — and
@@ -1383,7 +1382,7 @@ object DedupQueries {
     * count-free auto overload (job-free, identical plan shape). */
   private def autoEdges(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.load(spark, dir, "embeddings")
-    if (spark.conf.get("spark.graft.materialize", "true").toBoolean) {
+    if (graft.operators.Materialize.enabled(spark)) {
       val n = emb.count()
       val p = Dedup.autoPlanes(n)
       require(p == AutoOraclePlanes || n > DriverScaleMaxRows,
@@ -2069,7 +2068,8 @@ object DedupQueries {
     // candidate pair), and a pre-sort hash repartition barrier, which
     // the optimizer elides as redundant under the Sort (the double
     // execution came straight back, stage-profiled).
-    graft.operators.Materialize.onceSer(minhashEstUnsorted(spark, dir))
+    graft.operators.Materialize.once(minhashEstUnsorted(spark, dir),
+        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
       .orderBy("id_a", "id_b")
 
   /** [[qdMinhashEst]] without its final global sort — the frame
@@ -2553,12 +2553,13 @@ object DedupQueries {
     // exist for the partition quality question to be non-trivial — the
     // inverted shingle index does the candidate pruning, so removing
     // the source blocking changes candidates, not complexity class.
-    val edges = Dedup.jaccardNeighbors(docs.withColumn("__g", lit(1)),
-        "text", "doc_id", 3, "__g", 0.5)
-      .select("id_a", "id_b")
-      .join(srcOf.toDF("id_a", "src_a"), "id_a")
-      .join(srcOf.toDF("id_b", "src_b"), "id_b")
-      .localCheckpoint() // consumed three times below
+    // Consumed three times below.
+    val edges = graft.operators.Materialize.now(
+      Dedup.jaccardNeighbors(docs.withColumn("__g", lit(1)),
+          "text", "doc_id", 3, "__g", 0.5)
+        .select("id_a", "id_b")
+        .join(srcOf.toDF("id_a", "src_a"), "id_a")
+        .join(srcOf.toDF("id_b", "src_b"), "id_b"))
     val m = edges.count()
     val intra = edges.where(col("src_a") === col("src_b"))
       .groupBy(col("src_a").as("source"))

@@ -1776,7 +1776,7 @@ object EventQueries {
     // Materialized once so the count and the rank chain don't each
     // re-aggregate the events scan.
     import graft.operators.DistributedRank.withRowNumber
-    val pu = graft.operators.DistributedRank.materialize(peruser)
+    val pu = graft.operators.Materialize.once(peruser)
     val nTotal = broadcast(pu.agg(count(lit(1)).as("__nu")))
     def score(r: Column): Column =
       (lit(1) + floor(lit(4) * (r - lit(1)) / col("__nu"))).cast("bigint")
@@ -2142,18 +2142,15 @@ object EventQueries {
       unix_micros(col("ts")) - unix_micros(lagTs) > 1800000000L, 1).otherwise(0)
     // The collapsed (user, session, type) frame feeds FOUR consumers
     // (both self-join sides, the type counts, the session total); an
-    // eager localCheckpoint materializes the expensive sessionization
-    // window ONCE and truncates lineage, instead of re-running the
-    // full-fact window per branch (no cache(): Spark's CacheManager
-    // matches canonicalized plans ACROSS query constructions, which
-    // would leak reuse between bench iterations; checkpoint blocks are
-    // instance-scoped). The frame is already ≪ the fact table.
-    val sessTypes = Tables.load(spark, dir, "events")
-      .withColumn("__sid", sum(newSession).over(
-        byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .select(col("user_id"), col("__sid"), col("event_type"))
-      .distinct()
-      .localCheckpoint()
+    // eager barrier materializes the expensive sessionization window
+    // ONCE and truncates lineage, instead of re-running the full-fact
+    // window per branch. The frame is already ≪ the fact table.
+    val sessTypes = graft.operators.Materialize.now(
+      Tables.load(spark, dir, "events")
+        .withColumn("__sid", sum(newSession).over(
+          byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+        .select(col("user_id"), col("__sid"), col("event_type"))
+        .distinct())
     // Session total stays a LAZY 1-row broadcast (scalar-subquery
     // pattern, qe_decay precedent) — no eager driver action.
     val nSessions = sessTypes.select("user_id", "__sid").distinct()
@@ -2291,7 +2288,7 @@ object EventQueries {
     // SQL-standard ntile arithmetic over the two-level bucketed rank
     // (never a global single-task window). Materialized once so the
     // population count and the rank don't each re-run the rollup.
-    val pu = graft.operators.DistributedRank.materialize(perUser)
+    val pu = graft.operators.Materialize.once(perUser)
     val nTotal = broadcast(pu.agg(count(lit(1)).as("__nu")))
     graft.operators.DistributedRank.withRowNumber(
         pu.crossJoin(nTotal),
@@ -2702,7 +2699,8 @@ object EventQueries {
     val all = Window.partitionBy(lit(1))
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     val events = Tables.load(spark, dir, "events")
-    val trans = events
+    // Tiny frame reused 8 times: materialize once, lineage truncated.
+    val trans = graft.operators.Materialize.now(events
       .select(col("user_id"), col("ts"), col("event_id"),
         col("event_type").as("from_type"))
       .withColumn("to_type", lead(col("from_type"), 1).over(w))
@@ -2712,10 +2710,7 @@ object EventQueries {
       .withColumn("__p",
         col("__n").cast("double") /
           sum(col("__n")).over(byFrom).cast("double"))
-      .select(col("from_type"), col("to_type"), col("__p"))
-      // Tiny frame reused 8 times: materialize once, lineage truncated
-      // (instance-scoped, same rationale as qe_cooccurrence's frame).
-      .localCheckpoint()
+      .select(col("from_type"), col("to_type"), col("__p")))
     val share = events.groupBy(col("event_type").as("t"))
       .agg(count(lit(1)).as("__c"))
       .withColumn("__share",

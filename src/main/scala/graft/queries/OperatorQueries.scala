@@ -222,12 +222,11 @@ object OperatorQueries {
     val ord = Tables.load(spark, dir, "orders")
       .groupBy(col("o_custkey").as("join_key"))
       .agg(count(lit(1)).as("cnt_orders"))
-    val contrib = ev.join(ord, "join_key")
+    // Consumed twice (top-5 and the 1-row total): materialize once so
+    // the two fact-table scans + key-count join don't run twice.
+    val contrib = graft.operators.Materialize.now(ev.join(ord, "join_key")
       .select(col("join_key"), col("cnt_events"), col("cnt_orders"),
-        (col("cnt_events") * col("cnt_orders")).as("est_rows"))
-      // Consumed twice (top-5 and the 1-row total): materialize once so
-      // the two fact-table scans + key-count join don't run twice.
-      .localCheckpoint()
+        (col("cnt_events") * col("cnt_orders")).as("est_rows")))
     val total = contrib.agg(sum("est_rows").as("total_est_rows"))
     contrib
       .orderBy(col("est_rows").desc, col("join_key"))

@@ -186,11 +186,12 @@ object SimilarityQueries {
       Knn.bruteForce(emb, emb.where(col("vec_id") < 10),
           "embedding", "vec_id", 3)
         .select(col("q_id"), col("neighbor_id")))
-    // onceSer: the index frame carries the full vectors (the cosine
+    // Serialized: the index frame carries the full vectors (the cosine
     // needs them) — serialized blocks, not deserialized object rows
-    // (the measured onceSer rationale in Materialize).
-    val prepared = graft.operators.Materialize.onceSer(
-      Knn.prepareProbeIndex(emb, "embedding", "vec_id", NumPlanes, Dims))
+    // (the measured rationale in Materialize).
+    val prepared = graft.operators.Materialize.once(
+      Knn.prepareProbeIndex(emb, "embedding", "vec_id", NumPlanes, Dims),
+      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
     val perFlip = Seq(0, 1, 2, 4).map { nf =>
       val cand = graft.operators.Materialize.once(
         Knn.multiProbeCandidatesPrepared(prepared, NumPlanes, nf)
@@ -970,11 +971,11 @@ object SimilarityQueries {
     val lam = 0.7
     val oneMinusLam = 0.3
     val emb = Tables.load(spark, dir, "embeddings")
-    val cand = Knn.bruteForce(emb, emb.where(col("vec_id") < 8),
-        "embedding", "vec_id", 20)
-      .select(col("q_id"), col("neighbor_id").as("id"),
-        col("cosine").as("rel"))
-      .localCheckpoint()
+    val cand = graft.operators.Materialize.now(
+      Knn.bruteForce(emb, emb.where(col("vec_id") < 8),
+          "embedding", "vec_id", 20)
+        .select(col("q_id"), col("neighbor_id").as("id"),
+          col("cosine").as("rel")))
     // Candidate-pruned vector panel (r15, guide §3.2/§6): ca and cb
     // below are INNER joins on candidate ids, so only panel vectors
     // (≤ queries·k rows) can survive — yet the un-pruned `vecs`

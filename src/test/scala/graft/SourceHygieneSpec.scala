@@ -5,7 +5,8 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Keeps one session builder and one SparkListener in the program. */
+/** Keeps one session builder, one SparkListener and one lineage
+  * barrier in the program. */
 class SourceHygieneSpec extends AnyFunSuite {
   private def sources: Seq[Path] = {
     val walk = Files.walk(Paths.get("src/main"))
@@ -27,5 +28,10 @@ class SourceHygieneSpec extends AnyFunSuite {
   test("only StageMetrics is a SparkListener") {
     assert(filesContaining("extends SparkListener", "new SparkListener") ===
       Set("StageMetrics.scala"))
+  }
+
+  test("only Materialize takes a checkpoint") {
+    assert(filesContaining("localCheckpoint(", ".checkpoint(") ===
+      Set("Materialize.scala"))
   }
 }

@@ -1,9 +1,19 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.SparkSpec
 
 class MaterializeSpec extends SparkSpec {
+
+  /** Storage levels along the lineage of a frame's RDD scan: the
+    * barrier RDD sits below the scan. */
+  private def levels(df: DataFrame): Seq[String] = {
+    def walk(r: org.apache.spark.rdd.RDD[_]): Seq[String] =
+      r.getStorageLevel.description +: r.dependencies.flatMap(d => walk(d.rdd))
+    walk(df.queryExecution.toRdd)
+  }
 
   test("once() checkpoints lazily; audit knob preserves full lineage") {
     val s = spark
@@ -26,30 +36,43 @@ class MaterializeSpec extends SparkSpec {
     } finally spark.conf.unset("spark.graft.materialize")
   }
 
-  test("onceSer() stores serialized, honors the audit knob, keeps values") {
+  test("once() at MEMORY_AND_DISK_SER: serialized, audit knob, keeps values") {
     val s = spark
     import s.implicits._
     val base = (1L to 100L).toDF("id").groupBy(col("id") % 10)
       .agg(count(lit(1)).as("c"))
-    val m = Materialize.onceSer(base)
+    val m = Materialize.once(base, StorageLevel.MEMORY_AND_DISK_SER)
     assert(m.queryExecution.analyzed.toString.contains("LogicalRDD")
       || m.queryExecution.analyzed.toString.contains("ExistingRDD"))
     assert(m.collect().map(_.getLong(1)).sum == 100L)
     // Serialized storage level — the measured fix for wide frames where
-    // deserialized block storage cost 4x the compute it saved. The
-    // checkpoint-marked RDD sits in the lineage of the plan's RDD scan;
-    // walk dependencies to find it.
-    def levels(r: org.apache.spark.rdd.RDD[_]): Seq[String] =
-      r.getStorageLevel.description +:
-        r.dependencies.flatMap(d => levels(d.rdd))
-    assert(levels(m.queryExecution.toRdd)
-      .contains(org.apache.spark.storage.StorageLevel
-        .MEMORY_AND_DISK_SER.description))
+    // deserialized block storage cost 4x the compute it saved.
+    assert(levels(m).contains(StorageLevel.MEMORY_AND_DISK_SER.description))
     spark.conf.set("spark.graft.materialize", "false")
     try {
-      val open = Materialize.onceSer(base)
+      val open = Materialize.once(base, StorageLevel.MEMORY_AND_DISK_SER)
       assert(open.queryExecution.analyzed.toString.contains("Aggregate"))
       assert(open.collect().map(_.getLong(1)).sum == 100L)
+    } finally spark.conf.unset("spark.graft.materialize")
+  }
+
+  test("now() materializes at the call, also in audit mode, and release() drops its blocks") {
+    val s = spark
+    import s.implicits._
+    val base = (1L to 100L).toDF("id").groupBy(col("id") % 10)
+      .agg(count(lit(1)).as("c"))
+    spark.conf.set("spark.graft.materialize", "false")
+    try {
+      val m = Materialize.now(base, StorageLevel.DISK_ONLY)
+      // Eager: the blocks exist before any consumer runs.
+      val rdd = m.queryExecution.logical
+        .asInstanceOf[org.apache.spark.sql.execution.LogicalRDD].rdd
+      assert(rdd.getStorageLevel == StorageLevel.DISK_ONLY)
+      assert(spark.sparkContext.getRDDStorageInfo.exists(i =>
+        i.id == rdd.id && i.numCachedPartitions > 0))
+      assert(m.collect().map(_.getLong(1)).sum == 100L)
+      Materialize.release(m)
+      assert(rdd.getStorageLevel == StorageLevel.NONE)
     } finally spark.conf.unset("spark.graft.materialize")
   }
 
@@ -62,21 +85,21 @@ class MaterializeSpec extends SparkSpec {
       .createTempDirectory("graft_ckpt").toString
     spark.conf.set("spark.graft.checkpointDir", dir)
     try {
+      val before = checkpointFiles()
       val m = Materialize.once(base)
       // Same lazy contract: no checkpoint files exist until a job runs.
-      def ckptFiles(): Long = {
-        val d = java.nio.file.Paths.get(dir)
-        if (!java.nio.file.Files.exists(d)) 0L
-        else java.nio.file.Files.walk(d)
-          .filter(java.nio.file.Files.isRegularFile(_)).count()
-      }
-      assert(ckptFiles() == 0L, "checkpoint must stay lazy")
+      assert(checkpointFiles() == before, "checkpoint must stay lazy")
       assert(m.collect().map(_.getLong(1)).sum == 100L)
       // The reliable path wrote recoverable files (what survives an
       // executor loss, unlike localCheckpoint's executor-local blocks).
-      assert(ckptFiles() > 0L, "reliable checkpoint wrote no files")
+      assert(checkpointFiles() > before, "reliable checkpoint wrote no files")
       // A second consumer reads the checkpoint, values unchanged.
       assert(m.agg(sum("c")).head.getLong(0) == 100L)
+      // now() takes the same reliable checkpoint, at the call.
+      val written = checkpointFiles()
+      val n = Materialize.now(base, StorageLevel.DISK_ONLY)
+      assert(checkpointFiles() > written, "eager reliable checkpoint wrote no files")
+      assert(n.agg(sum("c")).head.getLong(0) == 100L)
     } finally spark.conf.unset("spark.graft.checkpointDir")
   }
 }

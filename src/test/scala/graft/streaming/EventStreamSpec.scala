@@ -2,6 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
+import org.apache.spark.graft.ListenerBusAccess
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -411,11 +412,15 @@ class EventStreamSpec extends SparkSpec {
       .writeStream.format("memory").queryName("latedrop_out")
       .outputMode("append").start()
     try {
+      // Progress events reach the listener on the async listener bus;
+      // drain it after each batch so the reads see every batch's record.
       stream.addData(events)
       query.processAllAvailable()
+      ListenerBusAccess.drain(spark.sparkContext)
       val droppedBatch1 = listener.totalDropped(query.id)
       stream.addData(events)
       query.processAllAvailable()
+      ListenerBusAccess.drain(spark.sparkContext)
 
       assert(droppedBatch1 === 0L) // first delivery: nothing is late
       assert(listener.totalDropped(query.id) === expectedLate)
