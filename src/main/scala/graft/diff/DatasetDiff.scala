@@ -15,8 +15,8 @@ case class DiffSide(joinColumns: Seq[String], diffColumns: Seq[String])
   * @param perColumnThresholds when set, one numeric-equality threshold per
   *                            diff-column pair, overriding `numericThreshold`
   * @param validateKeys run the key uniqueness / non-null check before
-  *                     diffing (one extra aggregation per side); turn off
-  *                     for production runs on pre-validated keys
+  *                     diffing (one extra aggregation over both sides);
+  *                     turn off for production runs on pre-validated keys
   */
 case class DiffConfig(
     left: DiffSide,
@@ -36,8 +36,8 @@ case class DiffConfig(
   *    projection);
   *  - per diff-column pair: both original values, an equality-status
   *    string column, and for numeric pairs a difference column;
-  *  - key validation is a single aggregation per side instead of the
-  *    reference's four full scans (count + dropDuplicates.count +
+  *  - key validation is a single aggregation over both sides instead of
+  *    the reference's four full scans (count + dropDuplicates.count +
   *    null-filter count per side).
   */
 object DatasetDiff {
@@ -55,18 +55,34 @@ object DatasetDiff {
   private def renamed(name: String, c: String): String =
     name + "_" + c.replace('.', '_')
 
-  /** Validate keys on both sides in one aggregation each; throws on
-    * duplicate or null join keys (same contract as the reference). */
+  /** Validate keys on both sides in ONE aggregation over a side-tagged
+    * union; throws on null or duplicate join keys (same contract and
+    * messages as the reference), checking left nulls, left duplicates,
+    * right nulls, right duplicates in that order. */
   def validate(left: DataFrame, right: DataFrame, cfg: DiffConfig): Unit = {
-    validationStats(left, cfg.left.joinColumns, cfg.leftName) ++
-      validationStats(right, cfg.right.joinColumns, cfg.rightName) match {
-      case stats =>
-        stats.foreach { case (side, rows, distinct, nullKeys) =>
-          if (nullKeys > 0) throw new IllegalArgumentException(
-            s"The join columns for table $side contain nulls.")
-          if (distinct != rows) throw new IllegalArgumentException(
-            s"The join columns for table $side do not provide a unique key for every row.")
-        }
+    // Each side's key struct sits in its own column (null on the other
+    // side's rows), so the two key types never have to unify.
+    def keyed(df: DataFrame, keys: Seq[String]) =
+      df.select(struct(keys.map(col): _*).as("k"),
+        keys.map(col(_).isNull).reduce(_ || _).as("n"))
+    val l = keyed(left, cfg.left.joinColumns)
+    val r = keyed(right, cfg.right.joinColumns)
+    def nullOf(t: DataType) = lit(null).cast(t)
+    val union = l.select(lit(0).as("side"), col("k").as("lk"),
+        nullOf(r.schema("k").dataType).as("rk"), col("n"))
+      .unionAll(r.select(lit(1).as("side"),
+        nullOf(l.schema("k").dataType).as("lk"), col("k").as("rk"), col("n")))
+    def onSide(s: Int, c: Column) = sum(when(col("side") === s, c).otherwise(0L))
+    val row = union.agg(
+      onSide(0, lit(1L)), count_distinct(col("lk")), onSide(0, col("n").cast("long")),
+      onSide(1, lit(1L)), count_distinct(col("rk")), onSide(1, col("n").cast("long")))
+      .collect()(0)
+    Seq(cfg.leftName -> 0, cfg.rightName -> 3).foreach { case (side, o) =>
+      def at(i: Int) = if (row.isNullAt(o + i)) 0L else row.getLong(o + i)
+      if (at(2) > 0) throw new IllegalArgumentException(
+        s"The join columns for table $side contain nulls.")
+      if (at(1) != at(0)) throw new IllegalArgumentException(
+        s"The join columns for table $side do not provide a unique key for every row.")
     }
   }
 

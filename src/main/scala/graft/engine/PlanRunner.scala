@@ -3,9 +3,13 @@ package graft.engine
 import graft.diff.DatasetDiff
 import graft.rules.{RuleReport, RuleRunner}
 import graft.views.ViewCreator
+import java.util.concurrent.{Callable, Executors}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.input_file_name
 import scala.collection.mutable
+import scala.util.Try
+import scala.util.control.NonFatal
 
 /** Result of running a plan: failed-assertion count (the reference exits
   * 3 when > 0 — reference: tnengine/TnEngine.scala:47-50), all rule
@@ -17,8 +21,27 @@ case class PlanResult(
   def exitCode: Int = if (numFailedAssertions > 0) 3 else 0
 }
 
-/** Executes a [[Plan]] sequentially, threading command outputs through a
+/** Executes a [[Plan]], threading command outputs through a
   * key→DataFrame lookup table (reference: tnengine/TnEngine.scala:199-279).
+  *
+  * A run has two passes:
+  *  - the BUILD pass, in plan order on the calling thread, resolves
+  *    inputs, builds every command's lazy output and registers its
+  *    lookup key, `cache`, temp view and aliases;
+  *  - the GATE pass runs every command's eager work — assertion
+  *    reports, diff key validation, the drift, checksum, SPRT and schema
+  *    gates — on up to `defaultParallelism` threads, since a gate over a
+  *    small input is one task and would leave the other slots idle.
+  *    Then it writes the `outputPath` of every command before the first
+  *    gate that threw, in plan order, and of that command too when it is
+  *    a schema, checksum, drift or SPRT command (those write their
+  *    output before their gate runs).
+  * Reports, exit code, the raised exception and the written outputs
+  * are those of running the commands one after another. A command that
+  * reads a path an earlier command writes is built after that write.
+  * Two things differ when a gate throws: the gates of later commands
+  * still run (their results are dropped), and later commands have
+  * already registered their lookup key, `cache` and temp view.
   *
   * Spark-first notes:
   *  - outputs stay lazy logical plans unless `cache` is set — a view
@@ -27,7 +50,8 @@ case class PlanResult(
   *  - `outputPath` persists parquet; `tableName` registers a temp view
   *    (the reference mounts an external Hive table; a library should not
   *    mutate the metastore);
-  *  - nested plans share the same lookup table, as in the reference.
+  *  - nested plans share the same lookup table, as in the reference, and
+  *    their commands join the enclosing plan's gate pass.
   */
 class PlanRunner(spark: SparkSession, reportWriter: Option[ReportWriter] = None) {
   private val lookup = mutable.LinkedHashMap.empty[String, DataFrame]
@@ -97,143 +121,228 @@ class PlanRunner(spark: SparkSession, reportWriter: Option[ReportWriter] = None)
 
   def run(plan: Plan, reportKey: String = "plan"): PlanResult = {
     val reports = mutable.Buffer.empty[(String, Seq[RuleReport])]
-    val failed = runCommands(plan.commands, reports)
+    val pending = mutable.Buffer.empty[Step]
+    var failed = 0
+    def flush(): Unit = {
+      val steps = pending.toSeq
+      pending.clear()
+      failed += GatePass.run(spark, steps, reports)
+    }
+    try build(plan.commands, pending, flush _)
+    catch {
+      // The commands before the one that failed to build run first; an
+      // earlier gate's failure wins, as it would have run first.
+      case NonFatal(e) => flush(); throw e
+    }
+    flush()
     val writer = reportWriter.orElse(
       plan.reportDest.map(d => new FsReportWriter(spark, d)))
     writer.foreach(_.write(reportKey, reports.toSeq))
     PlanResult(failed, reports.toSeq, lookup.toMap)
   }
 
-  private def runCommands(cmds: Seq[Command],
-      reports: mutable.Buffer[(String, Seq[RuleReport])]): Int =
-    cmds.map {
+  /** The build pass: appends one [[Step]] per command, in plan order. */
+  private def build(cmds: Seq[Command], steps: mutable.Buffer[Step],
+      flush: () => Unit): Unit = {
+    // An on-disk input that an earlier, still pending command writes is
+    // read after that write: the pending steps run first.
+    def read(input: InputRef): DataFrame = {
+      if (input.onDisk &&
+          steps.exists(_.write.exists { case (p, _) => overlaps(p, input.ref) }))
+        flush()
+      resolve(input)
+    }
+    def gated(c: Command, out: DataFrame, writeFirst: Boolean = false)(
+        gate: => Gated): Unit =
+      steps += step(c, out, Some(() => gate), writeFirst)
+    def plain(c: Command, out: DataFrame): Unit =
+      steps += step(c, out, None, writeFirst = false)
+    cmds.foreach {
       case c: AssertionCommand =>
-        val input = resolve(c.input)
+        val input = read(c.input)
         // The engine's report path collects per-rule samples (bounded,
         // projected to rule-referenced columns) like the reference's
         // assertion reports do.
-        val ruleReports = RuleRunner.reports(input, c.rules, collectSamples = true)
-        reports.append(c.outputKey -> ruleReports)
-        store(RuleRunner.invalidRows(input, c.rules), c)
-        ruleReports.count(_.failed)
+        gated(c, RuleRunner.invalidRows(input, c.rules)) {
+          val ruleReports =
+            RuleRunner.reports(input, c.rules, collectSamples = true)
+          Gated(Seq(c.outputKey -> ruleReports), ruleReports.count(_.failed))
+        }
       case c: DiffCommand =>
-        store(DatasetDiff.diff(resolve(c.input1), resolve(c.input2), c.diffConfig), c)
-        0
+        val (left, right, cfg) = (read(c.input1), read(c.input2), c.diffConfig)
+        gated(c, DatasetDiff.diff(left, right, cfg.copy(validateKeys = false))) {
+          if (cfg.validateKeys) DatasetDiff.validate(left, right, cfg)
+          Gated(Nil, 0)
+        }
       case c: ViewCommand =>
         require(c.inputs.length == c.tableAliases.length,
           "tableAliases must match inputs, by position")
-        store(ViewCreator.createView(spark,
-          c.tableAliases.zip(c.inputs.map(resolve)), c.query), c)
-        0
+        plain(c, ViewCreator.createView(spark,
+          c.tableAliases.zip(c.inputs.map(read)), c.query))
       case c: SchemaCommand =>
-        val input = resolve(c.input)
-        store(graft.rules.SchemaContract.report(spark, input, c.contract), c)
-        if (graft.rules.SchemaContract.passed(input, c.contract, c.allowExtra)) 0
-        else 1
+        val input = read(c.input)
+        gated(c, graft.rules.SchemaContract.report(spark, input, c.contract),
+            writeFirst = true) {
+          Gated(Nil,
+            if (graft.rules.SchemaContract.passed(input, c.contract, c.allowExtra)) 0
+            else 1)
+        }
       case c: ProfileCommand =>
-        val input = resolve(c.input)
-        store(
+        val input = read(c.input)
+        plain(c,
           if (c.approx) graft.rules.Profiler.profileApprox(input, c.columns)
-          else graft.rules.Profiler.profile(input, c.columns), c)
-        0
+          else graft.rules.Profiler.profile(input, c.columns))
       case c: DedupCommand =>
-        val input = resolve(c.input)
-        store(
+        val input = read(c.input)
+        plain(c,
           if (c.keepDuplicatesReport)
             graft.dedup.Dedup.exactGroups(input, c.textCol, c.idCol)
-          else graft.dedup.Dedup.canonicalRows(input, c.textCol, c.idCol), c)
-        0
+          else graft.dedup.Dedup.canonicalRows(input, c.textCol, c.idCol))
       case c: SampleCommand =>
-        store(graft.operators.Sampling.stratifiedTopK(
-          resolve(c.input), c.stratumCols, c.idCol, c.k, c.seed), c)
-        0
+        plain(c, graft.operators.Sampling.stratifiedTopK(
+          read(c.input), c.stratumCols, c.idCol, c.k, c.seed))
       case c: TopNCommand =>
         val ord = if (c.descending)
           org.apache.spark.sql.functions.col(c.orderCol).desc
         else org.apache.spark.sql.functions.col(c.orderCol).asc
-        store(org.apache.spark.sql.graft.TopK.perKey(resolve(c.input),
+        plain(c, org.apache.spark.sql.graft.TopK.perKey(read(c.input),
           c.keyCols,
           Seq(ord, org.apache.spark.sql.functions.col(c.tiebreakCol).asc),
-          c.k), c)
-        0
+          c.k))
       case c: ChecksumCommand =>
-        val fp = graft.rules.Fingerprint.of(resolve(c.input), c.columns)
-        store(fp, c)
-        val row = fp.head()
-        val checksum = row.getAs[String]("checksum")
-        val failed = c.expected.exists(_ != checksum)
-        reports.append(c.outputKey -> Seq(RuleReport(
-          query = s"checksum(${c.columns.mkString(", ")})" +
-            c.expected.map(e => s" == $e").getOrElse(""),
-          description = "order-independent table fingerprint" +
-            (if (c.expected.isDefined) " gate" else ""),
-          threshold = 0.0,
-          totalRows = row.getAs[Long]("n_rows"),
-          numInvalid = if (failed) 1 else 0,
-          fractionInvalid = if (failed) 1.0 else 0.0,
-          failed = failed,
-          summaryStats = Map("checksum" -> checksum))))
-        if (failed) 1 else 0
+        val fp = graft.rules.Fingerprint.of(read(c.input), c.columns)
+        gated(c, fp, writeFirst = true) {
+          val row = fp.head()
+          val checksum = row.getAs[String]("checksum")
+          verdict(c.outputKey,
+            query = s"checksum(${c.columns.mkString(", ")})" +
+              c.expected.map(e => s" == $e").getOrElse(""),
+            description = "order-independent table fingerprint" +
+              (if (c.expected.isDefined) " gate" else ""),
+            threshold = 0.0,
+            totalRows = row.getAs[Long]("n_rows"),
+            failed = c.expected.exists(_ != checksum),
+            stats = Map("checksum" -> checksum))
+        }
       case c: DriftCommand =>
+        val (baseline, input) = (read(c.baseline), read(c.input))
         // driftOuter, not drift: the gate must see bins present on only
         // one side (epsilon-smoothed large finite terms) — an inner
-        // join would score a COMPLETE distribution shift as zero.
-        val bins = graft.rules.Profiler.driftOuter(
-          resolve(c.baseline), resolve(c.input), c.valueCol, c.binWidth)
-        store(bins, c)
-        // Total PSI is one scalar over the bounded per-bin frame (the
-        // store() above keeps the lazy plan; cache: true avoids the
-        // second bin pass when the output is also consumed downstream).
-        val agg = bins.agg(
-          org.apache.spark.sql.functions.sum("psi"),
-          org.apache.spark.sql.functions.count(
-            org.apache.spark.sql.functions.lit(1))).head()
-        val total = if (agg.isNullAt(0)) 0.0 else agg.getDouble(0)
-        val failed = c.maxPsi.exists(total > _)
-        reports.append(c.outputKey -> Seq(RuleReport(
-          query = s"psi(${c.valueCol}, binWidth=${c.binWidth})" +
-            c.maxPsi.map(m => s" <= $m").getOrElse(""),
-          description = s"PSI drift gate on ${c.valueCol} vs baseline",
-          // -1 = ungated (informational): a finite sentinel, because
-          // Infinity would serialize as a STRING in the JSON report and
-          // break numeric consumers.
-          threshold = c.maxPsi.getOrElse(-1.0),
-          totalRows = agg.getLong(1),
-          numInvalid = if (failed) 1 else 0,
-          fractionInvalid = if (failed) 1.0 else 0.0,
-          failed = failed,
-          summaryStats = Map("psi_total" -> total))))
-        if (failed) 1 else 0
+        // join would score a COMPLETE distribution shift as zero. The
+        // gate sums the same per-bin terms from one aggregation.
+        gated(c, graft.rules.Profiler.driftOuter(
+            baseline, input, c.valueCol, c.binWidth), writeFirst = true) {
+          val (total, bins) = graft.rules.Profiler.driftOuterTotal(
+            baseline, input, c.valueCol, c.binWidth)
+          verdict(c.outputKey,
+            query = s"psi(${c.valueCol}, binWidth=${c.binWidth})" +
+              c.maxPsi.map(m => s" <= $m").getOrElse(""),
+            description = s"PSI drift gate on ${c.valueCol} vs baseline",
+            // -1 = ungated (informational): a finite sentinel, because
+            // Infinity would serialize as a STRING in the JSON report and
+            // break numeric consumers.
+            threshold = c.maxPsi.getOrElse(-1.0),
+            totalRows = bins,
+            failed = c.maxPsi.exists(total > _),
+            stats = Map("psi_total" -> total))
+        }
       case c: SprtCommand =>
-        val walk = graft.rules.Sprt.walk(resolve(c.input), c.timeCol,
+        val walk = graft.rules.Sprt.walk(read(c.input), c.timeCol,
           org.apache.spark.sql.functions.expr(c.defectExpr),
           c.granularity, c.p0, c.p1, c.alpha)
-        store(walk, c)
         // The gate reads only the STOPPING decision (1-row aggregate
         // over the bounded per-period walk frame).
-        val decision = graft.rules.Sprt.stoppingDecision(walk)
-        val failed = decision == "accept_h1"
-        reports.append(c.outputKey -> Seq(RuleReport(
-          query = s"sprt(${c.defectExpr}; p0=${c.p0}, p1=${c.p1}, " +
-            s"alpha=${c.alpha}, per ${c.granularity})",
-          description = "sequential probability-ratio defect-rate gate",
-          threshold = c.p1,
-          totalRows = 1,
-          numInvalid = if (failed) 1 else 0,
-          fractionInvalid = if (failed) 1.0 else 0.0,
-          failed = failed,
-          summaryStats = Map("decision" -> decision))))
-        if (failed) 1 else 0
+        gated(c, walk, writeFirst = true) {
+          val decision = graft.rules.Sprt.stoppingDecision(walk)
+          verdict(c.outputKey,
+            query = s"sprt(${c.defectExpr}; p0=${c.p0}, p1=${c.p1}, " +
+              s"alpha=${c.alpha}, per ${c.granularity})",
+            description = "sequential probability-ratio defect-rate gate",
+            threshold = c.p1,
+            totalRows = 1,
+            failed = decision == "accept_h1",
+            stats = Map("decision" -> decision))
+        }
       case c: PlanCommand =>
-        runCommands(c.plan.commands, reports)
-    }.sum
+        build(c.plan.commands, steps, flush)
+    }
+  }
 
-  private def store(df: DataFrame, cmd: Command): Unit = {
+  /** A gate with one pass/fail report, as checksum, drift and SPRT give. */
+  private def verdict(key: String, query: String, description: String,
+      threshold: Double, totalRows: Long, failed: Boolean,
+      stats: Map[String, Any]): Gated =
+    Gated(Seq(key -> Seq(RuleReport(query, description, threshold, totalRows,
+      numInvalid = if (failed) 1 else 0,
+      fractionInvalid = if (failed) 1.0 else 0.0,
+      failed = failed, summaryStats = stats))), if (failed) 1 else 0)
+
+  /** Registers a command's output (lookup key, cache, temp view) and
+    * returns its step; the `outputPath` write waits for the gate pass. */
+  private def step(cmd: Command, df: DataFrame,
+      gate: Option[() => Gated], writeFirst: Boolean): Step = {
     val out = if (cmd.cache) df.cache() else df
     lookup.put(cmd.outputKey, out)
-    cmd.outputPath.foreach { p =>
-      out.write.mode(SaveMode.Overwrite).parquet(p)
-    }
     cmd.tableName.foreach(out.createOrReplaceTempView)
+    Step(gate, cmd.outputPath.map(p => p -> out), writeFirst)
+  }
+
+  /** Whether reading `ref` may see what writing `path` produces: one
+    * qualified path is the other or lies under it. */
+  private def overlaps(path: String, ref: String): Boolean = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    def qualified(p: String) = {
+      val hp = new Path(p)
+      hp.getFileSystem(conf).makeQualified(hp).toString.stripSuffix("/") + "/"
+    }
+    val (a, b) = (qualified(path), qualified(ref))
+    a.startsWith(b) || b.startsWith(a)
+  }
+}
+
+/** What a command's gate adds to the plan result. */
+private final case class Gated(reports: Seq[(String, Seq[RuleReport])],
+    failures: Int)
+
+/** A built command: its gate (none for commands without eager work),
+  * its `outputPath` write, and whether a one-after-another run writes
+  * before the gate runs. */
+private final case class Step(gate: Option[() => Gated],
+    write: Option[(String, DataFrame)], writeFirst: Boolean)
+
+private object GatePass {
+  /** The gate pass over `steps`: every gate, on up to
+    * `defaultParallelism` threads, then the writes a one-after-another
+    * run makes before the first gate that throws, in order; that gate's
+    * exception is rethrown. Appends the gates' reports in step order and
+    * returns their failure count. */
+  def run(spark: SparkSession, steps: Seq[Step],
+      reports: mutable.Buffer[(String, Seq[RuleReport])]): Int = {
+    val gates = steps.zipWithIndex.collect { case (Step(Some(g), _, _), i) => (g, i) }
+    val threads = math.max(1,
+      math.min(gates.size, spark.sparkContext.defaultParallelism))
+    val pool = Executors.newFixedThreadPool(threads, (r: Runnable) => {
+      val t = new Thread(r, "graft-gate")
+      t.setDaemon(true)
+      t
+    })
+    val outcomes: Map[Int, Try[Gated]] =
+      try gates.map { case (g, i) =>
+          i -> pool.submit(new Callable[Try[Gated]] {
+            def call(): Try[Gated] = Try(g())
+          })
+        }.map { case (i, f) => i -> f.get() }.toMap
+      finally pool.shutdown()
+    val stop = gates.collectFirst { case (_, i) if outcomes(i).isFailure => i }
+      .getOrElse(steps.size)
+    steps.zipWithIndex.foreach { case (s, i) =>
+      if (i < stop || (i == stop && s.writeFirst)) s.write.foreach {
+        case (p, out) => out.write.mode(SaveMode.Overwrite).parquet(p)
+      }
+    }
+    // In step order, so `get` rethrows the first gate's exception.
+    val gated = gates.map { case (_, i) => outcomes(i).get }
+    gated.foreach(g => reports ++= g.reports)
+    gated.map(_.failures).sum
   }
 }

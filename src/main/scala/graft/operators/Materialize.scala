@@ -58,12 +58,14 @@ import org.apache.spark.storage.StorageLevel
   * `spark.graft.checkpointDir` to a fault-tolerant path (HDFS/object
   * store) and both entry points take a reliable `checkpoint`, whose
   * files survive any executor loss at the cost of one distributed
-  * write per barrier (the storage level is then ignored: checkpoint
-  * files are always serialized). The session's SparkContext checkpoint
-  * dir is adopted from the conf on first use; an explicit
-  * `sc.setCheckpointDir` made earlier wins. Spark's cleaner settings
+  * write per barrier (checkpoint files are always serialized; a lazy
+  * barrier also keeps its blocks at the storage level, so the write
+  * reads them instead of recomputing the upstream). The session's
+  * SparkContext checkpoint dir is adopted from the conf on first use;
+  * an explicit `sc.setCheckpointDir` made earlier wins. [[release]]
+  * deletes a frame's files; Spark's cleaner settings
   * (`spark.cleaner.referenceTracking.cleanCheckpoints`) decide when
-  * those files are deleted.
+  * the others are deleted.
   */
 object Materialize {
 
@@ -82,12 +84,17 @@ object Materialize {
       level: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame =
     barrier(df, eager = true, level)
 
-  /** Drops a barrier frame's blocks now, for a loop round the next one
-    * has replaced. */
+  /** Drops a barrier frame's blocks now, and its reliable checkpoint
+    * files, for a loop round the next one has replaced. */
   def release(df: DataFrame): Unit =
     df.queryExecution.logical match {
       case r: org.apache.spark.sql.execution.LogicalRDD =>
         r.rdd.unpersist(blocking = false)
+        r.rdd.getCheckpointFile.foreach { f =>
+          val path = new org.apache.hadoop.fs.Path(f)
+          path.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+            .delete(path, true)
+        }
       case _ =>
     }
 
@@ -100,7 +107,16 @@ object Materialize {
         // setCheckpointDir mints a fresh UUID subdir per call — set it
         // once per context, and never override a user's own choice.
         if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(dir)
-        df.checkpoint(eager)
+        val out = df.checkpoint(eager)
+        // A lazy checkpoint writes its files in a job of its own after
+        // the first consuming job; persisted, that job reads the blocks
+        // the consumer stored instead of recomputing the upstream.
+        if (!eager) out.queryExecution.logical match {
+          case r: org.apache.spark.sql.execution.LogicalRDD =>
+            r.rdd.persist(level)
+          case _ =>
+        }
+        out
       case None => df.localCheckpoint(eager, level)
     }
 }

@@ -210,7 +210,7 @@ object Profiler {
     * compared against a threshold. Same cost shape: one bin-count
     * aggregation per side, everything after on the per-bin frames. */
   def driftOuter(a: DataFrame, b: DataFrame, valueCol: String,
-      binWidth: Double, epsilon: Double = 1e-6): DataFrame = {
+      binWidth: Double, epsilon: Double = DriftEpsilon): DataFrame = {
     val all = Window.partitionBy(lit(1))
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     def binned(df: DataFrame, n: String) =
@@ -231,6 +231,43 @@ object Profiler {
         when(col("__tb") > 0, col("n_b") / col("__tb")).otherwise(lit(0.0)),
         lit(epsilon)))
       .transform(psiSelect)
+  }
+
+  /** [[driftOuter]]'s default share floor. */
+  val DriftEpsilon = 1e-6
+
+  /** The sum of [[driftOuter]]'s `psi` column and its row count, from
+    * ONE aggregation: both sides' bin counts come from a side-tagged
+    * union, and the driver finishes the shares, the epsilon floor and
+    * the 6-digit per-bin rounding as driftOuter's columns do (Spark's
+    * `log` is `StrictMath.log`, its `round` is HALF_UP on the double's
+    * decimal form). A null value bins to null on each side, and the
+    * full-outer join never matches null keys, so a null bin on both
+    * sides is two one-sided bins in either form. */
+  def driftOuterTotal(a: DataFrame, b: DataFrame, valueCol: String,
+      binWidth: Double): (Double, Long) = {
+    def tagged(df: DataFrame, side: Int) =
+      df.select(floor(col(valueCol) / binWidth).cast("long").as("bin"),
+        lit(side).as("side"))
+    def onSide(s: Int) = sum(when(col("side") === s, 1L).otherwise(0L))
+    val bins = tagged(a, 0).unionAll(tagged(b, 1))
+      .groupBy("bin").agg(onSide(0), onSide(1)).collect()
+      .flatMap { r =>
+        val (na, nb) = (r.getLong(1), r.getLong(2))
+        if (!r.isNullAt(0)) Seq((r.getLong(0), na, nb))
+        else Seq((Long.MinValue, na, 0L), (Long.MinValue, 0L, nb))
+          .filter { case (_, x, y) => x + y > 0 }
+      }
+      .sorted
+    val (ta, tb) = (bins.map(_._2).sum, bins.map(_._3).sum)
+    def share(n: Long, t: Long) =
+      math.max(if (t > 0) n.toDouble / t.toDouble else 0.0, DriftEpsilon)
+    val total = bins.map { case (_, na, nb) =>
+      val (p, q) = (share(na, ta), share(nb, tb))
+      java.math.BigDecimal.valueOf((p - q) * StrictMath.log(p / q))
+        .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+    }.sum
+    (total, bins.length.toLong)
   }
 
   /** [[drift]] for the split-one-dataset case: `sideA` tags each row,

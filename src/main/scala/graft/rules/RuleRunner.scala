@@ -1,8 +1,9 @@
 package graft.rules
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.{FilteredAggregates, FirstRows}
 
 /** Evaluates data-quality rules against a DataFrame.
   *
@@ -69,44 +70,89 @@ object RuleRunner {
         sum(when(col("__hit").isNull, 1).otherwise(0)).as("n_orphans"))
       .select(lit(relationName).as("relation"), col("n_child"), col("n_orphans"))
 
-  /** Evaluate every rule in a single aggregation pass.
-    * Rules with `summary` expressions cost one extra pass each (their
-    * aggregates are arbitrary SQL over just the rule's invalid rows);
-    * `collectSamples` adds one bounded sample job per rule (the
+  /** Evaluate every rule in a single aggregation pass: every rule's
+    * invalid count and every aggregate `summary` (folded in as
+    * `<agg> FILTER (WHERE <invalid>)`) come from ONE job. A summary that
+    * is not an aggregate, or is a DISTINCT one, keeps its own pass over
+    * the rule's invalid rows.
+    * `collectSamples` adds at most one more execution for the samples of
+    * every rule with invalid rows, read like `limit(20)` reads (the
     * engine's report path wants them, hot QC loops don't). */
   def reports(df: DataFrame, rules: Seq[Rule],
       collectSamples: Boolean = false): Seq[RuleReport] = {
     val prepared = withFeatures(df, rules)
-    val aggCols = count(lit(1)).as("__total__") +:
+    val summaries = rules.map { r =>
+      if (r.summary.isEmpty) None
+      else {
+        val over = prepared.filter(invalidPred(r))
+          .selectExpr(r.summary.map { case (n, e) => s"$e AS $n" }.toSeq: _*)
+        Some(FilteredAggregates.fold(over).toRight(over))
+      }
+    }
+    val aggCols = count(lit(1)).as("__total__") +: (
       rules.zipWithIndex.map { case (r, i) =>
         sum(when(invalidPred(r), 1L).otherwise(0L)).as(s"__inv_$i")
-      }
+      } ++
+      summaries.zipWithIndex.flatMap {
+        case (Some(Right(folded)), i) =>
+          folded.zipWithIndex.map { case (c, j) => c.as(s"__sum_${i}_$j") }
+        case _ => Nil
+      })
     val row = prepared.agg(aggCols.head, aggCols.tail: _*).collect()(0)
     val total = row.getAs[Long]("__total__")
+    val invalid = rules.indices.map(i => row.getAs[Long](s"__inv_$i"))
+    val sampled = rules.indices.filter(i => collectSamples && invalid(i) > 0)
+    val samples = sampled.zip(samplesOf(prepared, sampled.map(rules))).toMap
     rules.zipWithIndex.map { case (r, i) =>
-      val inv = row.getAs[Long](s"__inv_$i")
+      val inv = invalid(i)
       val frac = if (total > 0) inv.toDouble / total.toDouble else 0.0
-      val stats =
-        if (r.summary.isEmpty) Map.empty[String, Any]
-        else {
-          val sumRow = prepared.filter(invalidPred(r))
-            .selectExpr(r.summary.map { case (n, e) => s"$e AS $n" }.toSeq: _*)
-            .collect()(0)
+      val stats = summaries(i) match {
+        case None => Map.empty[String, Any]
+        case Some(Right(_)) =>
+          r.summary.keys.zipWithIndex
+            .map { case (k, j) => k -> row.getAs[Any](s"__sum_${i}_$j") }.toMap
+        case Some(Left(over)) =>
+          val sumRow = over.collect()(0)
           r.summary.keys.map(k => k -> sumRow.getAs[Any](k)).toMap
-        }
-      // Sample from `prepared` (ALL rules' features applied): a rule
-      // whose query or features reference an earlier rule's feature
-      // would not resolve against the bare frame.
-      val sample =
-        if (!collectSamples || inv == 0) Seq.empty[Map[String, String]]
-        else sampleFrom(prepared, r).collect().toSeq.map(s =>
-          s.schema.fieldNames.map(f =>
-            f -> String.valueOf(s.getAs[Any](f))).toMap)
+      }
       RuleReport(r.query, r.description, r.threshold, total, inv, frac,
         failed = frac > r.threshold, summaryStats = stats,
-        sampleInvalid = sample)
+        sampleInvalid = samples.getOrElse(i, Seq.empty))
     }
   }
+
+  /** The first [[SampleNum]] invalid rows of each rule, projected as
+    * [[sampleFrom]] projects them, from ONE execution that reads
+    * partitions in order the way `limit` does and stops once every rule
+    * has its rows ([[FirstRows.perFlag]]): the rows each rule's own
+    * `limit(SampleNum)` returns. `prepared` has ALL rules' features
+    * applied: a rule whose query or features reference an earlier
+    * rule's feature would not resolve against the bare frame. */
+  private def samplesOf(prepared: DataFrame,
+      rules: Seq[Rule]): Seq[Seq[Map[String, String]]] =
+    if (rules.isEmpty) Nil
+    else {
+      val names = prepared.columns.toIndexedSeq
+      // Positions, not names: a frame may carry two columns of one name.
+      val projections = rules.map { r =>
+        val p = sampleColumns(names, r)
+        if (p.nonEmpty) p else names.indices
+      }
+      val kept = projections.flatten.distinct.sorted
+      val flags = rules.indices.map(j => s"__s$j")
+      val tagged = prepared
+        .select(rules.zip(flags).map { case (r, f) => invalidPred(r).as(f) } :+
+          col("*"): _*)
+        .toDF(flags ++ names.indices.map(i => s"__c$i"): _*)
+        .where(flags.map(col).reduce(_ || _))
+        .select(flags.map(col) ++ kept.map(i => col(s"__c$i")): _*)
+      FirstRows.perFlag(tagged, rules.size, SampleNum).zip(projections).map {
+        case (rows, projection) => rows.map { s =>
+          projection.map(p =>
+            names(p) -> String.valueOf(s.get(kept.indexOf(p)))).toMap
+        }
+      }
+    }
 
   /** Report as a DataFrame (rule_id keyed, deterministic order). */
   def reportDF(spark: SparkSession, df: DataFrame, rules: Seq[Rule]): DataFrame = {
@@ -140,11 +186,18 @@ object RuleRunner {
     * (reference: TnAssertionReport.scala:104-113). */
   private def sampleFrom(prepared: DataFrame, rule: Rule): DataFrame = {
     val invalid = prepared.filter(invalidPred(rule))
-    val wanted = (referencedColumns(rule) ++ rule.features.keys).distinct
-    val present = invalid.columns.filter(c =>
-      wanted.exists(_.equalsIgnoreCase(c)))
-    (if (present.nonEmpty) invalid.select(present.map(col).toSeq: _*)
+    val columns = invalid.columns.toIndexedSeq
+    val present = sampleColumns(columns, rule).map(columns)
+    (if (present.nonEmpty) invalid.select(present.map(col): _*)
      else invalid).limit(SampleNum)
+  }
+
+  /** Positions of the columns a rule's sample keeps (its referenced
+    * columns and features, matched case-insensitively), in frame order;
+    * empty means the whole row. */
+  private def sampleColumns(columns: Seq[String], rule: Rule): Seq[Int] = {
+    val wanted = (referencedColumns(rule) ++ rule.features.keys).distinct
+    columns.indices.filter(i => wanted.exists(_.equalsIgnoreCase(columns(i))))
   }
 
   /** Per-rule sample of invalid rows (bounded, for reports). NOTE: when

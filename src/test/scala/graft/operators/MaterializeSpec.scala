@@ -102,4 +102,40 @@ class MaterializeSpec extends SparkSpec {
       assert(n.agg(sum("c")).head.getLong(0) == 100L)
     } finally spark.conf.unset("spark.graft.checkpointDir")
   }
+
+  test("reliable mode: once() keeps its blocks for the write, release() deletes the files") {
+    val s = spark
+    import s.implicits._
+    val base = (1L to 100L).toDF("id").groupBy(col("id") % 10)
+      .agg(count(lit(1)).as("c"))
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_ckpt").toString
+    def rddOf(df: DataFrame) = df.queryExecution.logical
+      .asInstanceOf[org.apache.spark.sql.execution.LogicalRDD].rdd
+    def exists(f: String) = {
+      val p = new org.apache.hadoop.fs.Path(f)
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+    }
+    // Counts the rows the upstream evaluates.
+    val evaluated = spark.sparkContext.longAccumulator("evaluated")
+    val seen = udf { (id: Long) => evaluated.add(1); id }
+    spark.conf.set("spark.graft.checkpointDir", dir)
+    try {
+      // The lazy barrier persists, so the job that writes its files
+      // reads the first consumer's blocks instead of the upstream.
+      val once = Materialize.once(spark.range(1, 101, 1, 4)
+        .select(seen(col("id")).as("id"), lit(1L).as("c")))
+      assert(rddOf(once).getStorageLevel == StorageLevel.MEMORY_AND_DISK)
+      assert(once.collect().map(_.getLong(1)).sum == 100L)
+      assert(evaluated.value == 100L, "the checkpoint write recomputed the upstream")
+      val n = Materialize.now(base, StorageLevel.DISK_ONLY)
+      for (m <- Seq(once, n)) {
+        val file = rddOf(m).getCheckpointFile
+        assert(file.exists(exists), "no checkpoint files written")
+        Materialize.release(m)
+        assert(!exists(file.get), s"${file.get} left behind")
+        assert(rddOf(m).getStorageLevel == StorageLevel.NONE)
+      }
+    } finally spark.conf.unset("spark.graft.checkpointDir")
+  }
 }
