@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel.DISK_ONLY
 import graft.functions.Portable._
 import graft.operators.Materialize
+import graft.similarity.Knn
 
 /** Deduplication operators for large text/embedding corpora —
   * SURVEY.md §2 items 20-25.
@@ -13,7 +14,8 @@ import graft.operators.Materialize
   *  - exact dedup = hash-groupBy: one shuffle on a 128-bit content hash,
   *    perfectly distributed by construction;
   *  - MinHash-LSH = signature projection (narrow) → explode to (band,
-  *    bucket) pairs → shuffle on band value → per-bucket self-join.
+  *    bucket) pairs → shuffle on band value → per-bucket pair explode
+  *    ([[bucketPairs]], shared with the shingle and winnowing paths).
   *    Candidate generation is O(collisions), never the O(n²) cross join;
   *  - SimHash = explode distinct tokens (shuffle on doc id) → 32
   *    conditional sums in ONE aggregation;
@@ -66,19 +68,23 @@ object Dedup {
   }
 
   /** LSH band values: md5 over each group of `bandSize` signature
-    * columns. numPerms = bandSize × numBands. */
-  def bandColumns(numPerms: Int, bandSize: Int): Seq[Column] =
+    * columns. numPerms = bandSize × numBands; any other geometry is
+    * rejected rather than silently ignoring the trailing permutations. */
+  def bandColumns(numPerms: Int, bandSize: Int): Seq[Column] = {
+    require(bandSize > 0 && numPerms % bandSize == 0,
+      s"numPerms ($numPerms) must be a multiple of a positive bandSize ($bandSize)")
     (0 until numPerms / bandSize).map { b =>
       md5(concat_ws("_",
         (0 until bandSize).map(j => col(s"sig_${b * bandSize + j}")): _*))
         .as(s"band_$b")
     }
+  }
 
   /** Near-duplicate candidate pairs: documents sharing ≥1 LSH band.
     * Returns (id_a, id_b, n_shared_bands), id_a < id_b.
     *
-    * Pair generation is bucket-local: group ids per (band, value), then
-    * emit each ordered combination exactly once with two nested explodes.
+    * Pair generation is bucket-local ([[bucketPairs]]): group ids per
+    * (band, value), then emit each ordered combination exactly once.
     * Versus the naïve self-join this halves the rows entering the
     * pair-level shuffle (no discarded id_a > id_b half) and reads the
     * signature projection once, not twice. `maxBucketSize` is the
@@ -103,32 +109,36 @@ object Dedup {
   def minhashCandidatePairs(df: DataFrame, textCol: String, idCol: String,
       numPerms: Int, bandSize: Int,
       maxBucketSize: Option[Int] = None): DataFrame = {
-    val numBands = numPerms / bandSize
-    val sigs = withMinhashSignature(df, textCol, numPerms)
-      .select(col(idCol) +: bandColumns(numPerms, bandSize): _*)
-    val banded = sigs.select(col(idCol).as("__id"), posexplode(
-      array((0 until numBands).map(b => col(s"band_$b")): _*))
-      .as(Seq("band_idx", "band_val")))
-    val buckets = banded
+    val buckets = bandedRows(df, textCol, idCol, numPerms, bandSize)
       .groupBy("band_idx", "band_val")
-      .agg(sort_array(collect_list(col("__id"))).as("ids"))
-      .where(size(col("ids")) > 1 &&
-        maxBucketSize.map(m => size(col("ids")) <= m).getOrElse(lit(true)))
-    buckets
-      .select(posexplode(col("ids")).as(Seq("pos", "id_a")), col("ids"))
-      // Split the two-level combination explode: without this barrier a
-      // hot bucket (boilerplate cluster of m docs) generates its whole
-      // C(m,2) pair set in the ONE task holding that bucket's row. The
-      // repartition spreads the m first-level rows across the cluster so
-      // the quadratic second level runs parallel; the extra shuffle
-      // carries Σ|bucket|² ids ≈ 2× the pair count — same order as the
-      // pair shuffle below that exists anyway.
+      .agg(sort_array(collect_list(col(idCol))).as("__ids"))
+      .where(size(col("__ids")) > 1 &&
+        maxBucketSize.map(m => size(col("__ids")) <= m).getOrElse(lit(true)))
+    bucketPairs(buckets, "n_shared_bands")
+  }
+
+  /** Every ordered id pair sharing a bucket, with the number of buckets
+    * it shares. `buckets` holds one row per bucket: its key columns and
+    * `__ids`, the bucket's sorted distinct ids. Returns (id_a, id_b,
+    * `countAs`), id_a < id_b. Callers group and filter their buckets
+    * (dropping size-1 and capped ones) before calling this.
+    *
+    * Each pair comes from two nested explodes — id_a at position i,
+    * then every id after it — so no id_a > id_b half is generated and
+    * discarded. The explodes are split by a repartition on id_a: without
+    * this barrier a hot bucket (a boilerplate cluster or stop-shingle
+    * shared by m docs) generates its whole C(m,2) pair set in the ONE
+    * task holding that bucket's row. The repartition spreads the m
+    * first-level rows across the cluster so the quadratic second level
+    * runs in parallel; the extra shuffle carries Σ|bucket|² ids ≈ 2× the
+    * pair count — same order as the pair shuffle that exists anyway. */
+  private[graft] def bucketPairs(buckets: DataFrame, countAs: String): DataFrame =
+    buckets.select(posexplode(col("__ids")).as(Seq("__pos", "id_a")), col("__ids"))
       .repartition(col("id_a"))
       .select(col("id_a"),
-        explode(slice(col("ids"), col("pos") + 2, size(col("ids")))).as("id_b"))
+        explode(slice(col("__ids"), col("__pos") + 2, size(col("__ids")))).as("id_b"))
       .groupBy("id_a", "id_b")
-      .agg(count(lit(1)).as("n_shared_bands"))
-  }
+      .agg(count(lit(1)).as(countAs))
 
   /** DISTINCT LSH candidate pairs — [[minhashCandidatePairs]] without
     * the `n_shared_bands` column, for consumers that re-rank or score
@@ -164,11 +174,11 @@ object Dedup {
     * STREAMING DataFrames (the signature expression is row-local). */
   def bandedRows(df: DataFrame, textCol: String, idCol: String,
       numPerms: Int, bandSize: Int): DataFrame = {
-    val numBands = numPerms / bandSize
+    val bands = bandColumns(numPerms, bandSize)
     withMinhashSignature(df, textCol, numPerms)
-      .select(col(idCol) +: bandColumns(numPerms, bandSize): _*)
+      .select(col(idCol) +: bands: _*)
       .select(col(idCol), posexplode(
-        array((0 until numBands).map(b => col(s"band_$b")): _*))
+        array(bands.indices.map(b => col(s"band_$b")): _*))
         .as(Seq("band_idx", "band_val")))
   }
 
@@ -193,6 +203,12 @@ object Dedup {
     bandedRows(stream, textCol, idCol, numPerms, bandSize)
       .join(staticIndex, Seq("band_idx", "band_val"))
 
+  /** Cap on distinct labels accepted by [[lshLabelPairReport]]: 1024
+    * labels bound the collected report at ~0.5M rows (few tens of MB on
+    * the driver) — far above any sources/splits use, far below the
+    * per-document cardinality the guard exists to reject. */
+  val maxReportLabels = 1024L
+
   /** Per-label-pair counts of LSH candidate pairs WITHOUT materializing
     * the pair set — the monitoring-rollup shape of [[minhashCandidatePairs]]
     * (cross-source contamination, train/test leakage): only the
@@ -216,16 +232,10 @@ object Dedup {
     * diagonal label_a = label_b appears when `includeSameLabel`),
     * value-identical to counting [[minhashCandidatePairs]] output.
     */
-  /** Cap on distinct labels accepted by [[lshLabelPairReport]]: 1024
-    * labels bound the collected report at ~0.5M rows (few tens of MB on
-    * the driver) — far above any sources/splits use, far below the
-    * per-document cardinality the guard exists to reject. */
-  val maxReportLabels = 1024L
-
   def lshLabelPairReport(df: DataFrame, textCol: String, idCol: String,
       labelCol: String, numPerms: Int, bandSize: Int,
       includeSameLabel: Boolean = false): DataFrame = {
-    val numBands = numPerms / bandSize
+    val bands = bandColumns(numPerms, bandSize)
     // One signature pass feeds every subset term, so the band frame is
     // cached for the duration of the computation ONLY: the result is a
     // few label-pair rows, so it is collected to the driver and
@@ -239,7 +249,7 @@ object Dedup {
     // band frame (as the incremental-dedup index does) use the
     // band-frame overload directly and keep control of its lifecycle.
     val labeledBands = withMinhashSignature(df, textCol, numPerms)
-      .select(col(labelCol).as("__label") +: bandColumns(numPerms, bandSize): _*)
+      .select(col(labelCol).as("__label") +: bands: _*)
       .cache()
     try {
       // The report is O(|labels|²) rows and the collect() below brings it
@@ -255,7 +265,7 @@ object Dedup {
           "collected to the driver. For high-cardinality labels use " +
           "lshLabelPairReportFromBands and keep the result distributed.")
       val report =
-        lshLabelPairReportFromBands(labeledBands, numBands, includeSameLabel)
+        lshLabelPairReportFromBands(labeledBands, bands.size, includeSameLabel)
       val spark = df.sparkSession
       spark.createDataFrame(
         spark.sparkContext.parallelize(report.collect().toIndexedSeq, 1),
@@ -318,9 +328,7 @@ object Dedup {
   /** 32-bit SimHash over distinct tokens: bit b is set when more token
     * hashes have bit b set than clear. One explode + one aggregation. */
   def simhash32(df: DataFrame, textCol: String, idCol: String): DataFrame = {
-    // explode_outer + post-filter: a plain explode gets an inferred
-    // size>0 pre-filter that pushdown re-inlines as a second
-    // split+distinct evaluation per row (see jaccardNeighbors).
+    // explode_outer + post-filter: see shingleIntersections.
     val hashed = df
       .select(col(idCol), array_distinct(tokens(col(textCol))).as("__toks"))
       .select(col(idCol), explode_outer(col("__toks")).as("tok"))
@@ -365,24 +373,15 @@ object Dedup {
     val grid = a.join(b, Seq("__block")).where(col("id_a") < col("id_b"))
       .where(col("n_a") =!= 0 || col("n_b") =!= 0)
     // Intersection counts accrue only for pairs actually sharing a
-    // shingle; bucket-local ordered-combination generation as in
-    // minhashCandidatePairs (explode_outer: see jaccardNeighbors).
+    // shingle, generated bucket-locally per (block, shingle)
+    // (explode_outer: see shingleIntersections).
     val posting = prepared
       .select(col("__block"), col("__id"), explode_outer(col("__sh")).as("__shingle"))
       .where(col("__shingle").isNotNull)
-    val inter = posting
+    val inter = bucketPairs(posting
       .groupBy("__block", "__shingle")
       .agg(sort_array(collect_list(col("__id"))).as("__ids"))
-      .where(size(col("__ids")) > 1)
-      .select(posexplode(col("__ids")).as(Seq("__pos", "id_a")), col("__ids"))
-      // Same hot-bucket barrier as minhashCandidatePairs/jaccardNeighbors:
-      // without it a stop-shingle shared by m docs generates its whole
-      // C(m,2) pair set in the one task holding that posting row.
-      .repartition(col("id_a"))
-      .select(col("id_a"),
-        explode(slice(col("__ids"), col("__pos") + 2, size(col("__ids")))).as("id_b"))
-      .groupBy("id_a", "id_b")
-      .agg(count(lit(1)).as("__inter"))
+      .where(size(col("__ids")) > 1), "__inter")
     grid.join(inter, Seq("id_a", "id_b"), "left")
       .select(col("id_a"), col("id_b"),
         (coalesce(col("__inter"), lit(0L)).cast("double") /
@@ -749,18 +748,10 @@ object Dedup {
     // (id, n) structs through sort_array/posexplode/explode plus
     // first() aggregates measured ~2× the count-only path.
     val counts = posting.groupBy("__id").agg(count(lit(1)).as("__n"))
-    // Bucket-local combination generation (same shape as the LSH pair
-    // path), with the same hot-bucket repartition barrier.
-    val inter = posting
+    val inter = bucketPairs(posting
       .groupBy("__block", "__shingle")
       .agg(sort_array(collect_list(col("__id"))).as("__ids"))
-      .where(size(col("__ids")) > 1)
-      .select(posexplode(col("__ids")).as(Seq("__pos", "id_a")), col("__ids"))
-      .repartition(col("id_a"))
-      .select(col("id_a"),
-        explode(slice(col("__ids"), col("__pos") + 2, size(col("__ids")))).as("id_b"))
-      .groupBy("id_a", "id_b")
-      .agg(count(lit(1)).as("__inter"))
+      .where(size(col("__ids")) > 1), "__inter")
     (counts, inter)
   }
 
@@ -1232,16 +1223,18 @@ object Dedup {
   /** Cosine similarity for every pair of rows sharing `blockCol`
     * (embedding near-dup). Returns (id_a, id_b, cosine). */
   def embeddingPairs(df: DataFrame, vecCol: String, idCol: String,
-      blockCol: String): DataFrame = {
-    val prepared = df.select(col(blockCol).as("__block"), col(idCol).as("__id"),
-      asDoubles(col(vecCol)).as("__v"))
-      .withColumn("__norm", sqrt(dot(col("__v"), col("__v")))) // once per row
-    val a = prepared.toDF("__block", "id_a", "v_a", "norm_a")
-    val b = prepared.toDF("__block", "id_b", "v_b", "norm_b")
-    a.join(b, Seq("__block")).where(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        round(dot(col("v_a"), col("v_b")) / (col("norm_a") * col("norm_b")), 6)
-          .as("cosine"))
+      blockCol: String): DataFrame =
+    sameKeyCosines(Knn.withNorm(df.select(col(blockCol).as("__block"),
+      col(idCol).as("__id"), asDoubles(col(vecCol)).as("__v")), "__v", "__norm"))
+
+  /** (id_a, id_b, cosine), id_a < id_b, for every pair of `prepared`
+    * rows (key, id, vector, norm) that share the key. */
+  private def sameKeyCosines(prepared: DataFrame): DataFrame = {
+    val key = prepared.columns.head
+    val a = prepared.toDF(key, "id_a", "v_a", "norm_a")
+    val b = prepared.toDF(key, "id_b", "v_b", "norm_b")
+    a.join(b, Seq(key)).where(col("id_a") < col("id_b"))
+      .select(col("id_a"), col("id_b"), Knn.cosine("v_a", "norm_a", "v_b", "norm_b"))
   }
 
   /** Scale-safe near-dup edge generator: hyperplane-LSH buckets block
@@ -1276,19 +1269,11 @@ object Dedup {
     * is the geometry that must be re-sized as the corpus grows. */
   def lshCosinePairs(df: DataFrame, vecCol: String, idCol: String,
       numPlanes: Int, dims: Int, minCosine: Double): DataFrame = {
-    import graft.similarity.Knn
     val planes = Knn.planes(numPlanes, dims)
-    val prepared = df
+    sameKeyCosines(Knn.withNorm(df
       .select(col(idCol).as("__id"), asDoubles(col(vecCol)).as("__v"))
-      .withColumn("__bucket", Knn.bucketId(col("__v"), planes))
-      .withColumn("__norm", sqrt(dot(col("__v"), col("__v"))))
-      .select("__bucket", "__id", "__v", "__norm")
-    val a = prepared.toDF("__bucket", "id_a", "v_a", "norm_a")
-    val b = prepared.toDF("__bucket", "id_b", "v_b", "norm_b")
-    a.join(b, Seq("__bucket")).where(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        round(dot(col("v_a"), col("v_b")) / (col("norm_a") * col("norm_b")), 6)
-          .as("cosine"))
+      .withColumn("__bucket", Knn.bucketId(col("__v"), planes)), "__v", "__norm")
+      .select("__bucket", "__id", "__v", "__norm"))
       .where(col("cosine") >= minCosine)
   }
 

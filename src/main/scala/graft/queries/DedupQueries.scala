@@ -2336,8 +2336,8 @@ object DedupQueries {
     * winnowing's entire point at corpus scale — while staying fully
     * deterministic (no random sampling). In-row HOFs build the
     * positional hash and window-min arrays (WordShingles dedups, so
-    * it cannot be used here); the pair walk is the same bucket-local
-    * ordered-combination slice as the LSH path. */
+    * it cannot be used here); the pair walk is the LSH path's
+    * [[Dedup.bucketPairs]]. */
   def qdWinnowPairs(spark: SparkSession, dir: String): DataFrame = {
     // Positional 5-gram hashes via the native one-pass expression
     // (duplicates kept, document order) — value-identical to the
@@ -2357,17 +2357,10 @@ object DedupQueries {
       .select(col("__block"), col("doc_id"), posHashes.as("__hs"))
       .select(col("__block"), col("doc_id"), explode_outer(winnowed).as("fp"))
       .where(col("fp").isNotNull)
-    posting
+    Dedup.bucketPairs(posting
       .groupBy("__block", "fp")
       .agg(sort_array(collect_list(col("doc_id"))).as("__ids"))
-      .where(size(col("__ids")) > 1)
-      .select(posexplode(col("__ids")).as(Seq("__pos", "id_a")), col("__ids"))
-      .repartition(col("id_a"))
-      .select(col("id_a"),
-        explode(slice(col("__ids"), col("__pos") + 2, size(col("__ids"))))
-          .as("id_b"))
-      .groupBy("id_a", "id_b")
-      .agg(count(lit(1)).as("n_shared"))
+      .where(size(col("__ids")) > 1), "n_shared")
       .where(col("n_shared") >= 2)
       .orderBy("id_a", "id_b")
   }

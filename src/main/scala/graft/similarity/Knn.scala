@@ -9,15 +9,25 @@ import java.security.MessageDigest
 
 /** Similarity search over an embedding column — SURVEY.md §2 items 26-27.
   *
-  * Two paths:
-  *  - [[bruteForce]]: exact top-k for a (small, broadcast) query set —
-  *    the baseline. Cost is |Q|×N dot products, fully parallel, no
-  *    shuffle besides the final per-query top-k.
-  *  - [[lshTopK]]: random-hyperplane LSH. Every vector gets a bucket id
-  *    from the sign pattern of `numPlanes` hyperplane projections; top-k
-  *    runs within buckets only. At 100 TB this turns the O(N²) pair
-  *    space into per-bucket joins that shuffle on the bucket id. The
-  *    hyperplanes are md5-derived (deterministic, reproducible anywhere).
+  * Seven search entry points, from exact to approximate:
+  *  - [[bruteForce]] (top-k) and [[radiusSearch]] (every neighbor above
+  *    a cosine): exact, a broadcast (small) query set against every
+  *    corpus vector — |Q|×N dot products, fully parallel, no shuffle
+  *    besides the final per-query top-k.
+  *  - [[ivfTopK]]: a deterministic k-means quantizer buckets the corpus;
+  *    each query searches its `nprobe` nearest buckets.
+  *  - [[pqTopK]] and [[ivfPqTopK]]: product-quantization codes scored by
+  *    asymmetric distance, over the whole corpus or within IVF buckets.
+  *  - [[lshMultiProbeTopK]]: random-hyperplane LSH. Every vector gets a
+  *    bucket id from the sign pattern of `numPlanes` md5-derived
+  *    hyperplane projections (deterministic, reproducible anywhere);
+  *    each vector searches its own bucket plus `nflip` neighbouring
+  *    ones, so the join shuffles on the bucket id instead of running
+  *    O(N²) pairs. [[lshTopK]] is its single-probe case (nflip = 0).
+  *
+  * All of them score through one core: [[withNorm]] (norms once per
+  * row), [[cosine]] or [[adcDistance]], and [[topK]] (one per-query rank
+  * window).
   */
 object Knn {
 
@@ -43,47 +53,64 @@ object Knn {
       when(dot(vec, typedLit(w)) >= 0.0, lit(1L << p)).otherwise(0L)
     }.reduce(_ + _)
 
+  /** `df` plus `norm`, the L2 norm of its vector column `vec`. Every
+    * search takes its norms from here, ONCE per row, never per pair in
+    * the join that follows: the same doubles (sqrt of the same fold),
+    * and each pair then costs one dot product instead of three. */
+  private[graft] def withNorm(df: DataFrame, vec: String, norm: String): DataFrame =
+    df.withColumn(norm, sqrt(dot(col(vec), col(vec))))
+
+  /** `cosine`: the cosine of vectors `a` and `b` from their
+    * [[withNorm]] norms, rounded to 6 dp. */
+  private[graft] def cosine(a: String, normA: String, b: String,
+      normB: String): Column =
+    round(dot(col(a), col(b)) / (col(normA) * col(normB)), 6).as("cosine")
+
+  private val qcCosine = cosine("q_vec", "q_norm", "c_vec", "c_norm")
+
+  /** The `k` best rows of each `q_id` by `score`, ties to the lower
+    * `neighbor_id`, numbered 1..k in `rank`: one window per query. */
+  private[graft] def topK(pairs: DataFrame, k: Int, score: Column): DataFrame = {
+    require(k > 0, s"k must be positive, got $k")
+    pairs.withColumn("rank", row_number().over(
+        Window.partitionBy("q_id").orderBy(score, col("neighbor_id"))))
+      .where(col("rank") <= k)
+  }
+
+  // The query and corpus sides under the names qcCosine, adcDistance
+  // and topK read.
+  private def queryVecs(queries: DataFrame, vecCol: String, idCol: String) =
+    queries.select(col(idCol).as("q_id"), asDoubles(col(vecCol)).as("q_vec"))
+
+  private def corpusVecs(corpus: DataFrame, vecCol: String, idCol: String) =
+    corpus.select(col(idCol).as("neighbor_id"), asDoubles(col(vecCol)).as("c_vec"))
+
   /** Exact cosine top-k of `queries` against `corpus` (both having
     * `idCol` + `vecCol`). Returns (q_id, neighbor_id, cosine, rank). */
   def bruteForce(corpus: DataFrame, queries: DataFrame, vecCol: String,
-      idCol: String, k: Int): DataFrame = {
-    // Norms are computed ONCE per row here, not per pair in the |Q|×N
-    // join below — same doubles (sqrt of the same fold), |Q|+N fewer
-    // dot products by a factor of the opposite side's cardinality.
-    val q = queries.select(col(idCol).as("q_id"), asDoubles(col(vecCol)).as("q_vec"))
-      .withColumn("q_norm", sqrt(dot(col("q_vec"), col("q_vec"))))
-    val c = corpus.select(col(idCol).as("neighbor_id"), asDoubles(col(vecCol)).as("c_vec"))
-      .withColumn("c_norm", sqrt(dot(col("c_vec"), col("c_vec"))))
-    val w = Window.partitionBy("q_id")
-      .orderBy(col("cosine").desc, col("neighbor_id"))
+      idCol: String, k: Int): DataFrame =
+    topK(allCosines(corpus, queries, vecCol, idCol), k, col("cosine").desc)
+
+  /** (q_id, neighbor_id, cosine) for every query against every other
+    * corpus vector, the query set broadcast. */
+  private def allCosines(corpus: DataFrame, queries: DataFrame,
+      vecCol: String, idCol: String): DataFrame = {
+    val q = withNorm(queryVecs(queries, vecCol, idCol), "q_vec", "q_norm")
+    val c = withNorm(corpusVecs(corpus, vecCol, idCol), "c_vec", "c_norm")
     c.join(broadcast(q), col("q_id") =!= col("neighbor_id"))
-      .select(col("q_id"), col("neighbor_id"),
-        round(dot(col("q_vec"), col("c_vec")) / (col("q_norm") * col("c_norm")), 6)
-          .as("cosine"))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
+      .select(col("q_id"), col("neighbor_id"), qcCosine)
   }
 
   /** Range (radius) search: every corpus vector with cosine ≥
     * `minCosine` of each query — the "all sufficiently-similar
     * neighbors" complement of top-k, used for near-dup sweeps and
     * recall-oriented retrieval where result size is data-dependent.
-    * Same broadcast-query exhaustive scan as [[bruteForce]] (norms
-    * once per row, never per pair); the threshold prunes in the same
-    * projection, so no rank window runs at all. Returns
-    * (q_id, neighbor_id, cosine). */
+    * Same broadcast-query exhaustive scan as [[bruteForce]]; the
+    * threshold prunes in the same projection, so no rank window runs
+    * at all. Returns (q_id, neighbor_id, cosine). */
   def radiusSearch(corpus: DataFrame, queries: DataFrame, vecCol: String,
-      idCol: String, minCosine: Double): DataFrame = {
-    val q = queries.select(col(idCol).as("q_id"), asDoubles(col(vecCol)).as("q_vec"))
-      .withColumn("q_norm", sqrt(dot(col("q_vec"), col("q_vec"))))
-    val c = corpus.select(col(idCol).as("neighbor_id"), asDoubles(col(vecCol)).as("c_vec"))
-      .withColumn("c_norm", sqrt(dot(col("c_vec"), col("c_vec"))))
-    c.join(broadcast(q), col("q_id") =!= col("neighbor_id"))
-      .select(col("q_id"), col("neighbor_id"),
-        round(dot(col("q_vec"), col("c_vec")) / (col("q_norm") * col("c_norm")), 6)
-          .as("cosine"))
-      .where(col("cosine") >= minCosine)
-  }
+      idCol: String, minCosine: Double): DataFrame =
+    allCosines(corpus, queries, vecCol, idCol).where(col("cosine") >= minCosine)
 
   /** Deterministic IVF coarse quantizer, trained on a bounded sample —
     * the production IVF recipe: ONE distributed pass takes a
@@ -194,27 +221,29 @@ object Knn {
     * Returns (q_id, neighbor_id, approx_d2, rank). */
   def pqTopK(corpus: DataFrame, queries: DataFrame, vecCol: String,
       idCol: String, k: Int, codebooks: Seq[Seq[Seq[Double]]]): DataFrame = {
-    val dsub = codebooks.head.head.length
-    val m = codebooks.size
-    val cbLit = typedLit(codebooks)
     val c = corpus.select(col(idCol).as("neighbor_id"),
       pqEncode(asDoubles(col(vecCol)), codebooks).as("codes"))
-    val q = queries.select(col(idCol).as("q_id"), asDoubles(col(vecCol)).as("q_vec"))
+    val q = queryVecs(queries, vecCol, idCol)
+    topK(c.join(broadcast(q), col("q_id") =!= col("neighbor_id"))
+      .select(col("q_id"), col("neighbor_id"), adcDistance(codebooks)),
+      k, col("approx_d2").asc)
+  }
+
+  /** `approx_d2`: the asymmetric (ADC) distance of `q_vec` to the
+    * vector that `codes` encode, Σⱼ ‖q_subⱼ − codebookⱼ[codeⱼ]‖² against
+    * the codebook literal, rounded to 6 dp. */
+  private[graft] def adcDistance(codebooks: Seq[Seq[Seq[Double]]]): Column = {
+    val dsub = codebooks.head.head.length
+    val cbLit = typedLit(codebooks)
     val subD2 = (j: Column, code: Column) => {
       val cent = element_at(element_at(cbLit, j + 1), code + 1)
       val qSub = slice(col("q_vec"), j * dsub + 1, lit(dsub))
       aggregate(zip_with(qSub, cent, (x, y) => (x - y) * (x - y)),
         lit(0.0), (acc, v) => acc + v)
     }
-    val w = Window.partitionBy("q_id")
-      .orderBy(col("approx_d2").asc, col("neighbor_id"))
-    c.join(broadcast(q), col("q_id") =!= col("neighbor_id"))
-      .select(col("q_id"), col("neighbor_id"),
-        round(aggregate(sequence(lit(0), lit(m - 1)), lit(0.0),
-          (acc, j) => acc + subD2(j, element_at(col("codes"), j + 1))), 6)
-          .as("approx_d2"))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
+    round(aggregate(sequence(lit(0), lit(codebooks.size - 1)), lit(0.0),
+      (acc, j) => acc + subD2(j, element_at(col("codes"), j + 1))), 6)
+      .as("approx_d2")
   }
 
   /** 0-based argmin over squared L2 distance to each centroid. Since
@@ -242,22 +271,27 @@ object Knn {
   def ivfTopK(corpus: DataFrame, queries: DataFrame, vecCol: String,
       idCol: String, k: Int, numCentroids: Int, nprobe: Int,
       iters: Int = 5): DataFrame = {
+    requireProbes(k, nprobe)
     val cents = trainCentroids(corpus, vecCol, idCol, numCentroids, iters)
-    val c = corpus.select(col(idCol).as("neighbor_id"), asDoubles(col(vecCol)).as("c_vec"))
-      .withColumn("bucket", nearestCentroid(col("c_vec"), cents))
-      .withColumn("c_norm", sqrt(dot(col("c_vec"), col("c_vec"))))
-    val q = queries.select(col(idCol).as("q_id"), asDoubles(col(vecCol)).as("q_vec"))
-      .withColumn("bucket", explode(probeCentroids(col("q_vec"), cents, nprobe)))
-      .withColumn("q_norm", sqrt(dot(col("q_vec"), col("q_vec"))))
-    val w = Window.partitionBy("q_id")
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    c.join(broadcast(q), Seq("bucket")).where(col("q_id") =!= col("neighbor_id"))
-      .select(col("q_id"), col("neighbor_id"),
-        round(dot(col("q_vec"), col("c_vec")) / (col("q_norm") * col("c_norm")), 6)
-          .as("cosine"))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
+    val c = withNorm(corpusVecs(corpus, vecCol, idCol)
+      .withColumn("bucket", nearestCentroid(col("c_vec"), cents)), "c_vec", "c_norm")
+    val q = withNorm(probeRows(queries, vecCol, idCol, cents, nprobe),
+      "q_vec", "q_norm")
+    topK(c.join(broadcast(q), Seq("bucket")).where(col("q_id") =!= col("neighbor_id"))
+      .select(col("q_id"), col("neighbor_id"), qcCosine), k, col("cosine").desc)
   }
+
+  /** Fails before the centroid training job: `nprobe <= 0` probes no
+    * bucket and `k <= 0` ranks no neighbor, so either would return an
+    * empty frame. */
+  private def requireProbes(k: Int, nprobe: Int): Unit =
+    require(k > 0 && nprobe > 0, s"k ($k) and nprobe ($nprobe) must be positive")
+
+  /** One (q_id, q_vec, bucket) row per query and probed bucket. */
+  private def probeRows(queries: DataFrame, vecCol: String, idCol: String,
+      cents: Seq[Seq[Double]], nprobe: Int): DataFrame =
+    queryVecs(queries, vecCol, idCol)
+      .withColumn("bucket", explode(probeCentroids(col("q_vec"), cents, nprobe)))
 
   /** The composed IVF-PQ search — the standard billion-scale ANN
     * layout: the coarse quantizer ([[trainCentroids]]) prunes the
@@ -271,32 +305,16 @@ object Knn {
   def ivfPqTopK(corpus: DataFrame, queries: DataFrame, vecCol: String,
       idCol: String, k: Int, numCentroids: Int, nprobe: Int,
       codebooks: Seq[Seq[Seq[Double]]], iters: Int = 5): DataFrame = {
+    requireProbes(k, nprobe)
     val cents = trainCentroids(corpus, vecCol, idCol, numCentroids, iters)
-    val dsub = codebooks.head.head.length
-    val m = codebooks.size
-    val cbLit = typedLit(codebooks)
-    val c = corpus.select(col(idCol).as("neighbor_id"),
-      asDoubles(col(vecCol)).as("c_vec"))
+    val c = corpusVecs(corpus, vecCol, idCol)
       .select(col("neighbor_id"),
         nearestCentroid(col("c_vec"), cents).as("bucket"),
         pqEncode(col("c_vec"), codebooks).as("codes"))
-    val q = queries.select(col(idCol).as("q_id"), asDoubles(col(vecCol)).as("q_vec"))
-      .withColumn("bucket", explode(probeCentroids(col("q_vec"), cents, nprobe)))
-    val subD2 = (j: Column, code: Column) => {
-      val cent = element_at(element_at(cbLit, j + 1), code + 1)
-      val qSub = slice(col("q_vec"), j * dsub + 1, lit(dsub))
-      aggregate(zip_with(qSub, cent, (x, y) => (x - y) * (x - y)),
-        lit(0.0), (acc, v) => acc + v)
-    }
-    val w = Window.partitionBy("q_id")
-      .orderBy(col("approx_d2").asc, col("neighbor_id"))
-    c.join(broadcast(q), Seq("bucket")).where(col("q_id") =!= col("neighbor_id"))
-      .select(col("q_id"), col("neighbor_id"),
-        round(aggregate(sequence(lit(0), lit(m - 1)), lit(0.0),
-          (acc, j) => acc + subD2(j, element_at(col("codes"), j + 1))), 6)
-          .as("approx_d2"))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
+    val q = probeRows(queries, vecCol, idCol, cents, nprobe)
+    topK(c.join(broadcast(q), Seq("bucket")).where(col("q_id") =!= col("neighbor_id"))
+      .select(col("q_id"), col("neighbor_id"), adcDistance(codebooks)),
+      k, col("approx_d2").asc)
   }
 
   /** Multi-probe LSH top-k (Lv et al., "Multi-Probe LSH"): each query
@@ -309,17 +327,14 @@ object Knn {
     * corpus side still stores ONE bucket per vector, so the join stays
     * a bucket-key shuffle and no pair is generated twice. Probe order
     * is deterministic: (|margin|, plane-index) struct sort, bit masks
-    * carried as per-plane literals (no variable shifts). Candidates are
-    * a strict superset of [[lshTopK]]'s for the same planes.
+    * carried as per-plane literals (no variable shifts). Candidates
+    * grow with `nflip`; at nflip = 0 each vector searches its own
+    * bucket only ([[lshTopK]]).
     * Returns (q_id, neighbor_id, bucket, cosine, rank). */
   def lshMultiProbeTopK(corpus: DataFrame, vecCol: String, idCol: String,
-      numPlanes: Int, dims: Int, k: Int, nflip: Int): DataFrame = {
-    val w = Window.partitionBy("q_id")
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    multiProbeCandidates(corpus, vecCol, idCol, numPlanes, dims, nflip)
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-  }
+      numPlanes: Int, dims: Int, k: Int, nflip: Int): DataFrame =
+    topK(multiProbeCandidates(corpus, vecCol, idCol, numPlanes, dims, nflip),
+      k, col("cosine").desc)
 
   /** The pre-rank candidate frame of [[lshMultiProbeTopK]] — one row per
     * (query, corpus vector sharing any probed bucket), each candidate
@@ -342,7 +357,7 @@ object Knn {
   def prepareProbeIndex(corpus: DataFrame, vecCol: String, idCol: String,
       numPlanes: Int, dims: Int): DataFrame = {
     val ps = planes(numPlanes, dims)
-    corpus.select(col(idCol).as("__id"),
+    withNorm(corpus.select(col(idCol).as("__id"),
       asDoubles(col(vecCol)).as("__v"))
       .withColumn("__projs",
         array(ps.map(w => dot(col("__v"), typedLit(w))): _*))
@@ -350,8 +365,7 @@ object Knn {
         (0 until numPlanes).map { p =>
           when(element_at(col("__projs"), p + 1) >= 0.0, lit(1L << p))
             .otherwise(0L)
-        }.reduce(_ + _))
-      .withColumn("__norm", sqrt(dot(col("__v"), col("__v"))))
+        }.reduce(_ + _)), "__v", "__norm")
   }
 
   /** [[multiProbeCandidates]] over an already-built (possibly
@@ -359,22 +373,25 @@ object Knn {
   def multiProbeCandidatesPrepared(prepared: DataFrame,
       numPlanes: Int, nflip: Int): DataFrame = {
     require(nflip >= 0 && nflip <= numPlanes, s"nflip $nflip out of range")
-    // nflip nearest-margin planes, ties to the lower plane index; masks
-    // ride the sort as literals so the flip is bucket XOR mask.
-    val flipMasks = slice(array_sort(array((0 until numPlanes).map { p =>
-      struct(abs(element_at(col("__projs"), p + 1)).as("a"),
-        lit(p).as("i"), lit(1L << p).as("m"))
-    }: _*)), 1, nflip).getField("m")
-    val probes = concat(array(col("bucket")),
-      transform(flipMasks, m => col("bucket").bitwiseXOR(m)))
+    // The own bucket, then at nflip > 0 one per nearest-margin plane,
+    // ties to the lower plane index; masks ride the sort as literals so
+    // the flip is bucket XOR mask. At nflip = 0 no sort runs.
+    val probe =
+      if (nflip == 0) col("bucket")
+      else {
+        val flipMasks = slice(array_sort(array((0 until numPlanes).map { p =>
+          struct(abs(element_at(col("__projs"), p + 1)).as("a"),
+            lit(p).as("i"), lit(1L << p).as("m"))
+        }: _*)), 1, nflip).getField("m")
+        explode(concat(array(col("bucket")),
+          transform(flipMasks, m => col("bucket").bitwiseXOR(m))))
+      }
     val a = prepared.select(col("__id").as("q_id"), col("__v").as("q_vec"),
-      explode(probes).as("bucket"), col("__norm").as("q_norm"))
+      probe.as("bucket"), col("__norm").as("q_norm"))
     val b = prepared.select(col("__id").as("neighbor_id"),
       col("__v").as("c_vec"), col("bucket"), col("__norm").as("c_norm"))
     a.join(b, Seq("bucket")).where(col("q_id") =!= col("neighbor_id"))
-      .select(col("q_id"), col("neighbor_id"), col("bucket"),
-        round(dot(col("q_vec"), col("c_vec")) / (col("q_norm") * col("c_norm")), 6)
-          .as("cosine"))
+      .select(col("q_id"), col("neighbor_id"), col("bucket"), qcCosine)
   }
 
   /** LSH index-health histogram — the ANN counterpart of the MinHash
@@ -405,26 +422,10 @@ object Knn {
       .orderBy("bucket_size")
   }
 
-  /** Approximate top-k: rank within LSH buckets only.
+  /** Single-probe LSH top-k: [[lshMultiProbeTopK]] at nflip = 0, each
+    * vector ranked against its own bucket only.
     * Returns (q_id, neighbor_id, bucket, cosine, rank). */
   def lshTopK(corpus: DataFrame, vecCol: String, idCol: String,
-      numPlanes: Int, dims: Int, k: Int): DataFrame = {
-    val ps = planes(numPlanes, dims)
-    val withBucket = corpus.select(col(idCol).as("__id"),
-      asDoubles(col(vecCol)).as("__v"))
-      .withColumn("bucket", bucketId(col("__v"), ps))
-      .withColumn("__norm", sqrt(dot(col("__v"), col("__v")))) // once per row
-    val a = withBucket.select(col("__id").as("q_id"), col("__v").as("q_vec"),
-      col("bucket"), col("__norm").as("q_norm"))
-    val b = withBucket.select(col("__id").as("neighbor_id"), col("__v").as("c_vec"),
-      col("bucket"), col("__norm").as("c_norm"))
-    val w = Window.partitionBy("q_id")
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    a.join(b, Seq("bucket")).where(col("q_id") =!= col("neighbor_id"))
-      .select(col("q_id"), col("neighbor_id"), col("bucket"),
-        round(dot(col("q_vec"), col("c_vec")) / (col("q_norm") * col("c_norm")), 6)
-          .as("cosine"))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-  }
+      numPlanes: Int, dims: Int, k: Int): DataFrame =
+    lshMultiProbeTopK(corpus, vecCol, idCol, numPlanes, dims, k, nflip = 0)
 }

@@ -5,14 +5,23 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Keeps one session builder, one SparkListener and one lineage
-  * barrier in the program. */
+/** Keeps one session builder, one SparkListener, one lineage barrier,
+  * one bucket-pair generator and one vector norm in the program. */
 class SourceHygieneSpec extends AnyFunSuite {
   private def sources: Seq[Path] = {
     val walk = Files.walk(Paths.get("src/main"))
     try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
     finally walk.close()
   }
+
+  /** Occurrences of `needle` in the sources under the given
+    * `src/main/scala/graft` subdirectories. */
+  private def occurrences(needle: String, dirs: String*): Int =
+    sources.filter(p => dirs.exists(d =>
+      p.startsWith(Paths.get("src/main/scala/graft", d)))).map { p =>
+      java.util.regex.Pattern.quote(needle).r
+        .findAllMatchIn(Files.readString(p)).size
+    }.sum
 
   private def filesContaining(needles: String*): Set[String] =
     sources.filter { p =>
@@ -33,5 +42,13 @@ class SourceHygieneSpec extends AnyFunSuite {
   test("only Materialize takes a checkpoint") {
     assert(filesContaining("localCheckpoint(", ".checkpoint(") ===
       Set("Materialize.scala"))
+  }
+
+  test("only Dedup.bucketPairs explodes bucket-local id pairs") {
+    assert(occurrences("explode(slice(", "dedup") === 1)
+  }
+
+  test("only Knn.withNorm computes a vector norm") {
+    assert(occurrences("sqrt(dot(", "dedup", "similarity") === 1)
   }
 }

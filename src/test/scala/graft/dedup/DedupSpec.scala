@@ -135,4 +135,36 @@ class DedupSpec extends SparkSpec {
       "block", prefixLen = 40, maxDist = 4, maxBlockSize = 10).count()
     assert(full == 4) // (1,2) + C(3,2) identical pairs in B
   }
+
+  /** Runs `body` once per band entry point and expects the geometry
+    * check's message, which names both values. */
+  private def assertBandGeometryRejected(numPerms: Int, bandSize: Int): Unit = {
+    import graft.syntax._
+    val d = docs(1L -> "a b c d", 2L -> "a b c d")
+      .withColumn("label", lit("x"))
+    val entries: Seq[(String, () => Any)] = Seq(
+      "nearDupCandidates" -> (() => d.nearDupCandidates("text", "doc_id",
+        numPerms, bandSize)),
+      "incrementalNearDups" -> (() => Dedup.incrementalNearDups(d, d,
+        "text", "doc_id", numPerms, bandSize)),
+      "bandIndex" -> (() => Dedup.bandIndex(d, "text", "doc_id",
+        numPerms, bandSize)),
+      "lshLabelPairReport" -> (() => Dedup.lshLabelPairReport(d, "text",
+        "doc_id", "label", numPerms, bandSize)))
+    for ((name, call) <- entries) {
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains(s"numPerms ($numPerms)") &&
+        e.getMessage.contains(s"bandSize ($bandSize)"), s"$name: ${e.getMessage}")
+    }
+  }
+
+  test("band geometry: numPerms not a multiple of bandSize is rejected") {
+    // (48, 5) used to band sig_0..sig_44 and ignore three permutations.
+    assertBandGeometryRejected(48, 5)
+  }
+
+  test("band geometry: a bandSize of zero is rejected") {
+    // (16, 0) used to die with an ArithmeticException (/ by zero).
+    assertBandGeometryRejected(16, 0)
+  }
 }

@@ -134,4 +134,30 @@ class KnnSpec extends SparkSpec {
     // 3 planes -> at most 8 buckets.
     assert(stats.map(_.getLong(1)).sum <= 8)
   }
+
+  test("top-k entries reject k <= 0 and IVF entries reject nprobe <= 0") {
+    // Both used to return an empty frame: slice(..., 1, 0) probes no
+    // bucket, and rank <= 0 keeps no row.
+    val corpus = vecs(1L -> Seq(1.0, 0.0), 2L -> Seq(0.9, 0.1),
+      3L -> Seq(0.0, 1.0), 4L -> Seq(0.1, 0.9))
+    val cb = Knn.trainPqCodebooks(corpus, "embedding", "vec_id", 1, 2)
+    def rejected(what: String)(call: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](call)
+      assert(e.getMessage.contains(what), e.getMessage)
+    }
+    rejected("nprobe (0)")(Knn.ivfTopK(corpus, corpus, "embedding", "vec_id",
+      k = 2, numCentroids = 2, nprobe = 0))
+    rejected("nprobe (-1)")(Knn.ivfPqTopK(corpus, corpus, "embedding",
+      "vec_id", k = 2, numCentroids = 2, nprobe = -1, codebooks = cb))
+    rejected("k (0)")(Knn.ivfTopK(corpus, corpus, "embedding", "vec_id",
+      k = 0, numCentroids = 2, nprobe = 1))
+    rejected("k must be positive")(Knn.bruteForce(corpus, corpus,
+      "embedding", "vec_id", 0))
+    rejected("k must be positive")(Knn.pqTopK(corpus, corpus, "embedding",
+      "vec_id", -1, cb))
+    rejected("k must be positive")(Knn.lshTopK(corpus, "embedding",
+      "vec_id", 2, 2, 0))
+    rejected("k must be positive")(Knn.lshMultiProbeTopK(corpus, "embedding",
+      "vec_id", 2, 2, 0, 1))
+  }
 }
