@@ -26,7 +26,16 @@ case class DiffConfig(
     numericThreshold: Double = 1e-6,
     perColumnThresholds: Option[Seq[Double]] = None,
     filterEqualRows: Boolean = false,
-    validateKeys: Boolean = true)
+    validateKeys: Boolean = true) {
+  require(left.joinColumns.nonEmpty, "joinColumns must be non-empty")
+  require(left.joinColumns.length == right.joinColumns.length,
+    "joinColumns must be of the same length for both data sets")
+  require(left.diffColumns.length == right.diffColumns.length,
+    "diffColumns must be of the same length for both data sets")
+  perColumnThresholds.foreach(t => require(t.length == left.diffColumns.length,
+    s"thresholds must give one value per diff column: got ${t.length} " +
+      s"thresholds for ${left.diffColumns.length} diff columns"))
+}
 
 /** Keyed comparison of two datasets — the reference's diff command
   * (reference: tndiff/TnDiffCreator.scala), re-expressed declaratively:
@@ -98,11 +107,6 @@ object DatasetDiff {
   }
 
   def diff(left: DataFrame, right: DataFrame, cfg: DiffConfig): DataFrame = {
-    require(cfg.left.joinColumns.nonEmpty, "joinColumns must be non-empty")
-    require(cfg.left.joinColumns.length == cfg.right.joinColumns.length,
-      "joinColumns must be of the same length for both data sets")
-    require(cfg.left.diffColumns.length == cfg.right.diffColumns.length,
-      "diffColumns must be of the same length for both data sets")
     if (cfg.validateKeys) validate(left, right, cfg)
 
     val l = left.select((cfg.left.joinColumns ++ cfg.left.diffColumns)

@@ -1,6 +1,6 @@
 package graft.engine
 
-import graft.rules.Rule
+import graft.rules.{Profiler, Rule, Sprt}
 import graft.diff.{DiffConfig, DiffSide}
 
 /** Reference to one input dataset of a command
@@ -9,8 +9,8 @@ import graft.diff.{DiffConfig, DiffSide}
   * @param ref       path on storage (when onDisk) or the outputKey of an
   *                  earlier command
   * @param onDisk    true → load from storage; false → lookup table
-  * @param format    explicit source format (parquet/csv/json/orc/xml/
-  *                  text/wholetext); when absent, inferred from
+  * @param format    explicit source format (parquet/csv/tsv/json/orc/
+  *                  xml/text/txt/wholetext); when absent, inferred from
   *                  delimiter or file extension
   * @param delimiter for delimited text inputs (header + inferSchema, as in
   *                  the reference)
@@ -24,24 +24,33 @@ case class InputRef(
     delimiter: Option[String] = None,
     rowTag: Option[String] = None)
 
+/** Where a command's output goes (reference: tnengine/TnCmd.scala:30-48):
+  * stored under `outputKey`, cached when `cache` is set, persisted to
+  * `outputPath` (parquet), and mounted as the SQL table `tableName`. */
+case class OutputSpec(
+    outputKey: String,
+    cache: Boolean = false,
+    outputPath: Option[String] = None,
+    tableName: Option[String] = None)
+
 /** A plan step. Mirrors the reference's command surface
-  * (reference: tnengine/TnCmd.scala:30-48): every command stores its
-  * output under `outputKey`, may cache it, persist it to `outputPath`
-  * (parquet), and mount it as a SQL table. */
+  * (reference: tnengine/TnCmd.scala:30-48). Each command checks its own
+  * configuration when it is built, so a plan that parses holds no
+  * config error that running it would hit. */
 sealed trait Command {
-  def outputKey: String
-  def cache: Boolean
-  def outputPath: Option[String]
-  def tableName: Option[String]
+  def output: OutputSpec
+  final def outputKey: String = output.outputKey
+  final def cache: Boolean = output.cache
+  final def outputPath: Option[String] = output.outputPath
+  final def tableName: Option[String] = output.tableName
 }
 
 case class AssertionCommand(
     input: InputRef,
     rules: Seq[Rule],
-    outputKey: String,
-    cache: Boolean = false,
-    outputPath: Option[String] = None,
-    tableName: Option[String] = None) extends Command
+    output: OutputSpec) extends Command {
+  require(rules.forall(_.query.nonEmpty), "assertion rule needs query")
+}
 
 case class DiffCommand(
     input1: InputRef,
@@ -55,11 +64,8 @@ case class DiffCommand(
     numericThreshold: Double = 1e-6,
     perColumnThresholds: Option[Seq[Double]] = None,
     filterEqualRows: Boolean = false,
-    outputKey: String,
-    cache: Boolean = false,
-    outputPath: Option[String] = None,
-    tableName: Option[String] = None) extends Command {
-  def diffConfig: DiffConfig = DiffConfig(
+    output: OutputSpec) extends Command {
+  val diffConfig: DiffConfig = DiffConfig(
     DiffSide(joinColumns1, diffColumns1), DiffSide(joinColumns2, diffColumns2),
     input1Name, input2Name, numericThreshold, perColumnThresholds,
     filterEqualRows)
@@ -69,10 +75,13 @@ case class ViewCommand(
     inputs: Seq[InputRef],
     tableAliases: Seq[String],
     query: String,
-    outputKey: String,
-    cache: Boolean = false,
-    outputPath: Option[String] = None,
-    tableName: Option[String] = None) extends Command
+    output: OutputSpec) extends Command {
+  require(inputs.nonEmpty, "view needs inputs")
+  require(inputs.size == tableAliases.size,
+    s"view needs one tableAlias per input, got ${inputs.size} " +
+      s"inputs and ${tableAliases.size} tableAliases")
+  require(query.nonEmpty, "view needs query")
+}
 
 /** Declared-schema gate ([[graft.rules.SchemaContract]]): verifies the
   * input's schema against the declared columns BEFORE row-level rules
@@ -83,10 +92,7 @@ case class SchemaCommand(
     input: InputRef,
     contract: Seq[graft.rules.ColumnContract],
     allowExtra: Boolean = true,
-    outputKey: String,
-    cache: Boolean = false,
-    outputPath: Option[String] = None,
-    tableName: Option[String] = None) extends Command
+    output: OutputSpec) extends Command
 
 /** Profiling step ([[graft.rules.Profiler]]): per-column rows / nulls /
   * distincts report over the input — the "what does this feed look
@@ -98,10 +104,9 @@ case class ProfileCommand(
     input: InputRef,
     columns: Seq[String],
     approx: Boolean = false,
-    outputKey: String,
-    cache: Boolean = false,
-    outputPath: Option[String] = None,
-    tableName: Option[String] = None) extends Command
+    output: OutputSpec) extends Command {
+  Profiler.requireColumns(columns)
+}
 
 /** Dedup step ([[graft.dedup.Dedup.exactGroups]] semantics): keep one
   * canonical row (minimum `idCol`) per distinct `textCol` content hash.
@@ -115,10 +120,10 @@ case class DedupCommand(
     textCol: String,
     idCol: String,
     keepDuplicatesReport: Boolean = false,
-    outputKey: String,
-    cache: Boolean = false,
-    outputPath: Option[String] = None,
-    tableName: Option[String] = None) extends Command
+    output: OutputSpec) extends Command {
+  require(textCol.nonEmpty, "dedup needs textCol")
+  require(idCol.nonEmpty, "dedup needs idCol")
+}
 
 /** Deterministic stratified sample step: keep `k` rows per stratum by
   * seeded-md5 election ([[graft.operators.Sampling.stratifiedTopK]]) —
@@ -130,10 +135,11 @@ case class SampleCommand(
     idCol: String,
     k: Int,
     seed: String = "sample",
-    outputKey: String,
-    cache: Boolean = false,
-    outputPath: Option[String] = None,
-    tableName: Option[String] = None) extends Command
+    output: OutputSpec) extends Command {
+  require(k > 0, "sample k must be positive")
+  require(stratumCols.nonEmpty, "sample needs stratumCols")
+  require(idCol.nonEmpty, "sample needs idCol")
+}
 
 /** Drift gate between a current input and a baseline input: PSI over
   * fixed-width bins of `valueCol` ([[graft.rules.Profiler.driftOuter]] —
@@ -143,18 +149,20 @@ case class SampleCommand(
   * carries the TOTAL PSI, and when `maxPsi` is set a total above it
   * counts toward the failed-assertion exit status (3) — distribution
   * shift becomes a first-class plan gate, not only a profiling read.
-  * Cost: one bin-count aggregation per side; the PSI total is a scalar
-  * over the bounded per-bin frame. */
+  * Cost: the gate reads the total from ONE aggregation over both sides
+  * ([[graft.rules.Profiler.driftOuterTotal]]), not from the per-bin
+  * frame, which costs one bin-count aggregation per side when it is
+  * read or written. */
 case class DriftCommand(
     input: InputRef,
     baseline: InputRef,
     valueCol: String,
     binWidth: Double,
     maxPsi: Option[Double] = None,
-    outputKey: String,
-    cache: Boolean = false,
-    outputPath: Option[String] = None,
-    tableName: Option[String] = None) extends Command
+    output: OutputSpec) extends Command {
+  require(binWidth > 0, "drift binWidth must be positive")
+  require(valueCol.nonEmpty, "drift needs valueCol")
+}
 
 /** Order-independent table fingerprint as a plan step
   * ([[graft.rules.Fingerprint]]): the stored output is the 1-row
@@ -167,10 +175,9 @@ case class ChecksumCommand(
     input: InputRef,
     columns: Seq[String],
     expected: Option[String] = None,
-    outputKey: String,
-    cache: Boolean = false,
-    outputPath: Option[String] = None,
-    tableName: Option[String] = None) extends Command
+    output: OutputSpec) extends Command {
+  require(columns.nonEmpty, "checksum needs columns")
+}
 
 /** Sequential (SPRT) defect-rate gate as a plan step
   * ([[graft.rules.Sprt]]): period-bucketed defect counts walk a
@@ -187,10 +194,11 @@ case class SprtCommand(
     p0: Double,
     p1: Double,
     alpha: Double = 0.05,
-    outputKey: String,
-    cache: Boolean = false,
-    outputPath: Option[String] = None,
-    tableName: Option[String] = None) extends Command
+    output: OutputSpec) extends Command {
+  Sprt.requireParams(p0, p1, alpha)
+  require(timeCol.nonEmpty, "sprt needs timeCol")
+  require(defectExpr.nonEmpty, "sprt needs defectExpr")
+}
 
 /** Per-key top-N retention step: keep the `k` rows per `keyCols` group
   * that sort first by `orderCol` (descending by default), id-tiebroken
@@ -204,17 +212,17 @@ case class TopNCommand(
     tiebreakCol: String,
     k: Int,
     descending: Boolean = true,
-    outputKey: String,
-    cache: Boolean = false,
-    outputPath: Option[String] = None,
-    tableName: Option[String] = None) extends Command
+    output: OutputSpec) extends Command {
+  require(k > 0, "topn k must be positive")
+  require(keyCols.nonEmpty, "topn needs keyCols")
+  require(orderCol.nonEmpty, "topn needs orderCol")
+  require(tiebreakCol.nonEmpty, "topn needs tiebreakCol")
+}
 
 /** Nested plan (reference: USER_GUIDE "Nested Plan"). */
 case class PlanCommand(plan: Plan) extends Command {
-  val outputKey = ""
-  val cache = false
-  val outputPath: Option[String] = None
-  val tableName: Option[String] = None
+  /** Its commands carry their own outputs. */
+  def output: OutputSpec = OutputSpec("")
 }
 
 /** An ordered list of commands plus the report destination. */

@@ -45,16 +45,27 @@ object PlanParser {
     * "commands[2]" or "commands[1].commands[0]" inside a nested plan). */
   final case class PlanError(path: String, message: String)
 
-  /** Read a plan/params document from the filesystem, falling back to
-    * the classpath — the reference ships plan templates inside
+  /** A plan document's text and the base its relative refs resolve
+    * against. */
+  private type Doc = (String, Option[PlanBase])
+
+  /** Finds a document on the filesystem at `file`, else on the classpath
+    * at `resource` — the reference ships plan templates inside
     * application jars and loads them the same way
-    * (tnengine/TnReader.scala:92-115). */
-  private[engine] def readText(path: String): String =
-    if (Files.exists(Paths.get(path)))
-      new String(Files.readAllBytes(Paths.get(path)), "UTF-8")
-    else readClasspath(path).getOrElse(
-      throw new java.nio.file.NoSuchFileException(
-        s"$path (not on filesystem or classpath)"))
+    * (tnengine/TnReader.scala:92-115). Throws NoSuchFileException with
+    * `missing` when neither has it. */
+  private def locate(file: Path, resource: String, missing: => String): Doc =
+    if (Files.exists(file))
+      (new String(Files.readAllBytes(file), "UTF-8"),
+        Some(FsBase(file.toAbsolutePath.getParent)))
+    else {
+      val r = resource.stripPrefix("/")
+      (readClasspath(r).getOrElse(throw new java.nio.file.NoSuchFileException(missing)),
+        Some(ClasspathBase(pathDir(r))))
+    }
+
+  private def locate(path: String): Doc =
+    locate(Paths.get(path), path, s"$path (not on filesystem or classpath)")
 
   private def readClasspath(path: String): Option[String] =
     Option(getClass.getClassLoader.getResourceAsStream(path.stripPrefix("/")))
@@ -63,41 +74,36 @@ object PlanParser {
         finally stream.close()
       }
 
-  def parseFile(path: String, variables: Map[String, String] = Map.empty): Plan = {
-    val p = Paths.get(path)
-    if (Files.exists(p))
-      parseWithBase(new String(Files.readAllBytes(p), "UTF-8"), variables,
-        Some(FsBase(p.toAbsolutePath.getParent)))
-    else {
-      val resource = path.stripPrefix("/")
-      val text = readClasspath(resource).getOrElse(
-        throw new java.nio.file.NoSuchFileException(
-          s"$path (not on filesystem or classpath)"))
-      val dir = resource.lastIndexOf('/') match {
-        case -1 => ""
-        case i  => resource.substring(0, i + 1)
-      }
-      parseWithBase(text, variables, Some(ClasspathBase(dir)))
+  private def pathDir(path: String): String =
+    path.lastIndexOf('/') match {
+      case -1 => ""
+      case i  => path.substring(0, i + 1)
     }
-  }
+
+  // Each parse is its validate twin with the error list folded into one
+  // exception, so validate can never accept a plan parse rejects (or
+  // vice versa). The plan document itself is read before the walk: a
+  // missing plan file throws NoSuchFileException, a failing loader its
+  // own exception.
 
   def parse(json: String, variables: Map[String, String] = Map.empty,
       baseDir: Option[Path] = None): Plan =
-    parseWithBase(json, variables, baseDir.map(FsBase.apply))
+    orThrow(validate(json, variables, baseDir))
+
+  def parseFile(path: String, variables: Map[String, String] = Map.empty): Plan = {
+    val doc = locate(path)
+    orThrow(validated(doc, variables))
+  }
 
   /** Parse a plan served by a user-supplied loader (e.g. an HTTP GET
     * against a plan/config server): `load` maps a document path to its
     * text, and ALL document reads — the root plan, every
     * `externalParamsFile`, nested plans' params — go through it. */
   def parseFetched(path: String, load: String => String,
-      variables: Map[String, String] = Map.empty): Plan =
-    parseWithBase(load(path), variables, Some(LoaderBase(pathDir(path), load)))
-
-  private def pathDir(path: String): String =
-    path.lastIndexOf('/') match {
-      case -1 => ""
-      case i  => path.substring(0, i + 1)
-    }
+      variables: Map[String, String] = Map.empty): Plan = {
+    val doc = fetch(path, load)
+    orThrow(validated(doc, variables))
+  }
 
   /** Whole-plan pre-validation (reference: tnengine/TnEngine.scala:113-143,
     * `haltIfPotentialErrors`): walk EVERY command — nested plans
@@ -106,54 +112,48 @@ object PlanParser {
     * time. Right(plan) only when every command parsed. */
   def validate(json: String, variables: Map[String, String] = Map.empty,
       baseDir: Option[Path] = None): Either[Seq[PlanError], Plan] =
-    validateWithBase(json, variables, baseDir.map(FsBase.apply))
+    validated((json, baseDir.map(FsBase.apply)), variables)
 
   /** [[validate]] for a filesystem-or-classpath plan document. */
   def validateFile(path: String, variables: Map[String, String] = Map.empty)
       : Either[Seq[PlanError], Plan] =
-    try {
-      val p = Paths.get(path)
-      if (Files.exists(p))
-        validateWithBase(new String(Files.readAllBytes(p), "UTF-8"), variables,
-          Some(FsBase(p.toAbsolutePath.getParent)))
-      else {
-        val resource = path.stripPrefix("/")
-        readClasspath(resource) match {
-          case Some(text) =>
-            validateWithBase(text, variables, Some(ClasspathBase(pathDir(resource))))
-          case None => Left(Seq(PlanError("",
-            s"$path (not on filesystem or classpath)")))
-        }
-      }
-    } catch {
-      case e: Exception => Left(Seq(PlanError("", e.getMessage)))
-    }
+    validated(locate(path), variables)
 
   /** [[validate]] for a loader-served plan document. */
   def validateFetched(path: String, load: String => String,
       variables: Map[String, String] = Map.empty)
       : Either[Seq[PlanError], Plan] =
-    try validateWithBase(load(path), variables,
-      Some(LoaderBase(pathDir(path), load)))
-    catch { case e: Exception => Left(Seq(PlanError("", e.getMessage))) }
+    validated(fetch(path, load), variables)
 
-  private def validateWithBase(json: String, variables: Map[String, String],
-      base: Option[PlanBase]): Either[Seq[PlanError], Plan] = {
-    val substituted = variables.foldLeft(json) { case (s, (k, v)) =>
-      s.replace("${" + k + "}", v)
-    }
-    try planValidated(mapper.readTree(substituted), base, "")
-    catch { case e: Exception => Left(Seq(PlanError("", e.getMessage))) }
-  }
+  private def fetch(path: String, load: String => String): Doc =
+    (load(path), Some(LoaderBase(pathDir(path), load)))
+
+  /** Substitutes `${variable}`s in the document's text and walks it; an
+    * unreadable or malformed document is one error at the root path. */
+  private def validated(doc: => Doc, variables: Map[String, String])
+      : Either[Seq[PlanError], Plan] =
+    try {
+      val (json, base) = doc
+      val substituted = variables.foldLeft(json) { case (s, (k, v)) =>
+        s.replace("${" + k + "}", v)
+      }
+      planValidated(mapper.readTree(substituted), base, "")
+    } catch { case e: Exception => Left(Seq(PlanError("", e.getMessage))) }
+
+  private def orThrow(result: Either[Seq[PlanError], Plan]): Plan =
+    result.fold(
+      errs => throw new IllegalArgumentException(
+        errs.map(e => s"${e.path}: ${e.message}").mkString("; ")),
+      identity)
 
   private def planValidated(root: JsonNode, base: Option[PlanBase],
       prefix: String): Either[Seq[PlanError], Plan] = {
-    val dest = Option(root.path("io").path("dest").asText(null))
+    val dest = optText(root.path("io"), "dest")
     val results: Seq[Either[Seq[PlanError], Command]] =
       root.path("commands").elements().asScala.zipWithIndex.map {
         case (node, i) =>
           val at = s"${prefix}commands[$i]"
-          if (node.path("command").asText() == "plan")
+          if (text(node, "command") == "plan")
             // Recurse so a nested plan reports ALL its bad commands,
             // not just the first, each located by its full path.
             (try planValidated(resolveParams(node, base), base, s"$at.")
@@ -168,27 +168,9 @@ object PlanParser {
     else Right(Plan(results.collect { case Right(c) => c }, dest))
   }
 
-  private def parseWithBase(json: String, variables: Map[String, String],
-      base: Option[PlanBase]): Plan = {
-    val substituted = variables.foldLeft(json) { case (s, (k, v)) =>
-      s.replace("${" + k + "}", v)
-    }
-    planFromNode(mapper.readTree(substituted), base)
-  }
-
-  // Parse delegates to the SAME walk as validation — one tree walk to
-  // maintain, so validate can never accept a plan parse rejects (or
-  // vice versa); the throwing surface just folds the error list.
-  private def planFromNode(root: JsonNode, baseDir: Option[PlanBase]): Plan =
-    planValidated(root, baseDir, "").fold(
-      errs => throw new IllegalArgumentException(
-        errs.map(e => s"${e.path}: ${e.message}").mkString("; ")),
-      identity)
-
   /** Merge externalParamsFile content under "params" when present. */
   private def resolveParams(node: JsonNode, baseDir: Option[PlanBase]): JsonNode = {
-    val ext = Option(node.get("externalParamsFile")).map(_.asText())
-    ext match {
+    optText(node, "externalParamsFile") match {
       case Some(rel) =>
         // Resolution order: plan-relative (same medium the plan came
         // from), then classpath root, then — only when NO base
@@ -199,14 +181,10 @@ object PlanParser {
         // probes the filesystem at all — absolute refs included: a
         // jar-shipped plan must not read the host filesystem; a
         // loader-served plan likewise fetches ONLY through its loader.
-        val text = baseDir match {
+        val json = baseDir match {
           case Some(FsBase(b)) if !rel.startsWith("/") =>
             val resolved = b.resolve(rel)
-            if (Files.exists(resolved))
-              new String(Files.readAllBytes(resolved), "UTF-8")
-            else readClasspath(rel).getOrElse(
-              throw new java.nio.file.NoSuchFileException(
-                s"$resolved (also tried classpath '$rel')"))
+            locate(resolved, rel, s"$resolved (also tried classpath '$rel')")._1
           case Some(ClasspathBase(dir)) =>
             val refs =
               if (rel.startsWith("/")) Seq(rel.stripPrefix("/"))
@@ -216,9 +194,9 @@ object PlanParser {
                 refs.map(r => s"classpath '$r'").mkString(", ")))
           case Some(LoaderBase(dir, load)) =>
             load(if (rel.startsWith("/")) rel else dir + rel)
-          case _ => readText(rel)
+          case _ => locate(rel)._1
         }
-        mapper.readTree(text)
+        mapper.readTree(json)
       case None => node.path("params")
     }
   }
@@ -229,201 +207,131 @@ object PlanParser {
     * a config one. Every required sub-object goes through here so the
     * error names what the plan author must add. */
   private def requiredNode(n: JsonNode, field: String): JsonNode =
-    Option(n.get(field)).getOrElse(throw new IllegalArgumentException(
+    opt(n, field).getOrElse(throw new IllegalArgumentException(
       s"missing required field '$field'"))
 
+  /** Builds one command; the command's constructor checks its values. */
   private def commandFromNode(node: JsonNode, baseDir: Option[PlanBase]): Command = {
     val params: JsonNode = resolveParams(node, baseDir)
-    node.path("command").asText() match {
+    def input(field: String = "input") = inputRef(requiredNode(node, field))
+    val out = OutputSpec(
+      outputKey = text(node, "outputKey"),
+      cache = node.path("cache").asBoolean(false),
+      outputPath = optText(node, "outputPath"),
+      tableName = optText(node, "tableName"))
+    text(node, "command") match {
       case "assertion" =>
         AssertionCommand(
-          input = inputRef(requiredNode(node, "input")),
+          input = input(),
           rules = params.path("assertions").elements().asScala.map(ruleFromNode).toSeq,
-          outputKey = node.path("outputKey").asText(),
-          cache = node.path("cache").asBoolean(false),
-          outputPath = optText(node, "outputPath"),
-          tableName = optText(node, "tableName"))
+          output = out)
       case "diff" =>
         val c1 = params.path("input1Columns")
         val c2 = params.path("input2Columns")
         DiffCommand(
-          input1 = inputRef(requiredNode(node, "input1")),
-          input1Name = node.path("input1Name").asText(),
-          input2 = inputRef(requiredNode(node, "input2")),
-          input2Name = node.path("input2Name").asText(),
+          input1 = input("input1"),
+          input1Name = text(node, "input1Name"),
+          input2 = input("input2"),
+          input2Name = text(node, "input2Name"),
           joinColumns1 = strings(c1.path("joinColumns")),
           diffColumns1 = strings(c1.path("diffColumns")),
           joinColumns2 = strings(c2.path("joinColumns")),
           diffColumns2 = strings(c2.path("diffColumns")),
-          numericThreshold =
-            if (node.has("threshold")) node.get("threshold").asDouble else 1e-6,
-          perColumnThresholds =
-            if (params.has("thresholds"))
-              Some(params.get("thresholds").elements().asScala.map(_.asDouble).toSeq)
-            else None,
+          numericThreshold = opt(node, "threshold").fold(1e-6)(_.asDouble),
+          perColumnThresholds = opt(params, "thresholds")
+            .map(_.elements().asScala.map(_.asDouble).toSeq),
           filterEqualRows = node.path("filterEqualRows").asBoolean(false),
-          outputKey = node.path("outputKey").asText(),
-          cache = node.path("cache").asBoolean(false),
-          outputPath = optText(node, "outputPath"),
-          tableName = optText(node, "tableName"))
+          output = out)
       case "view" =>
-        val viewInputs =
-          node.path("inputs").elements().asScala.map(inputRef).toSeq
-        val aliases = strings(params.path("tableAliases"))
-        require(viewInputs.nonEmpty, "view needs inputs")
-        require(viewInputs.size == aliases.size,
-          s"view needs one tableAlias per input, got ${viewInputs.size} " +
-            s"inputs and ${aliases.size} tableAliases")
-        require(params.path("query").asText().nonEmpty, "view needs query")
         ViewCommand(
-          inputs = viewInputs,
-          tableAliases = aliases,
-          query = params.path("query").asText(),
-          outputKey = node.path("outputKey").asText(),
-          cache = node.path("cache").asBoolean(false),
-          outputPath = optText(node, "outputPath"),
-          tableName = optText(node, "tableName"))
+          inputs = node.path("inputs").elements().asScala.map(inputRef).toSeq,
+          tableAliases = strings(params.path("tableAliases")),
+          query = text(params, "query"),
+          output = out)
       case "schema" =>
         SchemaCommand(
-          input = inputRef(requiredNode(node, "input")),
+          input = input(),
           contract = params.path("columns").elements().asScala.map { c =>
             graft.rules.ColumnContract(
-              name = c.path("name").asText(),
-              dataType = c.path("type").asText(),
-              nullable = !c.has("nullable") || c.get("nullable").asBoolean())
+              name = text(c, "name"),
+              dataType = text(c, "type"),
+              nullable = opt(c, "nullable").forall(_.asBoolean()))
           }.toSeq,
           allowExtra = node.path("allowExtra").asBoolean(true),
-          outputKey = node.path("outputKey").asText(),
-          cache = node.path("cache").asBoolean(false),
-          outputPath = optText(node, "outputPath"),
-          tableName = optText(node, "tableName"))
+          output = out)
       case "profile" =>
         ProfileCommand(
-          input = inputRef(requiredNode(node, "input")),
-          columns = params.path("columns").elements().asScala
-            .map(_.asText()).toSeq,
+          input = input(),
+          columns = strings(params.path("columns")),
           approx = params.path("approx").asBoolean(false),
-          outputKey = node.path("outputKey").asText(),
-          cache = node.path("cache").asBoolean(false),
-          outputPath = optText(node, "outputPath"),
-          tableName = optText(node, "tableName"))
+          output = out)
       case "dedup" =>
-        require(params.path("textCol").asText().nonEmpty, "dedup needs textCol")
-        require(params.path("idCol").asText().nonEmpty, "dedup needs idCol")
         DedupCommand(
-          input = inputRef(requiredNode(node, "input")),
-          textCol = params.path("textCol").asText(),
-          idCol = params.path("idCol").asText(),
+          input = input(),
+          textCol = text(params, "textCol"),
+          idCol = text(params, "idCol"),
           keepDuplicatesReport = params.path("keepDuplicatesReport").asBoolean(false),
-          outputKey = node.path("outputKey").asText(),
-          cache = node.path("cache").asBoolean(false),
-          outputPath = optText(node, "outputPath"),
-          tableName = optText(node, "tableName"))
+          output = out)
       case "sample" =>
-        require(params.path("k").asInt() > 0, "sample k must be positive")
-        require(params.path("stratumCols").size() > 0,
-          "sample needs stratumCols")
-        require(params.path("idCol").asText().nonEmpty, "sample needs idCol")
         SampleCommand(
-          input = inputRef(requiredNode(node, "input")),
+          input = input(),
           stratumCols = strings(params.path("stratumCols")),
-          idCol = params.path("idCol").asText(),
+          idCol = text(params, "idCol"),
           k = params.path("k").asInt(),
-          seed = params.path("seed").asText("sample"),
-          outputKey = node.path("outputKey").asText(),
-          cache = node.path("cache").asBoolean(false),
-          outputPath = optText(node, "outputPath"),
-          tableName = optText(node, "tableName"))
+          seed = optText(params, "seed").getOrElse("sample"),
+          output = out)
       case "drift" =>
-        require(params.path("binWidth").asDouble() > 0,
-          "drift binWidth must be positive")
-        require(params.path("valueCol").asText().nonEmpty,
-          "drift needs valueCol")
         DriftCommand(
-          input = inputRef(requiredNode(node, "input")),
-          baseline = inputRef(requiredNode(node, "baseline")),
-          valueCol = params.path("valueCol").asText(),
+          input = input(),
+          baseline = input("baseline"),
+          valueCol = text(params, "valueCol"),
           binWidth = params.path("binWidth").asDouble(),
-          maxPsi = if (params.has("maxPsi"))
-            Some(params.get("maxPsi").asDouble()) else None,
-          outputKey = node.path("outputKey").asText(),
-          cache = node.path("cache").asBoolean(false),
-          outputPath = optText(node, "outputPath"),
-          tableName = optText(node, "tableName"))
+          maxPsi = opt(params, "maxPsi").map(_.asDouble()),
+          output = out)
       case "checksum" =>
-        require(params.path("columns").size() > 0, "checksum needs columns")
         ChecksumCommand(
-          input = inputRef(requiredNode(node, "input")),
+          input = input(),
           columns = strings(params.path("columns")),
           expected = optText(params, "expected"),
-          outputKey = node.path("outputKey").asText(),
-          cache = node.path("cache").asBoolean(false),
-          outputPath = optText(node, "outputPath"),
-          tableName = optText(node, "tableName"))
+          output = out)
       case "sprt" =>
-        val p0 = params.path("p0").asDouble()
-        val p1 = params.path("p1").asDouble()
-        require(p0 > 0 && p0 < 1 && p1 > 0 && p1 < 1 && p0 != p1,
-          "sprt p0/p1 must be in (0,1) and differ")
-        require(params.path("timeCol").asText().nonEmpty, "sprt needs timeCol")
-        require(params.path("defectExpr").asText().nonEmpty,
-          "sprt needs defectExpr")
         SprtCommand(
-          input = inputRef(requiredNode(node, "input")),
-          timeCol = params.path("timeCol").asText(),
-          defectExpr = params.path("defectExpr").asText(),
-          granularity = params.path("granularity").asText("month"),
-          p0 = p0,
-          p1 = p1,
-          alpha = if (params.has("alpha"))
-            params.get("alpha").asDouble() else 0.05,
-          outputKey = node.path("outputKey").asText(),
-          cache = node.path("cache").asBoolean(false),
-          outputPath = optText(node, "outputPath"),
-          tableName = optText(node, "tableName"))
+          input = input(),
+          timeCol = text(params, "timeCol"),
+          defectExpr = text(params, "defectExpr"),
+          granularity = optText(params, "granularity").getOrElse("month"),
+          p0 = params.path("p0").asDouble(),
+          p1 = params.path("p1").asDouble(),
+          alpha = opt(params, "alpha").fold(0.05)(_.asDouble()),
+          output = out)
       case "topn" =>
-        require(params.path("k").asInt() > 0, "topn k must be positive")
-        require(params.path("keyCols").size() > 0, "topn needs keyCols")
-        require(params.path("orderCol").asText().nonEmpty,
-          "topn needs orderCol")
-        require(params.path("tiebreakCol").asText().nonEmpty,
-          "topn needs tiebreakCol")
         TopNCommand(
-          input = inputRef(requiredNode(node, "input")),
+          input = input(),
           keyCols = strings(params.path("keyCols")),
-          orderCol = params.path("orderCol").asText(),
-          tiebreakCol = params.path("tiebreakCol").asText(),
+          orderCol = text(params, "orderCol"),
+          tiebreakCol = text(params, "tiebreakCol"),
           k = params.path("k").asInt(),
           descending = params.path("descending").asBoolean(true),
-          outputKey = node.path("outputKey").asText(),
-          cache = node.path("cache").asBoolean(false),
-          outputPath = optText(node, "outputPath"),
-          tableName = optText(node, "tableName"))
+          output = out)
       case other =>
         throw new IllegalArgumentException(
           s"command must be assertion, diff, view, schema, dedup, profile, sample, drift, checksum, sprt, topn, or plan; got '$other'")
     }
   }
 
-  private def ruleFromNode(n: JsonNode): Rule = {
-    require(n.path("query").asText().nonEmpty, "assertion rule needs query")
-    Rule(
-      query = n.path("query").asText(),
-      description = n.path("description").asText(),
-      threshold = n.path("threshold").asDouble(),
-      features = mapOf(n.path("userDefinedFeatures")),
-      summary = mapOf(n.path("userDefinedSummaryExpr")),
-      sampleWindow =
-        if (n.has("sampleWindowParams")) {
-          val w = n.get("sampleWindowParams")
-          Some(SampleWindowParams(
-            strings(w.path("idsForWindowPartitioning")),
-            strings(w.path("orderEachWindowBy"))))
-        } else None)
-  }
+  private def ruleFromNode(n: JsonNode): Rule = Rule(
+    query = text(n, "query"),
+    description = text(n, "description"),
+    threshold = n.path("threshold").asDouble(),
+    features = mapOf(n.path("userDefinedFeatures")),
+    summary = mapOf(n.path("userDefinedSummaryExpr")),
+    sampleWindow = opt(n, "sampleWindowParams").map(w =>
+      SampleWindowParams(
+        strings(w.path("idsForWindowPartitioning")),
+        strings(w.path("orderEachWindowBy")))))
 
   private def inputRef(n: JsonNode): InputRef = InputRef(
-    ref = n.path("ref").asText(),
+    ref = text(n, "ref"),
     onDisk = n.path("onDisk").asBoolean(false),
     format = optText(n, "format"),
     delimiter = optText(n, "delimiter"),
@@ -435,6 +343,15 @@ object PlanParser {
   private def mapOf(n: JsonNode): Map[String, String] =
     n.properties().asScala.map(e => e.getKey -> e.getValue.asText()).toMap
 
+  /** The one reader of a field's value: an explicit JSON `null` is
+    * absent, as an omitted field is (Jackson's `get` returns a
+    * `NullNode` that reads as "null", 0 or false). */
+  private def opt(n: JsonNode, field: String): Option[JsonNode] =
+    Option(n.get(field)).filterNot(_.isNull)
+
   private def optText(n: JsonNode, field: String): Option[String] =
-    Option(n.get(field)).map(_.asText())
+    opt(n, field).map(_.asText())
+
+  private def text(n: JsonNode, field: String): String =
+    optText(n, field).getOrElse("")
 }

@@ -175,8 +175,6 @@ class PlanRunner(spark: SparkSession, reportWriter: Option[ReportWriter] = None)
           Gated(Nil, 0)
         }
       case c: ViewCommand =>
-        require(c.inputs.length == c.tableAliases.length,
-          "tableAliases must match inputs, by position")
         plain(c, ViewCreator.createView(spark,
           c.tableAliases.zip(c.inputs.map(read)), c.query))
       case c: SchemaCommand =>

@@ -34,9 +34,13 @@ object Profiler {
   def profileApprox(df: DataFrame, cols: Seq[String]): DataFrame =
     profileWith(df, cols, c => approx_count_distinct(col(c)))
 
+  /** The check every profile form makes of its column list. */
+  private[graft] def requireColumns(cols: Seq[String]): Unit =
+    require(cols.nonEmpty, "profile needs at least one column")
+
   private def profileWith(df: DataFrame, cols: Seq[String],
       distinct: String => Column): DataFrame = {
-    require(cols.nonEmpty, "profile needs at least one column")
+    requireColumns(cols)
     val aggs = count(lit(1)).as("__n") +: cols.flatMap(c => Seq(
       // coalesce: SUM over an empty input is NULL, not 0.
       coalesce(sum(when(col(c).isNull, 1L).otherwise(0L)), lit(0L))
@@ -63,7 +67,7 @@ object Profiler {
     * heavy value repetition; the Expand form wins on near-unique
     * columns. */
   def profileUnpivot(df: DataFrame, cols: Seq[String]): DataFrame = {
-    require(cols.nonEmpty, "profile needs at least one column")
+    requireColumns(cols)
     val stackArgs = cols
       .map(c => s"'$c', CAST(`$c` AS STRING)").mkString(", ")
     val counted = df
@@ -206,9 +210,11 @@ object Profiler {
     * (disjoint supports) must read as enormous drift, not zero, when
     * the total gates a plan's exit status. [[drift]]'s inner-join
     * contract remains the monitoring/report form (one-sided bins
-    * visible via counts there); this one exists to be summed and
-    * compared against a threshold. Same cost shape: one bin-count
-    * aggregation per side, everything after on the per-bin frames. */
+    * visible via counts there); this one is the per-bin frame of a
+    * gate, whose total [[driftOuterTotal]] computes from one
+    * aggregation instead of summing this frame. Same cost shape as
+    * [[drift]]: one bin-count aggregation per side, everything after on
+    * the per-bin frames. */
   def driftOuter(a: DataFrame, b: DataFrame, valueCol: String,
       binWidth: Double, epsilon: Double = DriftEpsilon): DataFrame = {
     val all = Window.partitionBy(lit(1))

@@ -29,9 +29,7 @@ object Sprt {
   def walk(df: DataFrame, timeCol: String, defect: Column,
       granularity: String, p0: Double, p1: Double,
       alpha: Double): DataFrame = {
-    require(p0 > 0 && p0 < 1 && p1 > 0 && p1 < 1 && p0 != p1,
-      s"p0/p1 must be in (0,1) and differ; got p0=$p0 p1=$p1")
-    require(alpha > 0 && alpha < 0.5, s"alpha must be in (0,0.5): $alpha")
+    requireParams(p0, p1, alpha)
     val lnR1 = math.log(p1 / p0)
     val lnR0 = math.log((1 - p1) / (1 - p0))
     val bound = math.log((1 - alpha) / alpha)
@@ -52,6 +50,14 @@ object Sprt {
       round(llr.cast("double"), 6).as("llr"),
       round(cum.cast("double"), 6).as("cum_llr"),
       decision.as("decision"))
+  }
+
+  /** The test's parameters: H0 and H1 rates in (0,1) that differ, and
+    * an error budget in (0,0.5). */
+  private[graft] def requireParams(p0: Double, p1: Double, alpha: Double): Unit = {
+    require(p0 > 0 && p0 < 1 && p1 > 0 && p1 < 1 && p0 != p1,
+      s"p0/p1 must be in (0,1) and differ; got p0=$p0 p1=$p1")
+    require(alpha > 0 && alpha < 0.5, s"alpha must be in (0,0.5): $alpha")
   }
 
   /** The walk's STOPPING decision: the decision at the first period

@@ -6,7 +6,8 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Keeps one session builder, one SparkListener, one lineage barrier,
-  * one bucket-pair generator and one vector norm in the program. */
+  * one bucket-pair generator, one vector norm, one read of a command's
+  * output fields and one plan-document file reader in the program. */
 class SourceHygieneSpec extends AnyFunSuite {
   private def sources: Seq[Path] = {
     val walk = Files.walk(Paths.get("src/main"))
@@ -50,5 +51,13 @@ class SourceHygieneSpec extends AnyFunSuite {
 
   test("only Knn.withNorm computes a vector norm") {
     assert(occurrences("sqrt(dot(", "dedup", "similarity") === 1)
+  }
+
+  test("the plan parser reads a command's output fields once") {
+    assert(occurrences("\"outputPath\"", "engine") === 1)
+  }
+
+  test("one function reads plan documents from the filesystem") {
+    assert(occurrences("Files.readAllBytes(", "engine/PlanParser.scala") === 1)
   }
 }

@@ -74,4 +74,12 @@ class DatasetDiffSpec extends SparkSpec {
       Seq((1, "1.0")).toDF("id", "v"), c)
     assert(out.select("a_v__equals__b_v").as[String].collect().head === DatasetDiff.DiffType)
   }
+
+  test("per-column thresholds must give one value per diff column") {
+    val three = DiffSide(Seq("id"), Seq("a", "b", "c"))
+    val err = intercept[IllegalArgumentException] {
+      DiffConfig(three, three, "l", "r", perColumnThresholds = Some(Seq(0.5)))
+    }
+    assert(err.getMessage.contains("got 1 thresholds for 3 diff columns"))
+  }
 }

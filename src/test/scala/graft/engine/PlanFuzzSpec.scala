@@ -13,7 +13,8 @@ import scala.util.Random
   * locates the offending command, never a stack-trace message from
   * deep inside the node walk (a missing "input" used to surface as a
   * JDK NullPointerException text — exactly the failure class this spec
-  * exists to keep out).
+  * exists to keep out). On every generated plan, `parse` must agree
+  * with `validate`.
   *
   * Deterministic seed: a failure reproduces by case index.
   */
@@ -182,6 +183,24 @@ class PlanFuzzSpec extends AnyFunSuite {
         Seq("assertion rule needs query"))
   }
 
+  /** [[PlanParser.validate]]'s result, after checking that `parse`
+    * agrees with it: it returns the same plan when validate is Right,
+    * and throws exactly the joined error list when validate is Left. */
+  private def validated(doc: String,
+      baseDir: Option[java.nio.file.Path] = None)
+      : Either[Seq[PlanParser.PlanError], Plan] = {
+    val result = PlanParser.validate(doc, baseDir = baseDir)
+    result match {
+      case Right(p) => assert(PlanParser.parse(doc, baseDir = baseDir) == p)
+      case Left(errs) =>
+        val e = intercept[IllegalArgumentException] {
+          PlanParser.parse(doc, baseDir = baseDir)
+        }
+        assert(e.getMessage == errs.map(e => s"${e.path}: ${e.message}").mkString("; "))
+    }
+    result
+  }
+
   /** The property every diagnostic must satisfy: locates the command,
     * names the problem, and is a CONFIG message — never the text of an
     * exception that escaped from deep inside the walk. */
@@ -202,7 +221,7 @@ class PlanFuzzSpec extends AnyFunSuite {
   test("120 random VALID plans validate Right and parse") {
     for (i <- 1 to 120) {
       val p = plan((1 to (rng.nextInt(4) + 1)).map(_ => validCommand()))
-      PlanParser.validate(p) match {
+      validated(p) match {
         case Right(parsed) =>
           assert(parsed.commands.nonEmpty)
           // parse must agree with validate (same walk, two surfaces)
@@ -224,7 +243,7 @@ class PlanFuzzSpec extends AnyFunSuite {
       val cmds = (1 to nBefore).map(_ => validCommand()) ++ Seq(bad) ++
         (1 to rng.nextInt(2)).map(_ => validCommand())
       val p = plan(cmds)
-      PlanParser.validate(p) match {
+      validated(p) match {
         case Right(_) => fail(s"broken case $i accepted\n$bad")
         case Left(errs) =>
           assert(errs.length == 1, s"case $i: expected 1 error, got $errs")
@@ -239,7 +258,7 @@ class PlanFuzzSpec extends AnyFunSuite {
       val (bad, tokens) = broken()
       val inner = plan(Seq(validCommand(), bad))
       val p = s"""{"commands":[{"command":"plan","params":$inner}]}"""
-      PlanParser.validate(p) match {
+      validated(p) match {
         case Right(_) => fail(s"nested broken case $i accepted\n$bad")
         case Left(errs) =>
           assert(errs.length == 1)
@@ -259,7 +278,7 @@ class PlanFuzzSpec extends AnyFunSuite {
       valid.replace("\"commands\"", "\"commands") // broken key quoting
     )
     mangled.foreach { doc =>
-      PlanParser.validate(doc) match {
+      validated(doc) match {
         case Right(pl) =>
           // An empty/valid-JSON-but-not-a-plan document may parse to a
           // commandless plan; anything else must have been rejected.
@@ -276,7 +295,7 @@ class PlanFuzzSpec extends AnyFunSuite {
       """{"commands":[{"command":"dedup",
         | "input":{"ref":"x"}, "outputKey":"o",
         | "externalParamsFile":"no/such/params_file.json"}]}""".stripMargin
-    val Left(errs) = PlanParser.validate(p,
+    val Left(errs) = validated(p,
       baseDir = Some(java.nio.file.Paths.get("/tmp"))): @unchecked
     assert(errs.length == 1 && errs.head.path == "commands[0]")
     assert(errs.head.message.contains("params_file.json"))

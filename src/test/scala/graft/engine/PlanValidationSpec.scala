@@ -100,4 +100,96 @@ class PlanValidationSpec extends SparkSpec {
       PlanParser.validateFetched("x.json", failing): @unchecked
     assert(errs.head.message.contains("server down"))
   }
+
+  test("a field set to JSON null parses as the field left out") {
+    // `$f` is where the field goes: `, "<field>": null` or nothing.
+    def both(template: String, field: String): (Command, Command) = {
+      def one(f: String) = PlanParser.parse(
+        s"""{"commands": [${template.replace("$f", f)}]}""").commands.head
+      (one(s""", "$field": null"""), one(""))
+    }
+    val view =
+      """{"command": "view", "inputs": [{"ref": "s", "onDisk": false}],
+        | "params": {"tableAliases": ["t"], "query": "SELECT 1"},
+        | "outputKey": "o"$f}""".stripMargin
+    val (noPath, noPath0) = both(view, "outputPath")
+    assert(noPath.outputPath === None && noPath === noPath0)
+    val (noTable, noTable0) = both(view, "tableName")
+    assert(noTable.tableName === None && noTable === noTable0)
+    val (csv, csv0) = both(
+      """{"command": "view", "inputs": [{"ref": "in.csv", "onDisk": true$f}],
+        | "params": {"tableAliases": ["t"], "query": "SELECT 1"},
+        | "outputKey": "o"}""".stripMargin, "delimiter")
+    assert(csv.asInstanceOf[ViewCommand].inputs.head.delimiter === None &&
+      csv === csv0)
+    val (sum, sum0) = both(
+      """{"command": "checksum", "input": {"ref": "s", "onDisk": false},
+        | "params": {"columns": ["id"]$f}, "outputKey": "o"}""".stripMargin,
+      "expected")
+    assert(sum.asInstanceOf[ChecksumCommand].expected === None && sum === sum0)
+    val (drift, drift0) = both(
+      """{"command": "drift", "input": {"ref": "s", "onDisk": false},
+        | "baseline": {"ref": "b", "onDisk": false},
+        | "params": {"valueCol": "v", "binWidth": 1.0$f}, "outputKey": "o"}"""
+        .stripMargin, "maxPsi")
+    assert(drift.asInstanceOf[DriftCommand].maxPsi === None && drift === drift0)
+    val (schema, schema0) = both(
+      """{"command": "schema", "input": {"ref": "s", "onDisk": false},
+        | "params": {"columns": [{"name": "id", "type": "bigint"$f}]},
+        | "outputKey": "o"}""".stripMargin, "nullable")
+    assert(schema.asInstanceOf[SchemaCommand].contract.head.nullable &&
+      schema === schema0)
+  }
+
+  /** Plans whose command 1 a run rejects for a config reason, with a
+    * token its diagnostic names. Command 0 writes `$out`. */
+  private val runRejects = Seq(
+    "sprt alpha" -> ("""{"command": "sprt", "input": {"ref": "copied", "onDisk": false},
+      | "params": {"timeCol": "ts", "defectExpr": "id < 0", "p0": 0.01,
+      |            "p1": 0.2, "alpha": 0.7}, "outputKey": "s"}""", "alpha"),
+    "diff join lists" -> ("""{"command": "diff",
+      | "input1": {"ref": "copied", "onDisk": false}, "input1Name": "a",
+      | "input2": {"ref": "copied", "onDisk": false}, "input2Name": "b",
+      | "params": {"input1Columns": {"joinColumns": ["id"], "diffColumns": ["id"]},
+      |            "input2Columns": {"joinColumns": ["id", "id"], "diffColumns": ["id"]}},
+      | "outputKey": "d"}""", "joinColumns"),
+    "profile columns" -> ("""{"command": "profile",
+      | "input": {"ref": "copied", "onDisk": false},
+      | "params": {"columns": []}, "outputKey": "p"}""", "at least one column"),
+    "diff thresholds" -> ("""{"command": "diff",
+      | "input1": {"ref": "copied", "onDisk": false}, "input1Name": "a",
+      | "input2": {"ref": "copied", "onDisk": false}, "input2Name": "b",
+      | "params": {"input1Columns": {"joinColumns": ["id"], "diffColumns": ["x", "y", "z"]},
+      |            "input2Columns": {"joinColumns": ["id"], "diffColumns": ["x", "y", "z"]},
+      |            "thresholds": [0.5]},
+      | "outputKey": "d"}""", "1 thresholds for 3 diff columns"))
+
+  private def writesThen(out: String, cmd: Option[String]): String = {
+    val p = Files.createTempFile("graft_vo", ".json")
+    Files.write(p, s"""{"commands": [
+      |  {"command": "view", "inputs": [{"ref": "graft_vo_src", "onDisk": false}],
+      |   "params": {"tableAliases": ["t"], "query": "SELECT id, id AS x, id AS y, id AS z FROM t"},
+      |   "outputKey": "copied", "outputPath": "$out"}${cmd.map("," + _).getOrElse("")}
+      |]}""".stripMargin.getBytes("UTF-8"))
+    p.toString
+  }
+
+  test("validate rejects what the run would; RunPlan exits 2 and writes nothing") {
+    spark.range(3).createOrReplaceTempView("graft_vo_src")
+    def run(plan: String) =
+      RunPlan.run(spark, RunPlan.Config(plan, Map.empty, "k", None))
+    // Control: command 0 alone runs and writes its output.
+    val written = Files.createTempDirectory("graft_vo").resolve("copied")
+    assert(run(writesThen(written.toString, None)) === 0)
+    assert(Files.exists(written))
+    runRejects.foreach { case (name, (cmd, token)) =>
+      val out = Files.createTempDirectory("graft_vo").resolve("copied")
+      val plan = writesThen(out.toString, Some(cmd.stripMargin))
+      val Left(errs) = PlanParser.validateFile(plan): @unchecked
+      assert(errs.map(_.path) === Seq("commands[1]"), name)
+      assert(errs.head.message.contains(token), s"$name: ${errs.head.message}")
+      assert(run(plan) === 2, name)
+      assert(!Files.exists(out), s"$name: the rejected plan wrote $out")
+    }
+  }
 }
