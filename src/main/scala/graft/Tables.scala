@@ -1,12 +1,15 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.FooterParquet
 
 /** Loaders for the driver-generated test tables (see TESTDATA.md).
   *
   * All queries receive a scale-factor directory and read parquet from it.
   * At cluster scale the same API points at object-store paths; the parquet
-  * source gives Catalyst filter pushdown + column pruning for free.
+  * source gives Catalyst filter pushdown + column pruning for free. Every
+  * open goes through [[FooterParquet]], which takes the schema from one
+  * footer read on the driver, so opening a table runs no Spark job.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -33,7 +36,7 @@ object Tables {
       computeHeavy: Boolean = false): DataFrame = {
     val df = normalizeAllTs(
       if (name == "events") loadEvents(spark, dir)
-      else spark.read.parquet(s"$dir/$name.parquet"))
+      else FooterParquet.read(spark, s"$dir/$name.parquet"))
     // The driver test files are SINGLE-row-group parquet, which caps
     // scan parallelism at one task no matter how maxPartitionBytes is
     // set. For documents/embeddings that single task runs the md5
@@ -87,7 +90,7 @@ object Tables {
       }.sum
     } catch {
       case _: Exception =>
-        spark.read.parquet(path).rdd.getNumPartitions
+        FooterParquet.read(spark, path).rdd.getNumPartitions
     }
   }
 
@@ -146,7 +149,7 @@ object Tables {
       df.repartition(target).write.mode("overwrite").parquet(path)
       path
     })
-    spark.read.parquet(out)
+    FooterParquet.read(spark, out)
   }
 
   /** The driver has shipped events.parquet with three different physical
@@ -172,7 +175,7 @@ object Tables {
     */
   private def loadEvents(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$dir/events.parquet")
+    val raw = FooterParquet.read(spark, s"$dir/events.parquet")
     normalizeTs(raw, "ts")
   }
 

@@ -1,7 +1,9 @@
 package graft.engine
 
-import graft.rules.{Profiler, Rule, Sprt}
 import graft.diff.{DiffConfig, DiffSide}
+import graft.operators.Sampling
+import graft.rules.{Fingerprint, Profiler, Rule, Sprt}
+import org.apache.spark.sql.graft.TopK
 
 /** Reference to one input dataset of a command
   * (reference: tnengine/TnCmd.scala + USER_GUIDE "Input").
@@ -136,8 +138,7 @@ case class SampleCommand(
     k: Int,
     seed: String = "sample",
     output: OutputSpec) extends Command {
-  require(k > 0, "sample k must be positive")
-  require(stratumCols.nonEmpty, "sample needs stratumCols")
+  Sampling.requireSample(stratumCols, k)
   require(idCol.nonEmpty, "sample needs idCol")
 }
 
@@ -176,7 +177,7 @@ case class ChecksumCommand(
     columns: Seq[String],
     expected: Option[String] = None,
     output: OutputSpec) extends Command {
-  require(columns.nonEmpty, "checksum needs columns")
+  Fingerprint.requireColumns(columns)
 }
 
 /** Sequential (SPRT) defect-rate gate as a plan step
@@ -213,7 +214,7 @@ case class TopNCommand(
     k: Int,
     descending: Boolean = true,
     output: OutputSpec) extends Command {
-  require(k > 0, "topn k must be positive")
+  TopK.requireK(k)
   require(keyCols.nonEmpty, "topn needs keyCols")
   require(orderCol.nonEmpty, "topn needs orderCol")
   require(tiebreakCol.nonEmpty, "topn needs tiebreakCol")

@@ -3,10 +3,12 @@ package graft.engine
 import graft.diff.DatasetDiff
 import graft.rules.{RuleReport, RuleRunner}
 import graft.views.ViewCreator
-import java.util.concurrent.{Callable, Executors}
+import java.util.concurrent.{Callable, ExecutorService, Executors}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions.input_file_name
+import org.apache.spark.sql.graft.FooterParquet
 import scala.collection.mutable
 import scala.util.Try
 import scala.util.control.NonFatal
@@ -32,16 +34,22 @@ case class PlanResult(
   *    reports, diff key validation, the drift, checksum, SPRT and schema
   *    gates — on up to `defaultParallelism` threads, since a gate over a
   *    small input is one task and would leave the other slots idle.
-  *    Then it writes the `outputPath` of every command before the first
-  *    gate that threw, in plan order, and of that command too when it is
-  *    a schema, checksum, drift or SPRT command (those write their
-  *    output before their gate runs).
+  *    Then it writes, on the same threads and all at once, the
+  *    `outputPath` of every command before the first gate that threw,
+  *    and of that command too when it is a schema, checksum, drift or
+  *    SPRT command (those write their output before their gate runs).
   * Reports, exit code, the raised exception and the written outputs
-  * are those of running the commands one after another. A command that
-  * reads a path an earlier command writes is built after that write.
-  * Two things differ when a gate throws: the gates of later commands
-  * still run (their results are dropped), and later commands have
-  * already registered their lookup key, `cache` and temp view.
+  * are those of running the commands one after another: the exception
+  * raised is the first that run would meet, in plan order. A command
+  * that reads a path an earlier command writes is built after that
+  * write, and a command whose `outputPath` holds or lies under what an
+  * earlier command writes or reads (any file its output frame scans)
+  * is built after that command's pass, so two writes of one pass never
+  * touch each other's data. Three things differ when something throws:
+  * when a gate throws, the gates of later commands still run (their
+  * results are dropped), and later commands have already registered
+  * their lookup key, `cache` and temp view; when a write throws, the
+  * writes of later commands in the same pass may have completed.
   *
   * Spark-first notes:
   *  - outputs stay lazy logical plans unless `cache` is set — a view
@@ -116,7 +124,7 @@ class PlanRunner(spark: SparkSession, reportWriter: Option[ReportWriter] = None)
       case Some("wholetext") =>
         spark.read.option("wholetext", "true").text(input.ref)
           .withColumn("path", input_file_name())
-      case _ => spark.read.parquet(input.ref)
+      case _ => FooterParquet.read(spark, input.ref)
     }
 
   def run(plan: Plan, reportKey: String = "plan"): PlanResult = {
@@ -148,15 +156,24 @@ class PlanRunner(spark: SparkSession, reportWriter: Option[ReportWriter] = None)
     // read after that write: the pending steps run first.
     def read(input: InputRef): DataFrame = {
       if (input.onDisk &&
-          steps.exists(_.write.exists { case (p, _) => overlaps(p, input.ref) }))
+          steps.exists(_.write.exists(w => overlaps(w.path, input.ref))))
         flush()
       resolve(input)
     }
+    // A write that may touch what a pending write writes or reads runs
+    // in a later pass than it: one pass runs its writes at once.
+    def add(c: Command, out: DataFrame, gate: Option[() => Gated],
+        writeFirst: Boolean): Unit = {
+      if (c.outputPath.exists(p => steps.exists(_.write.exists(w =>
+          (w.path +: w.reads).exists(overlaps(p, _))))))
+        flush()
+      steps += step(c, out, gate, writeFirst)
+    }
     def gated(c: Command, out: DataFrame, writeFirst: Boolean = false)(
         gate: => Gated): Unit =
-      steps += step(c, out, Some(() => gate), writeFirst)
+      add(c, out, Some(() => gate), writeFirst)
     def plain(c: Command, out: DataFrame): Unit =
-      steps += step(c, out, None, writeFirst = false)
+      add(c, out, None, writeFirst = false)
     cmds.foreach {
       case c: AssertionCommand =>
         val input = read(c.input)
@@ -282,7 +299,7 @@ class PlanRunner(spark: SparkSession, reportWriter: Option[ReportWriter] = None)
     val out = if (cmd.cache) df.cache() else df
     lookup.put(cmd.outputKey, out)
     cmd.tableName.foreach(out.createOrReplaceTempView)
-    Step(gate, cmd.outputPath.map(p => p -> out), writeFirst)
+    Step(gate, cmd.outputPath.map(Write(_, out)), writeFirst)
   }
 
   /** Whether reading `ref` may see what writing `path` produces: one
@@ -306,41 +323,60 @@ private final case class Gated(reports: Seq[(String, Seq[RuleReport])],
   * its `outputPath` write, and whether a one-after-another run writes
   * before the gate runs. */
 private final case class Step(gate: Option[() => Gated],
-    write: Option[(String, DataFrame)], writeFirst: Boolean)
+    write: Option[Write], writeFirst: Boolean)
+
+/** An `outputPath` write of `out` to `path`. */
+private final case class Write(path: String, out: DataFrame) {
+  /** The paths the write reads: the root of every file relation in
+    * `out`'s plan, subqueries included. */
+  lazy val reads: Seq[String] =
+    out.queryExecution.analyzed.collectWithSubqueries {
+      case LogicalRelation(r: HadoopFsRelation, _, _, _, _) =>
+        r.location.rootPaths.map(_.toString)
+    }.flatten
+
+  def run(): Unit = out.write.mode(SaveMode.Overwrite).parquet(path)
+}
 
 private object GatePass {
-  /** The gate pass over `steps`: every gate, on up to
-    * `defaultParallelism` threads, then the writes a one-after-another
-    * run makes before the first gate that throws, in order; that gate's
-    * exception is rethrown. Appends the gates' reports in step order and
-    * returns their failure count. */
+  /** The gate pass over `steps`: every gate, then the writes a
+    * one-after-another run makes before the first gate that throws,
+    * each group at once on up to `defaultParallelism` threads. Raises
+    * the first exception that run would meet: a write-first step's
+    * write before its gate, else its gate first. Appends the gates'
+    * reports in step order and returns their failure count. */
   def run(spark: SparkSession, steps: Seq[Step],
       reports: mutable.Buffer[(String, Seq[RuleReport])]): Int = {
-    val gates = steps.zipWithIndex.collect { case (Step(Some(g), _, _), i) => (g, i) }
-    val threads = math.max(1,
-      math.min(gates.size, spark.sparkContext.defaultParallelism))
+    val gates = steps.zipWithIndex.collect { case (Step(Some(g), _, _), i) => i -> g }
+    val threads = math.max(1, math.min(
+      math.max(gates.size, steps.count(_.write.isDefined)),
+      spark.sparkContext.defaultParallelism))
     val pool = Executors.newFixedThreadPool(threads, (r: Runnable) => {
       val t = new Thread(r, "graft-gate")
       t.setDaemon(true)
       t
     })
-    val outcomes: Map[Int, Try[Gated]] =
-      try gates.map { case (g, i) =>
-          i -> pool.submit(new Callable[Try[Gated]] {
-            def call(): Try[Gated] = Try(g())
-          })
-        }.map { case (i, f) => i -> f.get() }.toMap
-      finally pool.shutdown()
-    val stop = gates.collectFirst { case (_, i) if outcomes(i).isFailure => i }
-      .getOrElse(steps.size)
-    steps.zipWithIndex.foreach { case (s, i) =>
-      if (i < stop || (i == stop && s.writeFirst)) s.write.foreach {
-        case (p, out) => out.write.mode(SaveMode.Overwrite).parquet(p)
-      }
-    }
-    // In step order, so `get` rethrows the first gate's exception.
-    val gated = gates.map { case (_, i) => outcomes(i).get }
-    gated.foreach(g => reports ++= g.reports)
-    gated.map(_.failures).sum
+    try {
+      val gated = all(pool, gates)
+      val stop = gates.collectFirst { case (i, _) if gated(i).isFailure => i }
+        .getOrElse(steps.size)
+      val written = all(pool, steps.zipWithIndex.collect {
+        case (Step(_, Some(w), first), i) if i < stop || (i == stop && first) =>
+          i -> (() => w.run())
+      })
+      for ((s, i) <- steps.zipWithIndex;
+           done <- if (s.writeFirst) Seq(written, gated) else Seq(gated, written))
+        done.get(i).foreach(_.get)
+      val passed = gates.map { case (i, _) => gated(i).get }
+      passed.foreach(g => reports ++= g.reports)
+      passed.map(_.failures).sum
+    } finally pool.shutdown()
   }
+
+  /** Runs every piece of `work` on `pool` and waits for all of them. */
+  private def all[T](pool: ExecutorService,
+      work: Seq[(Int, () => T)]): Map[Int, Try[T]] =
+    work.map { case (i, w) =>
+      i -> pool.submit(new Callable[Try[T]] { def call(): Try[T] = Try(w()) })
+    }.map { case (i, f) => i -> f.get() }.toMap
 }

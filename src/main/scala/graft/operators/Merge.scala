@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.FooterParquet
 
 import graft.sources.Layout
 
@@ -48,7 +49,7 @@ object Merge {
     // metadata (a day's CDC feed names a handful of partitions).
     val parts = updates.select(col(partCol)).distinct()
       .collect().map(_.get(0)).toSeq
-    val existing = spark.read.parquet(targetPath)
+    val existing = FooterParquet.read(spark, targetPath)
       .where(col(partCol).isin(parts: _*))
       .select(dataCols.map(col): _*)
     val merged = resolve(existing, updates, keys, orderCol, deleteCol)

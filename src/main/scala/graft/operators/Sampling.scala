@@ -14,6 +14,13 @@ import graft.functions.Portable.md5Hash32
   */
 object Sampling {
 
+  /** The parameter checks of [[stratifiedTopK]], as the plan's sample
+    * command states them. */
+  def requireSample(stratumCols: Seq[String], k: Int): Unit = {
+    require(stratumCols.nonEmpty, "sample needs stratumCols")
+    require(k > 0, s"sample k must be positive, got $k")
+  }
+
   /** Stratified cap: keep at most `k` rows per stratum, chosen by
     * seeded-md5 order, with the selection rank exposed as `sample_rank`
     * (1-based, dense within each stratum).
@@ -29,8 +36,8 @@ object Sampling {
     */
   def stratifiedTopK(df: DataFrame, stratumCols: Seq[String], idCol: String,
       k: Int, seed: String = "sample", salts: Int = 1): DataFrame = {
-    require(stratumCols.nonEmpty, "stratifiedTopK needs stratum columns")
-    require(k > 0 && salts > 0, "k and salts must be positive")
+    requireSample(stratumCols, k)
+    require(salts > 0, s"sample salts must be positive, got $salts")
     val key = md5(concat_ws(":", lit(seed), col(idCol)))
     val pruned =
       if (salts > 1) {

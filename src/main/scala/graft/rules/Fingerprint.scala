@@ -26,10 +26,15 @@ import org.apache.spark.sql.functions._
   */
 object Fingerprint {
 
+  /** The check of [[of]]'s columns, as the plan's checksum command
+    * states it. */
+  def requireColumns(columns: Seq[String]): Unit =
+    require(columns.nonEmpty, "checksum needs columns")
+
   /** One-row frame: (n_rows BIGINT, checksum STRING) over `columns`
     * of `df`, in the given column order. */
   def of(df: DataFrame, columns: Seq[String]): DataFrame = {
-    require(columns.nonEmpty, "checksum needs at least one column")
+    requireColumns(columns)
     val canon = concat_ws("|", columns.map(c => col(c).cast("string")): _*)
     df.select(graft.functions.Portable.md5Hash32(canon).as("__h"))
       .agg(count(lit(1)).as("n_rows"),

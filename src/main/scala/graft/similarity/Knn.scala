@@ -275,8 +275,10 @@ object Knn {
     val cents = trainCentroids(corpus, vecCol, idCol, numCentroids, iters)
     val c = withNorm(corpusVecs(corpus, vecCol, idCol)
       .withColumn("bucket", nearestCentroid(col("c_vec"), cents)), "c_vec", "c_norm")
-    val q = withNorm(probeRows(queries, vecCol, idCol, cents, nprobe),
-      "q_vec", "q_norm")
+    // The norm is taken per query, before the probe explode repeats the
+    // query row once per probed bucket.
+    val q = probeRows(withNorm(queryVecs(queries, vecCol, idCol), "q_vec", "q_norm"),
+      cents, nprobe)
     topK(c.join(broadcast(q), Seq("bucket")).where(col("q_id") =!= col("neighbor_id"))
       .select(col("q_id"), col("neighbor_id"), qcCosine), k, col("cosine").desc)
   }
@@ -287,11 +289,11 @@ object Knn {
   private def requireProbes(k: Int, nprobe: Int): Unit =
     require(k > 0 && nprobe > 0, s"k ($k) and nprobe ($nprobe) must be positive")
 
-  /** One (q_id, q_vec, bucket) row per query and probed bucket. */
-  private def probeRows(queries: DataFrame, vecCol: String, idCol: String,
-      cents: Seq[Seq[Double]], nprobe: Int): DataFrame =
-    queryVecs(queries, vecCol, idCol)
-      .withColumn("bucket", explode(probeCentroids(col("q_vec"), cents, nprobe)))
+  /** One row per [[queryVecs]] row and probed bucket, in `bucket`. */
+  private def probeRows(queryVecs: DataFrame, cents: Seq[Seq[Double]],
+      nprobe: Int): DataFrame =
+    queryVecs.withColumn("bucket",
+      explode(probeCentroids(col("q_vec"), cents, nprobe)))
 
   /** The composed IVF-PQ search — the standard billion-scale ANN
     * layout: the coarse quantizer ([[trainCentroids]]) prunes the
@@ -311,7 +313,7 @@ object Knn {
       .select(col("neighbor_id"),
         nearestCentroid(col("c_vec"), cents).as("bucket"),
         pqEncode(col("c_vec"), codebooks).as("codes"))
-    val q = probeRows(queries, vecCol, idCol, cents, nprobe)
+    val q = probeRows(queryVecs(queries, vecCol, idCol), cents, nprobe)
     topK(c.join(broadcast(q), Seq("bucket")).where(col("q_id") =!= col("neighbor_id"))
       .select(col("q_id"), col("neighbor_id"), adcDistance(codebooks)),
       k, col("approx_d2").asc)

@@ -347,7 +347,7 @@ object EventStreams {
         // would dynamic-overwrite the batch's partitions with
         // batch-only content, silently dropping merged history.
         val hasData = fs.exists(p) && (try {
-          spark.read.parquet(targetPath).schema
+          org.apache.spark.sql.graft.FooterParquet.read(spark, targetPath).schema
           true
         } catch {
           case _: org.apache.spark.sql.AnalysisException => false

@@ -61,7 +61,7 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
   */
 case class TopKPerKeyPlan(keys: Seq[Expression], order: Seq[SortOrder],
     k: Int, child: LogicalPlan) extends UnaryNode {
-  require(k > 0, s"k must be positive, got $k")
+  TopK.requireK(k)
   override def output: Seq[Attribute] = child.output
   override def maxRows: Option[Long] = child.maxRows
   override protected def withNewChildInternal(newChild: LogicalPlan): TopKPerKeyPlan =
@@ -163,6 +163,9 @@ case class TopKPerKeyExec(keys: Seq[Expression], order: Seq[SortOrder],
 }
 
 object TopK {
+  /** The check of `k`, as the plan's topn command states it. */
+  def requireK(k: Int): Unit = require(k > 0, s"topn k must be positive, got $k")
+
   /** Retain per key the k rows that sort first under `orderBy` (append
     * a unique tie-break column for a deterministic result, exactly as a
     * `row_number` window needs). Installs [[TopKStrategy]] into the

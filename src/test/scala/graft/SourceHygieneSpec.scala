@@ -7,7 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Keeps one session builder, one SparkListener, one lineage barrier,
   * one bucket-pair generator, one vector norm, one read of a command's
-  * output fields and one plan-document file reader in the program. */
+  * output fields, one plan-document file reader, one `outputPath` write
+  * and job-free parquet opens in the program. */
 class SourceHygieneSpec extends AnyFunSuite {
   private def sources: Seq[Path] = {
     val walk = Files.walk(Paths.get("src/main"))
@@ -59,5 +60,14 @@ class SourceHygieneSpec extends AnyFunSuite {
 
   test("one function reads plan documents from the filesystem") {
     assert(occurrences("Files.readAllBytes(", "engine/PlanParser.scala") === 1)
+  }
+
+  test("tables, plans, merges and the merge sink open parquet without a job") {
+    assert(occurrences("read.parquet(", "Tables.scala", "engine",
+      "operators/Merge.scala", "streaming/EventStreams.scala") === 0)
+  }
+
+  test("the plan runner writes an outputPath in one place") {
+    assert(occurrences(".mode(SaveMode.Overwrite).parquet(", "engine") === 1)
   }
 }

@@ -1,6 +1,7 @@
 package graft.engine
 
 import java.nio.file.{Files, Path}
+import java.util.concurrent.{CountDownLatch, TimeUnit}
 
 import scala.collection.mutable
 
@@ -8,7 +9,7 @@ import org.apache.spark.graft.ListenerBusAccess
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerTaskStart}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, udf}
 import org.apache.spark.sql.graft.FirstRows
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -284,4 +285,106 @@ class GatePassSpec extends SparkSpec {
       }.toSeq == keys)
     }
   }
+
+  /** A view command over lookup key or path `in`, writing `path` unless
+    * it is empty. */
+  private def view(in: String, path: String, onDisk: Boolean = false,
+      key: String = ""): String = {
+    val format = if (onDisk) ", \"format\": \"parquet\"" else ""
+    val outputKey = if (key.isEmpty) path.split('/').last else key
+    val write = if (path.isEmpty) "" else ", \"outputPath\": \"" + path + "\""
+    s"""{"command": "view", "inputs": [{"ref": "$in", "onDisk": $onDisk$format}],
+       | "outputKey": "$outputKey"$write,
+       | "params": {"tableAliases": ["t"], "query": "SELECT * FROM t"}}"""
+      .stripMargin
+  }
+
+  private def ids(path: String): Seq[Long] =
+    spark.read.parquet(path).collect().map(_.getLong(0)).toSeq.sorted
+
+  test("the writes of one pass run at the same time") {
+    GatePassSpec.latch = new CountDownLatch(2)
+    // Each write's one row waits until both writes have started; a
+    // one-after-another run times out on the first and reads false.
+    val met = udf { (_: Long) =>
+      GatePassSpec.latch.countDown()
+      GatePassSpec.latch.await(30, TimeUnit.SECONDS)
+    }.asNondeterministic()
+    val dir = Files.createTempDirectory("graft_gates")
+    val plan = PlanParser.parse(s"""{"commands": [
+      |${view("a", out(dir, "a"))}, ${view("b", out(dir, "b"))}]}""".stripMargin)
+    new PlanRunner(spark)
+      .register("a", spark.range(1).select(met(col("id")).as("met")))
+      .register("b", spark.range(1).select(met(col("id")).as("met")))
+      .run(plan)
+    for (name <- Seq("a", "b"))
+      assert(spark.read.parquet(out(dir, name)).head().getBoolean(0), name)
+  }
+
+  test("two commands writing one path: the later command's rows win") {
+    val dir = Files.createTempDirectory("graft_gates")
+    val plan = PlanParser.parse(s"""{"commands": [
+      |${view("first", out(dir, "o"), key = "one")},
+      |${view("second", out(dir, "o"), key = "two")}]}""".stripMargin)
+    new PlanRunner(spark)
+      .register("first", spark.range(1, 4).toDF())
+      .register("second", spark.range(10, 13).toDF())
+      .run(plan)
+    assert(ids(out(dir, "o")) == Seq(10L, 11L, 12L))
+  }
+
+  test("a write over a path an earlier write reads runs after it") {
+    val dir = Files.createTempDirectory("graft_gates")
+    val (p, q, r) = (out(dir, "p"), out(dir, "q"), out(dir, "r"))
+    spark.range(1, 6).write.parquet(p)
+    // Command 0 reads p and writes q; command 1 overwrites p.
+    val direct = PlanParser.parse(s"""{"commands": [
+      |${view(p, q, onDisk = true, key = "q")},
+      |${view("fresh", p, key = "p")}]}""".stripMargin)
+    new PlanRunner(spark).register("fresh", spark.range(100, 103).toDF())
+      .run(direct)
+    assert(ids(q) == Seq(1L, 2L, 3L, 4L, 5L))
+    assert(ids(p) == Seq(100L, 101L, 102L))
+    // The same through a lookup key built in an earlier pass: the write
+    // of r reads p by way of "old", so the overwrite of p waits for it.
+    val viaKey = PlanParser.parse(s"""{"commands": [
+      |${view(p, "", onDisk = true, key = "old")},
+      |${view("fresh", out(dir, "x"), key = "x")},
+      |${view(out(dir, "x"), "", onDisk = true, key = "xs")},
+      |${view("old", r, key = "r")},
+      |${view("newer", p, key = "p")}]}""".stripMargin)
+    new PlanRunner(spark).register("fresh", spark.range(7, 8).toDF())
+      .register("newer", spark.range(200, 202).toDF()).run(viaKey)
+    assert(ids(r) == Seq(100L, 101L, 102L))
+    assert(ids(p) == Seq(200L, 201L))
+  }
+
+  test("two throwing writes: the earlier command's exception is raised") {
+    val dir = Files.createTempDirectory("graft_gates")
+    // The earlier write fails last: its rows wait before they throw.
+    val slow = udf { (i: Long) =>
+      Thread.sleep(500)
+      if (i >= 0) throw new IllegalStateException("first write failed")
+      i
+    }
+    val plan = PlanParser.parse(s"""{"commands": [
+      |${view("ok", out(dir, "c0"))}, ${view("bad1", out(dir, "c1"))},
+      |${view("bad2", out(dir, "c2"))}]}""".stripMargin)
+    val runner = new PlanRunner(spark)
+      .register("ok", spark.range(3).toDF())
+      .register("bad1", spark.range(1).select(slow(col("id")).as("id")))
+      .register("bad2", spark.range(1)
+        .selectExpr("CASE WHEN id >= 0 THEN raise_error('second write failed') END AS id"))
+    val e = intercept[Exception](runner.run(plan))
+    val messages = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).toSeq
+    assert(messages.exists(_.contains("first write failed")), messages)
+    assert(!messages.exists(_.contains("second write failed")), messages)
+    assert(ids(out(dir, "c0")) == Seq(0L, 1L, 2L))
+  }
+}
+
+object GatePassSpec {
+  /** Shared by the tasks of concurrent writes (one JVM under local[4]). */
+  @volatile var latch = new CountDownLatch(0)
 }

@@ -76,6 +76,27 @@ class KnnSpec extends SparkSpec {
     assert(rows.count() == rows.dropDuplicates("q_id", "neighbor_id").count())
   }
 
+  test("ivfTopK takes each query's norm before the probe explode") {
+    import org.apache.spark.sql.catalyst.expressions.Sqrt
+    import org.apache.spark.sql.catalyst.plans.logical.{Generate, LogicalPlan}
+    val corpus = vecs(
+      1L -> Seq(10.0, 0.1), 2L -> Seq(10.0, -0.1), 3L -> Seq(10.2, 0.0),
+      4L -> Seq(-10.0, 0.1), 5L -> Seq(-10.0, -0.1), 6L -> Seq(-10.2, 0.0))
+    // Not a local relation, which would fold the norm into its rows.
+    val queries = vecs(1L -> Seq(10.0, 0.1), 4L -> Seq(-10.0, 0.1)).repartition(1)
+    val plan = Knn.ivfTopK(corpus, queries, "embedding", "vec_id",
+      k = 2, numCentroids = 2, nprobe = 2, iters = 3).queryExecution.optimizedPlan
+    def norms(p: LogicalPlan) =
+      p.expressions.flatMap(_.collect { case s: Sqrt => s })
+    val probes = plan.collect { case g: Generate => g }
+    assert(probes.size == 1)
+    // The norm sits below the explode, and no node above it takes one.
+    assert(probes.head.child.collect { case p => norms(p) }.flatten.nonEmpty)
+    assert(plan.collect {
+      case p if p.ne(probes.head) && p.exists(_.eq(probes.head)) => norms(p)
+    }.flatten.isEmpty)
+  }
+
   test("ivfTopK finds exact neighbors when clusters are well separated") {
     // Two tight clusters far apart; with nprobe=1 each query stays in
     // its own cluster and must recover the exact in-cluster ranking.
